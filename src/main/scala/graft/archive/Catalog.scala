@@ -35,6 +35,15 @@ object Catalog {
       .withColumn("fork_hash", Filenames.parseForkHash(col("file")))
   }
 
+  /** Catalog of an Avro archive listing (e.g.
+    * `AvroArchiveSource.listAvroFiles`): the parsed name columns of every
+    * file whose name carries a known kind; foreign files drop out.
+    */
+  def ofAvroFiles(spark: SparkSession, files: Seq[String]): DataFrame = {
+    import spark.implicits._
+    withParsedNames(files.toDF("path")).filter(col("kind").isNotNull)
+  }
+
   /** Files whose range intersects [s, e] — the reference's offset listing
     * + early exit (objects.rs:112-167) is Catalyst partition pruning here.
     */

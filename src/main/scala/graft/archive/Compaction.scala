@@ -108,7 +108,9 @@ object Compaction {
     * deleted — write-new-then-delete-old, never overwriting an existing
     * range file. Forked singles (hash-named, several at one height) are
     * left alone — verify settles forks first, compact only merges settled
-    * heights. Returns per-(kind, chunk) verdicts and deleted files.
+    * heights. A txes/traces chunk is complete when its settled singles
+    * cover every height of the chunk, however many rows each holds.
+    * Returns per-(kind, chunk) verdicts and deleted files.
     */
   def compactAvro(
       spark: SparkSession,
@@ -119,9 +121,7 @@ object Compaction {
     import graft.sources.{AvroArchiveSink, AvroArchiveSource}
     // chunkSize 1 would name a "range" with its source single's own path
     require(chunkSize > 1, "compactAvro needs chunkSize > 1")
-    val catalog = Catalog.withParsedNames(
-        AvroArchiveSource.listAvroFiles(spark, archiveDir).toDF("path"))
-      .filter(col("kind").isNotNull)
+    val catalog = Catalog.ofAvroFiles(spark, AvroArchiveSource.listAvroFiles(spark, archiveDir))
       .cache()
     // settled singles only: exactly one file at the height for the kind
     val singleCounts = catalog
@@ -148,9 +148,13 @@ object Compaction {
       val rows = AvroArchiveSource.readArchiveFilesWithPath(spark, files, kind)
         .withColumn("chunk", floor(col("height") / chunkSize).cast("long"))
         .cache()
-      // localCheckpoint (eager): the verdicts must outlive the source
-      // files this run is about to delete — a lazy plan would re-scan them
-      val verdicts = validateChunks(rows, "height", chunkSize)
+      // a blocks chunk is judged by its rows (one block per height); txes
+      // and traces carry any number of rows per height, so their chunks
+      // are judged by the distinct heights they cover. localCheckpoint
+      // (eager): the verdicts must outlive the source files this run is
+      // about to delete — a lazy plan would re-scan them
+      val covered = if (kind == "blocks") rows else rows.select("height").distinct()
+      val verdicts = validateChunks(covered, "height", chunkSize)
         .withColumn("kind", lit(kind))
         .localCheckpoint()
       val toWrite = verdicts.filter(col("complete")).select("chunk")

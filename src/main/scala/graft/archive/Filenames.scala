@@ -96,9 +96,36 @@ object Filenames {
   // Parsers (filenames.rs:8-9,29-49): regexes over the basename, matching
   // the reference exactly — variable-width heights (padding overflows 9
   // digits past 1e9), a 64-hex fork hash, and an optional codec segment
-  // (`<h>.<kind>.gz.avro` etc.).
+  // (`<h>.<kind>.gz.avro` etc.). The column parsers and their plain-Scala
+  // twins below share these two patterns.
   private val SingleRe = "^(\\d+)(?:\\.([0-9a-f]{64}))?\\.(\\w+)(?:\\.\\w+)?\\.avro$"
   private val RangeRe = "^range-(\\d+)_(\\d+)\\.(\\w+)(?:\\.\\w+)?\\.avro$"
+  private val SingleR = SingleRe.r
+  private val RangeR = RangeRe.r
+
+  /** The last path segment — the part of a path the parsers read. */
+  def baseName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+
+  /** Plain-Scala [[parseKind]] of a path's basename, for catalog-sized
+    * driver listings; None where the column parser yields null.
+    */
+  def parseKindS(path: String): Option[String] = {
+    val raw = baseName(path) match {
+      case SingleR(_, _, k) => Some(k)
+      case RangeR(_, _, k)  => Some(k)
+      case _                => None
+    }
+    raw.flatMap(k => scala.util.Try(normalizeKind(k)).toOption)
+  }
+
+  /** Plain-Scala [[parseStart]]/[[parseEnd]]: the height range a path's
+    * basename covers.
+    */
+  def parseRangeS(path: String): Option[(Long, Long)] = baseName(path) match {
+    case SingleR(h, _, _) => Some((h.toLong, h.toLong))
+    case RangeR(s, e, _)  => Some((s.toLong, e.toLong))
+    case _                => None
+  }
 
   def isRange(file: Column): Column = file.rlike("^range-")
 

@@ -23,13 +23,6 @@ object Sinks {
       .option("compression", codec)
       .parquet(path)
 
-  /** `create(…, overwrite=false)` → None when target exists (reference:
-    * src/storage/objects.rs:46-55, fs.rs:33-39): SaveMode.Ignore is the
-    * idempotent-restart write used by `stream` and `fix`.
-    */
-  def writeIfAbsent(df: DataFrame, path: String, codec: String = "zstd"): Unit =
-    writeArchive(df, path, codec, overwrite = false)
-
   /** One JSON notification line per written file (reference:
     * src/notify/mod.rs:12-62 — ts, blockchain, type, run, maturity, height
     * range, location). Deterministic string build, no engine-specific JSON

@@ -2,8 +2,9 @@ package graft.commands
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.archive.{Compaction, Filenames, Sinks}
+import graft.archive.{Catalog, Compaction, Filenames, Sinks}
 import graft.functions.{BlockLink, ChainSequenceAggregator}
+import graft.sources.{AvroArchiveSink, AvroArchiveSource}
 import graft.streaming.Streams
 
 /** The reference's five CLI commands (README.adoc:107-155, src/args.rs:165-173)
@@ -157,18 +158,17 @@ object Commands {
       chunkSize: Long = 1000L,
       kind: String = "blocks",
       opts: RunOptions = RunOptions()): Long = {
-    import spark.implicits._
     if (opts.dryRun) return 0L
     val slice = records.filter(col("height").between(startH, endH))
       .withColumn("chunk", floor(col("height") / chunkSize).cast("long"))
-    val n = graft.sources.AvroArchiveSink.writeChunked(slice, kind, archiveDir, "chunk")
+    val n = AvroArchiveSink.writeChunked(slice, kind, archiveDir, "chunk")
     opts.notifyDir.foreach { nd =>
       // one line per archive file now covering the range — the filename IS
       // the metadata, so the catalog provides every notification field
-      val files = graft.archive.Catalog.withParsedNames(
-          graft.sources.AvroArchiveSource.listAvroFiles(spark, archiveDir).toDF("path"))
-        .filter(col("kind") === graft.archive.Filenames.normalizeKind(kind))
-        .filter(col("start_h") <= endH && col("end_h") >= startH)
+      val files = Catalog.intersecting(
+          Catalog.ofAvroFiles(spark, AvroArchiveSource.listAvroFiles(spark, archiveDir)),
+          startH, endH)
+        .filter(col("kind") === Filenames.normalizeKind(kind))
       Sinks.notificationLinesFull(files, opts.blockchain, "archive",
         opts.maturity, opts.notifyTsIso)
         .coalesce(1)
@@ -208,7 +208,7 @@ object Commands {
         lit(0).as("unclesCount"),
         lit(null).cast("binary").as("uncle0Json"),
         lit(null).cast("binary").as("uncle1Json"))
-      graft.sources.AvroArchiveSink.writeSingles(
+      AvroArchiveSink.writeSingles(
         records, "blocks", archiveDir, forkHashCol = Some("blockId"))
       // per-kind companion files, like the reference's per-height tx ∥
       // trace archival after the block lands (archiver.rs:137-154 runs
@@ -221,7 +221,7 @@ object Commands {
         src.foreach { raw =>
           val companions =
             raw.join(broadcast(batchKeys), Seq("height", "blockId"), "left_semi")
-          graft.sources.AvroArchiveSink.writeSingles(
+          AvroArchiveSink.writeSingles(
             companions, kind, archiveDir, forkHashCol = Some("blockId"))
         }
       }
@@ -333,15 +333,13 @@ object Commands {
       startH: Long, endH: Long,
       opts: RunOptions = RunOptions(),
       forkHashCol: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(rawByKind.nonEmpty, "fixAvro needs at least one raw source")
-    val catalog = graft.archive.Catalog.withParsedNames(
-        graft.sources.AvroArchiveSource.listAvroFiles(spark, archiveDir).toDF("path"))
-      .filter(col("kind").isNotNull)
-      .filter(col("start_h") <= endH && col("end_h") >= startH)
+    val catalog = Catalog.intersecting(
+        Catalog.ofAvroFiles(spark, AvroArchiveSource.listAvroFiles(spark, archiveDir)),
+        startH, endH)
       .cache()
     val missingByKind = rawByKind.keys.toSeq.sorted.map { kind0 =>
-      val kind = graft.archive.Filenames.normalizeKind(kind0)
+      val kind = Filenames.normalizeKind(kind0)
       val covered = catalog.filter(col("kind") === kind)
         .select(explode(sequence(col("start_h"), col("end_h"))).as("height"))
         .distinct()
@@ -349,7 +347,7 @@ object Commands {
         .join(covered, Seq("height"), "left_anti")
       if (!opts.dryRun) {
         val refetch = rawByKind(kind0).join(missing, Seq("height"), "left_semi")
-        graft.sources.AvroArchiveSink.writeSingles(refetch, kind, archiveDir,
+        AvroArchiveSink.writeSingles(refetch, kind, archiveDir,
           forkHashCol = forkHashCol)
       }
       missing.select(lit(kind).as("kind"), col("height"))
@@ -389,10 +387,9 @@ object Commands {
       tailN: Long,
       canonical: DataFrame,
       opts: VerifyFull.Options = VerifyFull.Options()): VerifyFull.Report = {
-    val files = graft.sources.AvroArchiveSource.listAvroFiles(spark, archiveDir)
+    val files = AvroArchiveSource.listAvroFiles(spark, archiveDir)
     val head = files.iterator
-      .map(p => p.substring(p.lastIndexOf('/') + 1))
-      .flatMap(graft.sources.AvroArchiveSource.parseRangeS)
+      .flatMap(Filenames.parseRangeS)
       .map(_._2)
       .foldLeft(-1L)(math.max)
     if (head < 0)
@@ -429,7 +426,7 @@ object Commands {
         // the reference's own on-disk format at any L1/(L2) nesting level,
         // via the recursive lister (flat globs would miss the tree, and
         // binaryFiles fails outright on a matchless glob)
-        graft.sources.AvroArchiveSource.readArchive(spark, archiveDir, "blocks")
+        AvroArchiveSource.readArchive(spark, archiveDir, "blocks")
       case other => throw new IllegalArgumentException(s"format: $other")
     }
     val dupHeights = blocks.groupBy("height").count().filter(col("count") > 1).count()

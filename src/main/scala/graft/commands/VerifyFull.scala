@@ -70,9 +70,7 @@ object VerifyFull {
     val allFiles = knownFiles.getOrElse(AvroArchiveSource.listAvroFiles(spark, archiveDir))
     // the catalog derives from a driver-local listing (a LocalRelation):
     // re-reading it re-parses strings, never storage — no cache
-    val catalog = Catalog.withParsedNames(allFiles.toDF("path"))
-      .filter(col("kind").isNotNull)
-      .filter(col("start_h") <= endH && col("end_h") >= startH)
+    val catalog = Catalog.intersecting(Catalog.ofAvroFiles(spark, allFiles), startH, endH)
       .withColumn("fh", coalesce(col("fork_hash"), lit("")))
       .select("path", "kind", "start_h", "end_h", "fh")
 

@@ -1,16 +1,24 @@
 package graft.sources
 
+import java.io.OutputStream
 import java.nio.ByteBuffer
 import java.util.UUID
 
-import org.apache.avro.{Schema, SchemaBuilder}
+import scala.jdk.CollectionConverters._
+
+import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.avro.util.Utf8
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+
+import graft.archive.Filenames
 
 /** Writer for the reference's Avro object-container archive format
   * (reference: src/storage/fs.rs:135-219; codecs snappy | zstd(9),
@@ -19,20 +27,24 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The Avro schema is DERIVED from the engine's static StructTypes
   * (graft.model.Schemas) — same field names/types the reference embeds.
-  * One container file per Spark partition; callers control file count via
-  * repartition (e.g. one partition per 1000-block chunk = the reference's
-  * range files).
-  *
   * ALL IO goes through `org.apache.hadoop.fs.FileSystem`, resolved from
   * the output path's scheme — local paths, HDFS and object stores (the
   * reference's S3 backend, src/storage/objects.rs:170-330) take the same
-  * code path. The never-overwrite protocol is: write the container to a
-  * hidden temp object, then claim the final name
-  * (`create(target, overwrite=false)` IS the claim on HDFS — the namenode
-  * serializes it; on `file://` the claim drops to a java.nio O_EXCL create
-  * because Hadoop's local create is check-then-act), then swap the claimed
-  * marker for the data in ONE atomic rename. A crashed task can only ever
-  * leave a hidden temp orphan, never a partial file under a final name.
+  * code path.
+  *
+  * Commit protocol, shared by [[write]], [[writeSingles]], [[writeChunked]]
+  * and the V2 connector's write side:
+  *   1. rows stream into a hidden temp container ([[TempContainer]]),
+  *      written without a checksum sidecar, so a rename moves everything
+  *      the write left behind;
+  *   2. the closed container's height range names it ([[targetName]]) —
+  *      the filename IS the metadata (src/archiver/filenames.rs:51-83);
+  *   3. [[commit]] claims the final name and swaps the temp onto the claim
+  *      in ONE atomic rename. A name that is already taken keeps its file
+  *      (the reference's never-overwrite `create`, src/storage/fs.rs:33-39):
+  *      the temp is deleted, and the write either skips it or fails.
+  * A crashed task can only ever leave a hidden temp orphan, never a
+  * partial file under a final name.
   *
   * Atomicity caveat, scoped honestly: the claim is atomic on HDFS and
   * `file://` only. On S3A, `create(overwrite=false)` is itself
@@ -59,8 +71,7 @@ object AvroArchiveSink {
         case BinaryType    => Schema.create(Schema.Type.BYTES)
         case DoubleType    => Schema.create(Schema.Type.DOUBLE)
         case TimestampType | TimestampNTZType =>
-          val s = Schema.create(Schema.Type.LONG)
-          org.apache.avro.LogicalTypes.timestampMillis().addToSchema(s)
+          LogicalTypes.timestampMillis().addToSchema(Schema.create(Schema.Type.LONG))
         case other => throw new IllegalArgumentException(s"unsupported: $other")
       }
       fields =
@@ -74,7 +85,7 @@ object AvroArchiveSink {
     fields.endRecord()
   }
 
-  private def mkCodec(codec: String): CodecFactory = codec match {
+  private def codecFactory(codec: String): CodecFactory = codec match {
     case "snappy"  => CodecFactory.snappyCodec()
     case "zstd"    => CodecFactory.zstandardCodec(9)
     case "deflate" => CodecFactory.deflateCodec(6)
@@ -82,9 +93,99 @@ object AvroArchiveSink {
     case other     => throw new IllegalArgumentException(s"codec: $other")
   }
 
+  /** Catalyst value → Avro datum for one of [[avroSchema]]'s field types
+    * (timestamps: micros → the schema's millis, floored).
+    */
+  private def toAvro(row: InternalRow, i: Int, dt: DataType): AnyRef =
+    if (row.isNullAt(i)) null
+    else dt match {
+      case StringType  => new Utf8(row.getUTF8String(i).getBytes)
+      case LongType    => java.lang.Long.valueOf(row.getLong(i))
+      case IntegerType => java.lang.Integer.valueOf(row.getInt(i))
+      case DoubleType  => java.lang.Double.valueOf(row.getDouble(i))
+      case BinaryType  => ByteBuffer.wrap(row.getBinary(i))
+      case TimestampType | TimestampNTZType =>
+        java.lang.Long.valueOf(Math.floorDiv(row.getLong(i), 1000L))
+      case other => throw new IllegalArgumentException(s"unsupported: $other")
+    }
+
+  /** A hidden temp container under `dir` being filled with rows of
+    * `rowSchema`. Record fields are taken by name, so row columns the Avro
+    * schema lacks (split keys) stay out of the file. Tracks the row count
+    * and the min/max of the `heightIdx` column (-1: no height).
+    */
+  private[sources] final class TempContainer(fs: FileSystem, dir: String,
+      rowSchema: StructType, avro: Schema, codec: String, heightIdx: Int) {
+    val path = new Path(dir, s".graft-tmp-${UUID.randomUUID()}")
+    var n = 0L
+    var minH = Long.MaxValue
+    var maxH = Long.MinValue
+    private val slots = avro.getFields.asScala.map { af =>
+      val i = rowSchema.fieldIndex(af.name)
+      (i, rowSchema(i).dataType)
+    }.toArray
+    private val writer = {
+      val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avro))
+      w.setCodec(codecFactory(codec))
+      w.create(avro, createUnchecksummed(fs, path))
+    }
+
+    def append(row: InternalRow): Unit = {
+      val rec = new GenericData.Record(avro)
+      var j = 0
+      while (j < slots.length) {
+        rec.put(j, toAvro(row, slots(j)._1, slots(j)._2))
+        j += 1
+      }
+      if (heightIdx >= 0) {
+        val h = row.getLong(heightIdx)
+        if (h < minH) minH = h
+        if (h > maxH) maxH = h
+      }
+      writer.append(rec)
+      n += 1
+    }
+
+    def close(): Unit = writer.close()
+
+    def discard(): Unit = {
+      try writer.close() catch { case _: Throwable => () }
+      try fs.delete(path, false) catch { case _: Throwable => () }
+    }
+  }
+
+  /** Hadoop's checksummed local FS writes a `.<name>.crc` sidecar next to
+    * every file it creates; the rename in [[commitClaimed]] moves only the
+    * container, so temps are created on the raw FS underneath.
+    */
+  private def createUnchecksummed(fs: FileSystem, p: Path): OutputStream = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem.create(p, true)
+    case _                     => fs.create(p, true)
+  }
+
+  /** Reference kind of an archive table — one with a height column and a
+    * kind alias the reference knows; None routes to flat part-file names.
+    */
+  private[sources] def refKind(kind: String, schema: StructType,
+      heightCol: String): Option[String] =
+    scala.util.Try(Filenames.normalizeKind(kind)).toOption
+      .filter(_ => schema.fieldNames.contains(heightCol))
+
+  /** Relative final name of a closed container: `L1/L2/<h>[.<hash>].<suffix>
+    * .avro` for one height, `L1/range-<min>_<max>.<kind>.avro` otherwise
+    * (filenames.rs:51-83); tables without a reference kind land at flat
+    * `part-<pid>.<kind>.avro`.
+    */
+  private[sources] def targetName(kind: String, ref: Option[String], pid: Int,
+      minH: Long, maxH: Long, fork: Option[String]): String = ref match {
+    case Some(k) if minH == maxH => Filenames.relativeSinglePath(minH, k, fork)
+    case Some(k)                 => Filenames.relativeRangePath(minH, maxH, k)
+    case None                    => f"part-$pid%05d.$kind.avro"
+  }
+
   /** Claim a target path. On HDFS `create(overwrite = false)` is the
     * atomic claim; on object stores it is best-effort check-then-act (see
-    * the class scaladoc caveat — the reference's S3 backend has the same
+    * the object scaladoc caveat — the reference's S3 backend has the same
     * semantics, objects.rs:170-230); on
     * `file://` Hadoop's local create is a non-atomic check-then-act, so
     * the claim drops to java.nio's O_EXCL create. Returns false when the
@@ -122,82 +223,40 @@ object AvroArchiveSink {
         .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
 
-  private def tmpPath(outDir: String): Path =
-    new Path(outDir, s".graft-tmp-${UUID.randomUUID()}")
+  /** Claim `target` and move the closed temp container onto it; true when
+    * it landed. A taken name keeps the existing file and the temp is
+    * deleted — then the call returns false, or throws when `failIfTaken`.
+    */
+  private[sources] def commit(fs: FileSystem, tmp: Path, target: Path,
+      failIfTaken: Boolean): Boolean =
+    if (claimTarget(fs, target)) { commitClaimed(fs, tmp, target); true }
+    else {
+      fs.delete(tmp, false)
+      if (failIfTaken)
+        throw new IllegalStateException(
+          s"archive file exists (never overwritten): $target — partition " +
+            "the input so file ranges don't collide")
+      false
+    }
 
   /** Write `df` as one Avro container file per partition under `outDir`.
     *
     * Archive kinds (blocks/txes/traces aliases) with a `heightCol` column
-    * get the reference's discoverable layout — the filename IS the
-    * metadata (src/archiver/filenames.rs:51-83): each partition lands at
+    * get the reference's discoverable layout: each partition lands at
     * `L1/range-<min>_<max>.<kind>.avro`, or `L1/L2/<h>.<suffix>.avro` when
     * it holds a single height. Callers control file ranges by partitioning
     * (e.g. `repartition(col(chunk))`); partitions must not collide on a
-    * name — an existing target throws (the reference's never-overwrite
-    * `create`, src/storage/fs.rs:33-39). Non-archive tables (no reference
-    * kind) fall back to flat `part-<pid>.<kind>.avro` names.
+    * name — an existing target fails the write. Non-archive tables (no
+    * reference kind) fall back to flat `part-<pid>.<kind>.avro` names.
     *
     * Returns the number of records written.
     */
   def write(df: DataFrame, kind: String, outDir: String,
       codec: String = "snappy", heightCol: String = "height",
-      forkHashCol: Option[String] = None): Long = {
-    val sparkSchema = df.schema
-    val schemaJson = avroSchema(sparkSchema, kind).toString
-    val refKind = scala.util.Try(graft.archive.Filenames.normalizeKind(kind)).toOption
-      .filter(_ => df.columns.contains(heightCol))
-    val hIdx = refKind.map(_ => sparkSchema.fieldIndex(heightCol))
-    // reorg singles carry their block hash in the name (filenames.rs:60-63)
-    val fhIdx = forkHashCol.filter(_ => refKind.isDefined).map(sparkSchema.fieldIndex)
-    val conf = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    new Path(outDir).getFileSystem(conf.value).mkdirs(new Path(outDir))
-    val counts = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val fs = new Path(outDir).getFileSystem(conf.value)
-        val schema = new Schema.Parser().parse(schemaJson)
-        val writer = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](schema))
-        writer.setCodec(mkCodec(codec))
-        // The range is only known once the partition is drained, so write
-        // to a temp name and claim+rename into the final path on close.
-        val file = hIdx match {
-          case Some(_) => tmpPath(outDir)
-          case None    => new Path(outDir, f"part-$pid%05d.$kind.avro")
-        }
-        writer.create(schema, fs.create(file, true))
-        var n = 0L
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var fork: Option[String] = None
-        rows.foreach { row =>
-          hIdx.foreach { i =>
-            val h = row.getLong(i)
-            if (h < mn) mn = h
-            if (h > mx) mx = h
-          }
-          if (n == 0L) fork = fhIdx.flatMap(i => Option(row.getString(i)))
-          writer.append(toRecord(row, sparkSchema, schema))
-          n += 1
-        }
-        writer.close()
-        refKind.foreach { k =>
-          val rel =
-            if (mn == mx) graft.archive.Filenames.relativeSinglePath(mn, k, fork)
-            else graft.archive.Filenames.relativeRangePath(mn, mx, k)
-          val target = new Path(outDir, rel)
-          if (!claimTarget(fs, target))
-            throw new IllegalStateException(
-              s"archive file exists (never overwritten): $target — partition " +
-                "the input so file ranges don't collide")
-          commitClaimed(fs, file, target)
-        }
-        Iterator.single(n)
-      }
-    }
-    counts.sum().toLong
-  }
+      forkHashCol: Option[String] = None): Long =
+    writeSplits(df, kind, outDir, codec, df.schema,
+      refKind(kind, df.schema, heightCol), heightCol, forkHashCol,
+      splitCols = Nil, failIfTaken = true)
 
   /** Write one single-height container PER HEIGHT (the stream command's
     * file shape: one `L1/L2/<h>[.<hash>].<suffix>.avro` per archived
@@ -212,55 +271,10 @@ object AvroArchiveSink {
   def writeSingles(df: DataFrame, kind: String, outDir: String,
       codec: String = "snappy", heightCol: String = "height",
       forkHashCol: Option[String] = None): Long = {
-    val sparkSchema = df.schema
-    val schemaJson = avroSchema(sparkSchema, kind).toString
-    val k = graft.archive.Filenames.normalizeKind(kind)
-    val hIdx = sparkSchema.fieldIndex(heightCol)
-    val fhIdx = forkHashCol.map(sparkSchema.fieldIndex)
-    val conf = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    new Path(outDir).getFileSystem(conf.value).mkdirs(new Path(outDir))
-    val sortCols = col(heightCol) +: fhIdx.map(_ => col(forkHashCol.get)).toSeq
-    val counts = df
-      .repartition(col(heightCol))
-      .sortWithinPartitions(sortCols: _*)
-      .rdd.mapPartitions { rows =>
-        val fs = new Path(outDir).getFileSystem(conf.value)
-        val schema = new Schema.Parser().parse(schemaJson)
-        var total = 0L
-        var cur: Option[(Long, Option[String])] = None
-        var writer: DataFileWriter[GenericRecord] = null
-        var tmp: Path = null
-        var n = 0L
-        def close(): Unit = cur.foreach { case (h, fork) =>
-          writer.close()
-          val target = new Path(outDir,
-            graft.archive.Filenames.relativeSinglePath(h, k, fork))
-          if (claimTarget(fs, target)) {
-            commitClaimed(fs, tmp, target)
-            total += n
-          } else fs.delete(tmp, false) // keep the existing file
-          cur = None
-        }
-        rows.foreach { row =>
-          val key = (row.getLong(hIdx), fhIdx.flatMap(i => Option(row.getString(i))))
-          if (cur != Some(key)) {
-            close()
-            cur = Some(key)
-            n = 0L
-            tmp = tmpPath(outDir)
-            writer = new DataFileWriter[GenericRecord](
-              new GenericDatumWriter[GenericRecord](schema))
-            writer.setCodec(mkCodec(codec))
-            writer.create(schema, fs.create(tmp, true))
-          }
-          writer.append(toRecord(row, sparkSchema, schema))
-          n += 1
-        }
-        close()
-        Iterator.single(total)
-      }
-    counts.sum().toLong
+    val split = heightCol +: forkHashCol.toSeq
+    writeSplits(df.repartition(col(heightCol)).sortWithinPartitions(split.map(col): _*),
+      kind, outDir, codec, df.schema, Some(Filenames.normalizeKind(kind)),
+      heightCol, forkHashCol, split, failIfTaken = false)
   }
 
   /** One container PER CHUNK (the compact command's range files): rows are
@@ -273,86 +287,66 @@ object AvroArchiveSink {
     */
   def writeChunked(df: DataFrame, kind: String, outDir: String,
       chunkCol: String, codec: String = "zstd",
-      heightCol: String = "height"): Long = {
-    val sparkSchema = df.schema
-    // the chunk key drives file splitting but is NOT part of the record
-    val schemaJson = avroSchema(
-      StructType(sparkSchema.fields.filterNot(_.name == chunkCol)), kind).toString
-    val k = graft.archive.Filenames.normalizeKind(kind)
-    val hIdx = sparkSchema.fieldIndex(heightCol)
-    val cIdx = sparkSchema.fieldIndex(chunkCol)
+      heightCol: String = "height"): Long =
+    writeSplits(
+      df.repartition(col(chunkCol)).sortWithinPartitions(col(chunkCol), col(heightCol)),
+      kind, outDir, codec,
+      // the chunk key drives file splitting but is NOT part of the record
+      StructType(df.schema.fields.filterNot(_.name == chunkCol)),
+      Some(Filenames.normalizeKind(kind)), heightCol, None, Seq(chunkCol),
+      failIfTaken = false)
+
+  /** The v1 write loop: every partition's rows, in order, fill temp
+    * containers of `recordSchema`; a new container starts whenever the
+    * `splitCols` values change, and each closed one is committed under its
+    * [[targetName]] (a fork-hash name takes the first row's hash). Returns
+    * the records in containers that landed.
+    */
+  private def writeSplits(df: DataFrame, kind: String, outDir: String,
+      codec: String, recordSchema: StructType, ref: Option[String],
+      heightCol: String, forkHashCol: Option[String], splitCols: Seq[String],
+      failIfTaken: Boolean): Long = {
+    val schema = df.schema
+    val avroJson = avroSchema(recordSchema, kind).toString
+    val hIdx = ref.fold(-1)(_ => schema.fieldIndex(heightCol))
+    val fIdx = forkHashCol.filter(_ => ref.isDefined).fold(-1)(schema.fieldIndex)
+    val keys = splitCols.map(c => (schema.fieldIndex(c), schema(c).dataType)).toArray
     val conf = new SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
     new Path(outDir).getFileSystem(conf.value).mkdirs(new Path(outDir))
-    val counts = df
-      .repartition(col(chunkCol))
-      .sortWithinPartitions(col(chunkCol), col(heightCol))
-      .rdd.mapPartitions { rows =>
-        val fs = new Path(outDir).getFileSystem(conf.value)
-        val schema = new Schema.Parser().parse(schemaJson)
-        var total = 0L
-        var cur: Option[Long] = None
-        var writer: DataFileWriter[GenericRecord] = null
-        var tmp: Path = null
-        var n = 0L
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        def close(): Unit = if (cur.isDefined) {
-          writer.close()
-          val rel =
-            if (mn == mx) graft.archive.Filenames.relativeSinglePath(mn, k)
-            else graft.archive.Filenames.relativeRangePath(mn, mx, k)
-          val target = new Path(outDir, rel)
-          if (claimTarget(fs, target)) {
-            commitClaimed(fs, tmp, target)
-            total += n
-          } else fs.delete(tmp, false) // keep the existing file
-          cur = None
-        }
-        rows.foreach { row =>
-          val chunk = row.getLong(cIdx)
-          if (cur != Some(chunk)) {
-            close()
-            cur = Some(chunk)
-            n = 0L; mn = Long.MaxValue; mx = Long.MinValue
-            tmp = tmpPath(outDir)
-            writer = new DataFileWriter[GenericRecord](
-              new GenericDatumWriter[GenericRecord](schema))
-            writer.setCodec(mkCodec(codec))
-            writer.create(schema, fs.create(tmp, true))
-          }
-          val h = row.getLong(hIdx)
-          if (h < mn) mn = h
-          if (h > mx) mx = h
-          writer.append(toRecord(row, sparkSchema, schema))
-          n += 1
-        }
-        close()
-        Iterator.single(total)
+    // Catalyst rows are reused between calls: keys copy their values out
+    def copied(row: InternalRow, i: Int, dt: DataType): Any =
+      if (row.isNullAt(i)) null
+      else row.get(i, dt) match {
+        case s: UTF8String => s.toString
+        case v             => v
       }
-    counts.sum().toLong
-  }
-
-  private def toRecord(row: Row, st: StructType, schema: Schema): GenericRecord = {
-    val rec = new GenericData.Record(schema)
-    st.fields.zipWithIndex.foreach { case (f, i) =>
-      if (schema.getField(f.name) == null) () // split keys ride outside the record
-      else {
-      val v =
-        if (row.isNullAt(i)) null
-        else f.dataType match {
-          case TimestampType => java.lang.Long.valueOf(
-            row.getAs[java.sql.Timestamp](i).getTime)
-          case TimestampNTZType =>
-            val ldt = row.getAs[java.time.LocalDateTime](i)
-            java.lang.Long.valueOf(
-              ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000L + ldt.getNano / 1000000)
-          case BinaryType    => ByteBuffer.wrap(row.getAs[Array[Byte]](i))
-          case _             => row.get(i)
-        }
-      rec.put(f.name, v)
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val fs = new Path(outDir).getFileSystem(conf.value)
+      val avro = new Schema.Parser().parse(avroJson)
+      var landed = 0L
+      var open: TempContainer = null
+      var key: Seq[Any] = Nil
+      var fork: Option[String] = None
+      def close(): Unit = if (open != null) {
+        open.close()
+        val target = new Path(outDir,
+          targetName(kind, ref, pid, open.minH, open.maxH, fork))
+        if (commit(fs, open.path, target, failIfTaken)) landed += open.n
+        open = null
       }
-    }
-    rec
+      rows.foreach { row =>
+        val k = keys.toSeq.map { case (i, dt) => copied(row, i, dt) }
+        if (open == null || k != key) {
+          close()
+          key = k
+          fork = if (fIdx < 0) None else Option(copied(row, fIdx, StringType)).map(_.toString)
+          open = new TempContainer(fs, outDir, schema, avro, codec, hIdx)
+        }
+        open.append(row)
+      }
+      close()
+      Iterator.single(landed)
+    }.sum().toLong
   }
 }

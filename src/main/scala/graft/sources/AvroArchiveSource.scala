@@ -1,25 +1,33 @@
 package graft.sources
 
+import java.io.{Closeable, InputStream}
 import java.nio.ByteBuffer
 
 import org.apache.avro.file.DataFileStream
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericEnumSymbol, GenericRecord}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.archive.Filenames
 import graft.model.Schemas
 
 /** Reader for the reference's ACTUAL storage format — Avro object-container
   * files (reference writer: src/storage/fs.rs:135-219; reader:
   * src/storage/avro_reader.rs:28-70). The container ships no spark-avro
   * datasource, so this decodes via the core avro jar inside
-  * `binaryFiles` partitions: one archive file per task — the natural unit,
-  * since range files are ≤1000 blocks by construction (chunk size,
-  * src/args.rs:136).
+  * `binaryFiles` partitions, which pack many small containers into one
+  * task.
   *
-  * Records map by FIELD NAME onto the static Spark schemas
-  * (graft.model.Schemas); the reference's readers use the same fixed
-  * schemas, never inference.
+  * Every read — these v1 reads and the V2 connector's partition reader —
+  * goes through one decode loop ([[Decoder]]): records map by FIELD NAME
+  * onto the static Spark schemas (graft.model.Schemas; the reference's
+  * readers use the same fixed schemas, never inference) and become
+  * Catalyst rows directly.
   */
 object AvroArchiveSource {
 
@@ -28,6 +36,10 @@ object AvroArchiveSource {
     */
   def read(spark: SparkSession, pathGlob: String, kind: String): DataFrame =
     read(spark, pathGlob, Schemas.schemaFor(kind))
+
+  /** Read with an explicit pinned schema (arbitrary tables). */
+  def read(spark: SparkSession, pathGlob: String, schema: StructType): DataFrame =
+    decodeFiles(spark, Seq(pathGlob), schema, lenient = false, withPath = false)
 
   /** All `.avro` files under `dir`, at any L1/(L2) nesting level — the
     * recursive walk the reference's listing does (src/storage/fs.rs:62-132).
@@ -59,42 +71,13 @@ object AvroArchiveSource {
 
   /** The subset of `files` whose basename parses to `kind`. */
   def filesOfKind(spark: SparkSession, files: Seq[String], kind: String): Seq[String] = {
-    val want = graft.archive.Filenames.normalizeKind(kind)
-    files.filter { p =>
-      val base = p.substring(p.lastIndexOf('/') + 1)
-      parseKindS(base).contains(want)
-    }
-  }
-
-  private val SingleReS = "^(\\d+)(?:\\.([0-9a-f]{64}))?\\.(\\w+)(?:\\.\\w+)?\\.avro$".r
-  private val RangeReS = "^range-(\\d+)_(\\d+)\\.(\\w+)(?:\\.\\w+)?\\.avro$".r
-
-  /** Plain-Scala twin of Filenames.parseKind for catalog-sized listings. */
-  def parseKindS(base: String): Option[String] = {
-    val raw = base match {
-      case SingleReS(_, _, k) => Some(k)
-      case RangeReS(_, _, k)  => Some(k)
-      case _                  => None
-    }
-    raw.flatMap(k => scala.util.Try(graft.archive.Filenames.normalizeKind(k)).toOption)
-  }
-
-  /** Plain-Scala twin of Filenames.parseStart/End — the covered height
-    * range of an archive filename, for catalog-sized driver listings.
-    */
-  def parseRangeS(base: String): Option[(Long, Long)] = base match {
-    case SingleReS(h, _, _) => Some((h.toLong, h.toLong))
-    case RangeReS(s, e, _)  => Some((s.toLong, e.toLong))
-    case _                  => None
+    val want = Filenames.normalizeKind(kind)
+    files.filter(Filenames.parseKindS(_).contains(want))
   }
 
   /** Read an explicit list of container files (empty-safe). */
-  def readArchiveFiles(spark: SparkSession, files: Seq[String], kind: String): DataFrame = {
-    val schema = Schemas.schemaFor(kind)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else read(spark, files.mkString(","), schema)
-  }
+  def readArchiveFiles(spark: SparkSession, files: Seq[String], kind: String): DataFrame =
+    decodeFiles(spark, files, Schemas.schemaFor(kind), lenient = false, withPath = false)
 
   /** Like [[readArchiveFiles]] but with a `_path` column attributing every
     * record to its source container — the content verifier needs to mark
@@ -111,101 +94,107 @@ object AvroArchiveSource {
     * would mask corruption.
     */
   def readArchiveFilesWithPath(spark: SparkSession, files: Seq[String],
-      kind: String, lenient: Boolean = false): DataFrame = {
-    val schema = Schemas.schemaFor(kind).add(StructField("_path", StringType, nullable = false))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val fields = Schemas.schemaFor(kind).fields
-    val rows = spark.sparkContext
-      .binaryFiles(files.mkString(","))
-      .flatMap { case (path, pds) =>
-        val opened =
-          try {
-            val in = pds.open()
-            Some(new DataFileStream[GenericRecord](
-              in, new GenericDatumReader[GenericRecord]()))
-          } catch { case t: Throwable => if (lenient) None else throw t }
-        opened match {
-          case None => Iterator.empty
-          case Some(reader) =>
-            // lookahead iterator: the decode of record N happens inside
-            // hasNext, so a mid-stream corruption surfaces as end-of-file
-            // (lenient) or a task failure (strict) — never a throw from a
-            // half-consumed next()
-            new Iterator[Row] {
-              private var nextRow: Row = null
-              private var done = false
-              private def advance(): Unit = {
-                if (done || nextRow != null) return
-                try {
-                  if (reader.hasNext)
-                    nextRow = Row.fromSeq(toRow(reader.next(), fields).toSeq :+ path)
-                  else { done = true; reader.close() }
-                } catch {
-                  case t: Throwable =>
-                    done = true
-                    try reader.close() catch { case _: Throwable => () }
-                    if (!lenient) throw t
-                }
-              }
-              def hasNext: Boolean = { advance(); nextRow != null }
-              def next(): Row = {
-                advance()
-                if (nextRow == null) throw new NoSuchElementException
-                val r = nextRow; nextRow = null; r
-              }
-            }
-        }
+      kind: String, lenient: Boolean = false): DataFrame =
+    decodeFiles(spark, files, Schemas.schemaFor(kind), lenient, withPath = true)
+
+  /** Decode `paths` (files or globs) through `binaryFiles`; no paths → an
+    * empty frame.
+    */
+  private def decodeFiles(spark: SparkSession, paths: Seq[String], schema: StructType,
+      lenient: Boolean, withPath: Boolean): DataFrame = {
+    val out =
+      if (withPath) schema.add(StructField("_path", StringType, nullable = false))
+      else schema
+    val fields = schema.fields // serialize the field list, not the StructType
+    val rows =
+      if (paths.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
+      else spark.sparkContext.binaryFiles(paths.mkString(",")).flatMap { case (path, pds) =>
+        new Decoder(() => pds.open(), fields, lenient,
+          if (withPath) UTF8String.fromString(path) else null)
       }
-    spark.createDataFrame(rows, schema)
+    Bridge.dataFrame(spark, rows, out)
   }
 
-  /** Read with an explicit pinned schema (arbitrary tables). */
-  def read(spark: SparkSession, pathGlob: String, schema: StructType): DataFrame = {
-    val fields = schema.fields // serialize field list, not the StructType methods
-    val rows = spark.sparkContext
-      .binaryFiles(pathGlob)
-      .flatMap { case (_, pds) =>
-        val in = pds.open()
-        val reader = new DataFileStream[GenericRecord](
-          in, new GenericDatumReader[GenericRecord]())
-        val it = new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = reader.hasNext
-            if (!h) { reader.close() }
-            h
-          }
-          def next(): Row = toRow(reader.next(), fields)
-        }
-        it
-      }
-    spark.createDataFrame(rows, schema)
-  }
+  /** The decode loop: the records of one container as Catalyst rows of
+    * `fields`, plus a trailing `path` column when one is given. Lookahead —
+    * the container opens and record N decodes inside `hasNext` — so an
+    * unreadable or mid-stream-corrupt container surfaces there, as
+    * end-of-file when `lenient` or as the task's failure otherwise, never
+    * from a half-consumed `next()`.
+    */
+  private[sources] final class Decoder(open: () => InputStream,
+      fields: Array[StructField], lenient: Boolean, path: UTF8String = null)
+      extends Iterator[InternalRow] with Closeable {
+    private var stream: DataFileStream[GenericRecord] = null
+    private var pending: InternalRow = null
+    private var done = false
 
-  private def toRow(rec: GenericRecord, fields: Array[StructField]): Row = {
-    val values = fields.map { f =>
-      val v = if (rec.getSchema.getField(f.name) != null) rec.get(f.name) else null
-      convert(v, f.dataType)
+    private def advance(): Unit = if (!done && pending == null) {
+      try {
+        if (stream == null) {
+          val in = open()
+          stream =
+            try new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
+            catch { case t: Throwable => in.close(); throw t }
+        }
+        if (stream.hasNext) pending = toRow(stream.next())
+        else close()
+      } catch {
+        case t: Throwable =>
+          close()
+          if (!lenient) throw t
+      }
     }
-    Row.fromSeq(values.toIndexedSeq)
+
+    private def toRow(rec: GenericRecord): InternalRow = {
+      val row = new GenericInternalRow(fields.length + (if (path == null) 0 else 1))
+      var i = 0
+      while (i < fields.length) {
+        val slot = rec.getSchema.getField(fields(i).name)
+        row.update(i, toCatalyst(if (slot == null) null else rec.get(slot.pos), fields(i)))
+        i += 1
+      }
+      if (path != null) row.update(fields.length, path)
+      row
+    }
+
+    def hasNext: Boolean = { advance(); pending != null }
+
+    def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = pending
+      pending = null
+      r
+    }
+
+    def close(): Unit = {
+      done = true
+      if (stream != null) try stream.close() catch { case _: Throwable => () }
+    }
   }
 
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _)                      => null
-    case (u: Utf8, StringType)          => u.toString
-    case (s: String, StringType)        => s
-    case (e: org.apache.avro.generic.GenericEnumSymbol[_], StringType) => e.toString
-    case (l: java.lang.Long, TimestampType) => new java.sql.Timestamp(l)
-    case (l: java.lang.Long, TimestampNTZType) =>
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(l, 1000L), Math.floorMod(l, 1000L).toInt * 1000000,
-        java.time.ZoneOffset.UTC)
-    case (l: java.lang.Long, LongType)  => l
-    case (d: java.lang.Double, DoubleType) => d
-    case (i: java.lang.Integer, IntegerType) => i
+  /** Avro runtime value → Catalyst value of field `f` (timestamps: the
+    * sink's timestamp-millis → micros). A field the container lacks reads
+    * null; a null in a non-nullable field, or a value of another type, is a
+    * decode error.
+    */
+  private def toCatalyst(v: Any, f: StructField): Any = (v, f.dataType) match {
+    case (null, _) if f.nullable => null
+    // Utf8's backing array over-allocates; copy exactly byteLength
+    case (u: Utf8, StringType) =>
+      UTF8String.fromBytes(java.util.Arrays.copyOfRange(u.getBytes, 0, u.getByteLength))
+    case (s: CharSequence, StringType)          => UTF8String.fromString(s.toString)
+    case (e: GenericEnumSymbol[_], StringType)  => UTF8String.fromString(e.toString)
+    case (l: java.lang.Long, TimestampType | TimestampNTZType) => l * 1000L
+    case (l: java.lang.Long, LongType)          => l
+    case (d: java.lang.Double, DoubleType)      => d
+    case (i: java.lang.Integer, IntegerType)    => i
     case (b: ByteBuffer, BinaryType) =>
       val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
-    case (a: Array[Byte], BinaryType)   => a
-    case (other, _)                     => other
+    case (a: Array[Byte], BinaryType)           => a
+    case (other, dt) =>
+      throw new IllegalArgumentException(
+        s"avro-archive: cannot read ${Option(other).fold("null")(_.getClass.getName)} " +
+          s"as $dt (field ${f.name})")
   }
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.FormattedMode
 /** Batch plan dumper (not part of the driver contract): writes
   * `explain("formatted")` of every registered op — or the comma-list in
   * arg 2 — to one file per op under the output dir. One JVM for the whole
-  * board (vs one per op with ExplainR5), so a full-board plan snapshot is
-  * minutes, not hours. Used by the round-13 optimization audit to diff
-  * plan shapes (Exchange count, join strategy, PushedFilters) before/after.
+  * board, so a full-board plan snapshot is minutes, not hours — for
+  * diffing plan shapes (Exchange count, join strategy, PushedFilters)
+  * before/after an optimization.
   */
 object ExplainAll {
   def main(args: Array[String]): Unit = {

@@ -106,35 +106,47 @@ class CompactionSpec extends SparkSpec {
     def blockRow(h: Long, hash: String): Row =
       Row("BITCOIN", "BTC", new Timestamp(0L), h, hash, h64(h - 1),
         new Timestamp(h), s"""{"height":$h}""".getBytes("UTF-8"), 0, null, null)
+    // 1–3 txes per height: a txes chunk holds more rows than heights
+    def txRows(h: Long): Seq[Row] = (0 to (h % 3).toInt).map { i =>
+      Row("BITCOIN", "BTC", new Timestamp(0L), h, h64(h), new Timestamp(h),
+        i.toLong, h64(h * 10 + i), s"""{"tx":$i}""".getBytes("UTF-8"),
+        Array[Byte](1), null, null, null)
+    }
     val dir = Files.createTempDirectory("graft-compact-avro").toString
-    // settled singles 0..249 (chunks 0 and 1 complete at size 100; chunk 2
-    // partial) + a FORKED height 260 with two hash-named files
+    // settled singles 0..249 of both kinds (chunks 0 and 1 complete at size
+    // 100; chunk 2 partial) + a FORKED height 260 with two hash-named files
     val settled = spark.createDataFrame(
       spark.sparkContext.parallelize((0L to 249L).map(h => blockRow(h, h64(h))), 8),
       Schemas.block)
     AvroArchiveSink.writeSingles(settled, "blocks", dir)
+    val txes = (0L to 249L).flatMap(txRows)
+    AvroArchiveSink.writeSingles(spark.createDataFrame(
+      spark.sparkContext.parallelize(txes, 8), Schemas.transaction), "txes", dir)
     Seq(h64(8260), h64(9260)).foreach { hash =>
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(blockRow(260L, hash)), 1), Schemas.block)
       AvroArchiveSink.writeSingles(df, "blocks", dir, forkHashCol = Some("blockId"))
     }
-    assert(AvroArchiveSource.listAvroFiles(spark, dir).size === 252)
+    assert(AvroArchiveSource.listAvroFiles(spark, dir).size === 502)
 
     val (verdicts, deleted) = Compaction.compactAvro(spark, dir, chunkSize = 100L)
-    assert(verdicts.filter(col("complete")).count() === 2)
-    assert(deleted.size === 200) // exactly the singles of chunks 0 and 1
+    assert(verdicts.filter(col("complete")).select("kind", "chunk").as[(String, Long)]
+      .collect().sorted.toSeq === Seq(("blocks", 0L), ("blocks", 1L), ("txes", 0L), ("txes", 1L)))
+    assert(deleted.size === 400) // exactly the singles of chunks 0 and 1, per kind
     val files = AvroArchiveSource.listAvroFiles(spark, dir)
       .map(p => p.substring(p.lastIndexOf('/') + 1))
-    assert(files.count(_.startsWith("range-")) === 2)
-    assert(files.contains("range-000000000_000000099.blocks.avro"))
-    assert(files.contains("range-000000100_000000199.blocks.avro"))
-    assert(files.count(f => !f.startsWith("range-")) === 52) // 200..249 + 2 forks
+    assert(files.filter(_.startsWith("range-")).sorted === Seq(
+      "range-000000000_000000099.blocks.avro", "range-000000000_000000099.txes.avro",
+      "range-000000100_000000199.blocks.avro", "range-000000100_000000199.txes.avro"))
+    // 200..249 of each kind + 2 forks
+    assert(files.count(f => !f.startsWith("range-")) === 102)
     // content survives intact through the rewrite
     assert(AvroArchiveSource.readArchive(spark, dir, "blocks").count() === 252L)
+    assert(AvroArchiveSource.readArchive(spark, dir, "txes").count() === txes.size.toLong)
 
     // idempotent re-run: chunks with range files skip, nothing else settles
     val (_, deleted2) = Compaction.compactAvro(spark, dir, chunkSize = 100L)
     assert(deleted2.isEmpty)
-    assert(AvroArchiveSource.listAvroFiles(spark, dir).size === 54)
+    assert(AvroArchiveSource.listAvroFiles(spark, dir).size === 106)
   }
 }

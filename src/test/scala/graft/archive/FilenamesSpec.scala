@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Mirrors the reference's filename round-trip tests
-  * (src/archiver/filenames.rs:222-408).
+  * (src/archiver/filenames.rs:222-408). Every name also goes through the
+  * plain-Scala parsers, which must agree with the column parsers.
   */
 class FilenamesSpec extends SparkSpec {
   import spark.implicits._
@@ -29,6 +30,7 @@ class FilenamesSpec extends SparkSpec {
       // back to the canonical kind (datakind.rs:42)
       assert(r.getString(4) === "blocks")
       assert(r.isNullAt(5), "no fork hash")
+      assertScalaAgrees(r.getString(1), r.getString(4), r.getLong(2), r.getLong(3))
     }
     val p = got.find(_.getLong(0) == 723743L).get.getString(1)
     assert(p === "000000000/000723000/000723743.block.avro")
@@ -49,6 +51,8 @@ class FilenamesSpec extends SparkSpec {
     assert(r.getString(1) === "000000000/range-000723745_000723749.blocks.avro")
     assert(r.getLong(2) === 723745L && r.getLong(3) === 723749L)
     assert(r.getString(4) === "blocks" && r.getBoolean(5))
+    Seq(r.getString(0), r.getString(1)).foreach(
+      assertScalaAgrees(_, r.getString(4), r.getLong(2), r.getLong(3)))
   }
 
   test("forked single carries its 64-hex hash") {
@@ -57,11 +61,14 @@ class FilenamesSpec extends SparkSpec {
     val r = df.select(
         Filenames.parseForkHash(col("file")).as("fh"),
         Filenames.parseKind(col("file")).as("k"),
-        Filenames.parseStart(col("file")).as("s"))
+        Filenames.parseStart(col("file")).as("s"),
+        Filenames.parseEnd(col("file")).as("e"),
+        col("file"))
       .head()
     assert(r.getString(0) === hash64)
     assert(r.getString(1) === "blocks")
     assert(r.getLong(2) === 723743L)
+    assertScalaAgrees(r.getString(4), r.getString(1), r.getLong(2), r.getLong(3))
   }
 
   test("reference-written names parse: aliases, codec segment, wide heights") {
@@ -89,6 +96,7 @@ class FilenamesSpec extends SparkSpec {
       assert(r.getLong(2) === s, f)
       assert(r.getLong(3) === e, f)
       assert(Option(r.getString(4)) === Option(fh), f)
+      assertScalaAgrees(f, r.getString(1), r.getLong(2), r.getLong(3))
     }
   }
 
@@ -96,9 +104,19 @@ class FilenamesSpec extends SparkSpec {
     val df = Seq("000000101.wat.avro", "part-00001.snappy.parquet",
         "000000101.abc123.block.avro", "_SUCCESS")
       .toDF("file")
-      .select(Filenames.parseKind(col("file")).as("k"))
+      .select(Filenames.parseKind(col("file")).as("k"), col("file"))
     // `abc123` is not a 64-hex hash, so that name reads as kind=abc123 →
     // rejected, same as the reference regex
     assert(df.collect().forall(_.isNullAt(0)))
+    df.collect().foreach(r =>
+      assert(Filenames.parseKindS(r.getString(1)) === None, r.getString(1)))
+  }
+
+  /** The plain-Scala parsers read `name` (a basename or a whole path) the
+    * way the column parsers read its basename.
+    */
+  private def assertScalaAgrees(name: String, kind: String, s: Long, e: Long): Unit = {
+    assert(Filenames.parseKindS(name) === Some(kind), name)
+    assert(Filenames.parseRangeS(name) === Some((s, e)), name)
   }
 }

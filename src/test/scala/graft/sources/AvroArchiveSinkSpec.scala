@@ -33,8 +33,7 @@ class AvroArchiveSinkSpec extends SparkSpec {
       assert(files.size === 4)
       assert(files.forall(_.contains("/000000000/range-")), files.mkString(","))
       assert(files.forall(f =>
-        AvroArchiveSource.parseKindS(f.substring(f.lastIndexOf('/') + 1))
-          .contains("blocks")))
+        graft.archive.Filenames.parseKindS(f).contains("blocks")))
       val back = AvroArchiveSource.readArchive(spark, out, "blocks")
       assert(back.count() === 100L)
       val r = back.filter(col("height") === 42L).head()
