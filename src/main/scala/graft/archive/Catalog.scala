@@ -1,5 +1,7 @@
 package graft.archive
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,22 +9,13 @@ import org.apache.spark.sql.functions._
   * `FileReference` (path, kind, range) stream, and the per-level listings
   * in src/storage/objects.rs:79-168 / fs.rs:62-132).
   *
-  * In Spark the catalog is itself a DataFrame; lexicographic-offset listing
-  * and early exit become partition pruning once l1/l2 are partition
+  * The catalog has two forms. Decisions over a listing that is already on
+  * the driver run as plain Scala over [[Entry]] values; the DataFrame form
+  * serves queries and notifications, where lexicographic-offset listing and
+  * early exit become partition pruning once l1/l2 are partition
   * directories (SURVEY.md §4).
   */
 object Catalog {
-
-  /** Catalog of archive files under a partitioned parquet layout: one row
-    * per file with (path, file, kind, start_h, end_h, fork_hash), ordered
-    * by range start like the reference's merged listing stream.
-    */
-  def listFiles(spark: SparkSession, dir: String): DataFrame = {
-    val files = spark.read.parquet(dir)
-      .select(input_file_name().as("path"))
-      .distinct()
-    withParsedNames(files)
-  }
 
   /** Parse catalog columns out of a `path` column. */
   def withParsedNames(files: DataFrame): DataFrame = {
@@ -35,14 +28,32 @@ object Catalog {
       .withColumn("fork_hash", Filenames.parseForkHash(col("file")))
   }
 
-  /** Catalog of an Avro archive listing (e.g.
-    * `AvroArchiveSource.listAvroFiles`): the parsed name columns of every
-    * file whose name carries a known kind; foreign files drop out.
+  /** One archive file as its name describes it (the reference's
+    * `FileReference`): canonical kind, height range and, for a single
+    * written during a reorg, the fork hash.
     */
-  def ofAvroFiles(spark: SparkSession, files: Seq[String]): DataFrame = {
-    import spark.implicits._
-    withParsedNames(files.toDF("path")).filter(col("kind").isNotNull)
+  final case class Entry(path: String, kind: String, start: Long, end: Long,
+      forkHash: Option[String]) {
+    def isSingle: Boolean = start == end
   }
+
+  /** A group's height range and whether it may join a merge batch. */
+  final case class Span(start: Long, end: Long, mergeable: Boolean = true)
+
+  /** The driver-side catalog of a listing: one [[Entry]] per file whose
+    * name carries a known kind and whose range intersects [s, e], in
+    * listing order. Catalog-sized decisions (verify's filename passes,
+    * fix's coverage, compact's selection) run over these as plain Scala.
+    */
+  def entries(files: Seq[String], s: Long = Long.MinValue,
+      e: Long = Long.MaxValue): Seq[Entry] =
+    files.flatMap { p =>
+      for {
+        kind <- Filenames.parseKindS(p)
+        (start, end) <- Filenames.parseRangeS(p)
+        if start <= e && end >= s
+      } yield Entry(p, kind, start, end, Filenames.parseForkHashS(p))
+    }
 
   /** Files whose range intersects [s, e] — the reference's offset listing
     * + early exit (objects.rs:112-167) is Catalyst partition pruning here.
@@ -64,57 +75,62 @@ object Catalog {
       .withColumn("complete",
         col("blocks") >= 1 && col("txes") >= 1)
 
-  /** The standard chunk partition key for catalog windows: ranges never
-    * cross chunk boundaries in the reference layout, so `floor(start_h /
-    * chunkSize)` co-locates exactly the files one reference verify
-    * iteration would see (verify.rs:414 split_chunks).
-    */
-  def chunkKey(chunkSize: Long = 1000L): org.apache.spark.sql.Column =
-    floor(col("start_h") / chunkSize).cast("long")
-
   /** `merge_small` — group adjacent small ranges (≤ `threshold` blocks)
     * into one verification batch so content checks read whole islands
     * instead of per-file (reference: src/command/verify.rs:237-267; the
-    * threshold is 10 there). Large ranges keep their own group; rows
-    * failing `mergeable` keep their own batch even when small (the
-    * reference excludes INCOMPLETE groups from merge batches because they
-    * would break the verified sequence, verify.rs:243-247). Output:
-    * original rows + group_s/group_e of the batch they verify under.
+    * threshold is 10 there). Large ranges keep their own batch, and so do
+    * spans that are not `mergeable` even when small (the reference
+    * excludes INCOMPLETE groups from merge batches because they would
+    * break the verified sequence, verify.rs:243-247). A batch also breaks
+    * where a small span starts past the end of every earlier small span
+    * plus one.
     *
-    * `partitionCols` is REQUIRED and non-empty: the reference verify
-    * processes chunk-by-chunk (`full_range.split_chunks`, verify.rs:414),
-    * so batches never cross chunk boundaries and no window ever sees more
-    * than one chunk's file groups. A bare global `Window.orderBy` over a
-    * catalog-sized input is the single-task funnel this library bans —
-    * pass [[chunkKey]] (or a finer key) instead.
+    * Batches never cross chunk boundaries: spans are batched per
+    * `floor(start / chunkSize)` of their start, like the reference's
+    * chunk-by-chunk verify (`full_range.split_chunks`, verify.rs:414).
+    * Returns the (start, end) of each span's batch, in input order.
     */
-  def mergeSmall(catalog: DataFrame, threshold: Long,
-      partitionCols: Seq[org.apache.spark.sql.Column],
-      mergeable: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(partitionCols.nonEmpty,
-      "mergeSmall windows must be partitioned (use Catalog.chunkKey): a global " +
-        "Window.orderBy funnels the whole catalog through one task")
-    val small = (col("end_h") - col("start_h") + 1 <= threshold) && mergeable
-    val w = Window.partitionBy(partitionCols: _*).orderBy("start_h", "end_h")
-    // islands over the SMALL ranges only (catalog-sized input — the window
-    // runs over file metadata, never data rows)
-    val flagged = catalog
-      .withColumn("_small", small)
-      .withColumn("_pe", max(when(col("_small"), col("end_h"))).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("_brk",
-        when(!col("_small"), 1)
-          .when(col("_pe").isNull || col("start_h") > col("_pe") + 1, 1)
-          .otherwise(0))
-      .withColumn("_g", sum("_brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    // island ids restart per window partition — the group key must carry
-    // the partition cols or same-numbered islands in different chunks fuse
-    val groups = Window.partitionBy(partitionCols :+ col("_g"): _*)
-    flagged
-      .withColumn("group_s", min("start_h").over(groups))
-      .withColumn("group_e", max("end_h").over(groups))
-      .drop("_small", "_pe", "_brk", "_g")
+  def mergeSmall(spans: IndexedSeq[Span], threshold: Long,
+      chunkSize: Long): IndexedSeq[(Long, Long)] = {
+    val small = (g: Span) => g.end - g.start + 1 <= threshold && g.mergeable
+    val batchOf = spans.groupBy(g => Math.floorDiv(g.start, chunkSize)).values.flatMap { inChunk =>
+      runs(inChunk.sortBy(g => (g.start, g.end)))(g => Some(g.end).filter(_ => small(g)))(
+        (g, smallEnd) => !small(g) || smallEnd.forall(g.start > _ + 1))
+        .flatMap(b => b.map(_ -> ((b.map(_.start).min, b.map(_.end).max))))
+    }.toMap
+    spans.map(batchOf)
+  }
+
+  /** Splits `items`, in their order, into runs: a run starts at an item
+    * for which `starts(item, reached)` holds, `reached` being the max
+    * `reach` of the earlier items (None before any). verify's overlap
+    * islands and merge batches are both such runs.
+    */
+  def runs[A](items: Seq[A])(reach: A => Option[Long])(
+      starts: (A, Option[Long]) => Boolean): Seq[Seq[A]] = {
+    val out = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[A]]
+    var reached: Option[Long] = None
+    items.foreach { a =>
+      if (out.isEmpty || starts(a, reached)) out += mutable.ArrayBuffer.empty
+      out.last += a
+      reach(a).foreach(r => reached = Some(reached.fold(r)(math.max(_, r))))
+    }
+    out.map(_.toSeq).toSeq
+  }
+
+  /** Heights of [s, e] that no interval covers, as maximal (start, end)
+    * runs in ascending order — the complement of the coverage the
+    * reference's `find_incomplete_tables` walks (src/storage/mod.rs:143-207).
+    */
+  def gaps(covered: Seq[(Long, Long)], s: Long, e: Long): Seq[(Long, Long)] = {
+    val out = Seq.newBuilder[(Long, Long)]
+    var next = s // lowest height not yet known to be covered
+    covered.sortBy(_._1).foreach { case (a, b) =>
+      if (a > next && next <= e) out += ((next, math.min(a - 1, e)))
+      next = math.max(next, b + 1)
+    }
+    if (next <= e) out += ((next, e))
+    out.result()
   }
 
   /** `find_incomplete_tables` — heights in [s, e] with no (or partial)

@@ -31,6 +31,20 @@ object Compaction {
           col("mx") - col("mn") + 1 === col("n") &&
           col("mn") === col("chunk") * chunkSize)
 
+  /** Whether any `.parquet` file lies under `dir` (a missing dir has none;
+    * a no-op prior run leaves only `_SUCCESS`).
+    */
+  private def hasParquet(spark: SparkSession, dir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(path) && {
+      val it = fs.listFiles(path, true)
+      var found = false
+      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
+      found
+    }
+  }
+
   /** Chunk ids already present under `outDir`, or empty when the dir does
     * not exist yet. The read touches only the height column (column
     * pruning) of partitions intersecting [mn, mx] (l1/l2 directory
@@ -44,15 +58,7 @@ object Compaction {
       chunkSize: Long,
       mn: Long, mx: Long): DataFrame = {
     import spark.implicits._
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData: Boolean = { // a no-op prior run leaves only _SUCCESS
-      val it = fs.listFiles(path, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-    if (!fs.exists(path) || !hasData) Seq.empty[Long].toDF("chunk")
+    if (!hasParquet(spark, outDir)) Seq.empty[Long].toDF("chunk")
     else
       spark.read.parquet(outDir)
         .filter(col("l2").between(Filenames.l2S(mn), Filenames.l2S(mx)))
@@ -121,30 +127,24 @@ object Compaction {
     import graft.sources.{AvroArchiveSink, AvroArchiveSource}
     // chunkSize 1 would name a "range" with its source single's own path
     require(chunkSize > 1, "compactAvro needs chunkSize > 1")
-    val catalog = Catalog.ofAvroFiles(spark, AvroArchiveSource.listAvroFiles(spark, archiveDir))
-      .cache()
+    // the selection is catalog-sized and the listing is on the driver:
+    // plain Scala over its entries
+    val entries = Catalog.entries(AvroArchiveSource.listAvroFiles(spark, archiveDir))
     // settled singles only: exactly one file at the height for the kind
-    val singleCounts = catalog
-      .filter(col("start_h") === col("end_h"))
-      .groupBy("kind", "start_h").agg(count(lit(1)).as("nf"))
-    val settled = catalog
-      .filter(col("start_h") === col("end_h"))
-      .join(singleCounts.filter(col("nf") === 1).select("kind", "start_h"),
-        Seq("kind", "start_h"), "left_semi")
+    val settled = entries.filter(_.isSingle).groupBy(e => (e.kind, e.start)).values
+      .collect { case Seq(only) => only }.toSeq.sortBy(_.path)
     // chunks already touched by any range file are skipped
-    // (create-if-absent; an unaligned range may span several chunks —
-    // catalog-sized explode)
-    val existingRange = catalog.filter(col("start_h") =!= col("end_h"))
-      .select(col("kind"), explode(sequence(
-        floor(col("start_h") / chunkSize).cast("long"),
-        floor(col("end_h") / chunkSize).cast("long"))).as("chunk"))
-      .distinct()
+    // (create-if-absent; an unaligned range may span several chunks)
+    val existingRange: Map[String, Seq[Long]] = entries.filterNot(_.isSingle)
+      .groupBy(_.kind).map { case (kind, rs) =>
+        kind -> rs.flatMap(r =>
+          Math.floorDiv(r.start, chunkSize) to Math.floorDiv(r.end, chunkSize)).distinct
+      }
     val verdictsByKind = Seq.newBuilder[DataFrame]
     val deleted = Seq.newBuilder[String]
-    val kinds = settled.select("kind").distinct().as[String].collect().sorted
+    val kinds = settled.map(_.kind).distinct.sorted
     kinds.foreach { kind =>
-      val files = settled.filter(col("kind") === kind)
-        .select("path").as[String].collect().toSeq
+      val files = settled.filter(_.kind == kind).map(_.path)
       val rows = AvroArchiveSource.readArchiveFilesWithPath(spark, files, kind)
         .withColumn("chunk", floor(col("height") / chunkSize).cast("long"))
         .cache()
@@ -158,8 +158,7 @@ object Compaction {
         .withColumn("kind", lit(kind))
         .localCheckpoint()
       val toWrite = verdicts.filter(col("complete")).select("chunk")
-        .join(existingRange.filter(col("kind") === kind).select("chunk"),
-          Seq("chunk"), "left_anti")
+        .filter(!col("chunk").isin(existingRange.getOrElse(kind, Seq.empty): _*))
       if (!dryRun) {
         val chunkRows = rows
           .join(broadcast(toWrite), Seq("chunk"), "left_semi")
@@ -185,7 +184,6 @@ object Compaction {
       rows.unpersist()
       verdictsByKind += verdicts
     }
-    catalog.unpersist()
     val verdicts = verdictsByKind.result() match {
       case Seq()   => validateChunks(spark.range(0).toDF("height"), "height", chunkSize)
         .withColumn("kind", lit(""))
@@ -212,16 +210,7 @@ object Compaction {
     import spark.implicits._
     // An exhausted source (every file already compacted+cleaned) has only
     // empty partition dirs left — nothing to read, infer, or delete.
-    val srcPath = new org.apache.hadoop.fs.Path(srcDir)
-    val srcFs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def srcHasData: Boolean = {
-      if (!srcFs.exists(srcPath)) return false
-      val it = srcFs.listFiles(srcPath, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-    if (!srcHasData)
+    if (!hasParquet(spark, srcDir))
       return (validateChunks(spark.range(0).toDF(heightCol), heightCol, chunkSize),
         Seq.empty)
     val src = spark.read.parquet(srcDir)

@@ -127,6 +127,14 @@ object Filenames {
     case _                => None
   }
 
+  /** Plain-Scala [[parseForkHash]]: the 64-hex hash of a forked single;
+    * None for plain singles, ranges and foreign names.
+    */
+  def parseForkHashS(path: String): Option[String] = baseName(path) match {
+    case SingleR(_, h, _) => Option(h)
+    case _                => None
+  }
+
   def isRange(file: Column): Column = file.rlike("^range-")
 
   /** Canonical kind column, or null for names/kinds the reference's parser

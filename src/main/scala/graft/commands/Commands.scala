@@ -165,10 +165,11 @@ object Commands {
     opts.notifyDir.foreach { nd =>
       // one line per archive file now covering the range — the filename IS
       // the metadata, so the catalog provides every notification field
-      val files = Catalog.intersecting(
-          Catalog.ofAvroFiles(spark, AvroArchiveSource.listAvroFiles(spark, archiveDir)),
-          startH, endH)
-        .filter(col("kind") === Filenames.normalizeKind(kind))
+      import spark.implicits._
+      val files = Catalog.entries(AvroArchiveSource.listAvroFiles(spark, archiveDir), startH, endH)
+        .collect { case e if e.kind == Filenames.normalizeKind(kind) =>
+          (Filenames.baseName(e.path), e.kind, e.start, e.end) }
+        .toDF("file", "kind", "start_h", "end_h")
       Sinks.notificationLinesFull(files, opts.blockchain, "archive",
         opts.maturity, opts.notifyTsIso)
         .coalesce(1)
@@ -317,8 +318,9 @@ object Commands {
     * heights in [startH, endH] not covered by any file of that kind are
     * re-archived as singles. `rawByKind` maps kind → records already in
     * that kind's archive schema (same contract as streamAvro's builder).
-    * Returns (kind, height) rows that were missing. Coverage explodes
-    * file ranges chunk-wise — catalog-sized × ≤chunk heights, distributed.
+    * Returns (kind, height) rows that were missing. Coverage is decided on
+    * the driver over the listing; only the gap intervals are exploded, and
+    * kinds without gaps write nothing.
     *
     * `forkHashCol`: when healing companion kinds into a fork-aware archive
     * (singles streamed as `<h>.<hash>.<kind>.avro`), pass the raw source's
@@ -334,25 +336,24 @@ object Commands {
       opts: RunOptions = RunOptions(),
       forkHashCol: Option[String] = None): DataFrame = {
     require(rawByKind.nonEmpty, "fixAvro needs at least one raw source")
-    val catalog = Catalog.intersecting(
-        Catalog.ofAvroFiles(spark, AvroArchiveSource.listAvroFiles(spark, archiveDir)),
-        startH, endH)
-      .cache()
-    val missingByKind = rawByKind.keys.toSeq.sorted.map { kind0 =>
+    import spark.implicits._
+    val entries = Catalog.entries(AvroArchiveSource.listAvroFiles(spark, archiveDir), startH, endH)
+    // per-kind coverage on the driver: the missing heights are the gaps
+    // between the intervals the kind's files cover
+    val gaps = rawByKind.keys.toSeq.sorted.flatMap { kind0 =>
       val kind = Filenames.normalizeKind(kind0)
-      val covered = catalog.filter(col("kind") === kind)
-        .select(explode(sequence(col("start_h"), col("end_h"))).as("height"))
-        .distinct()
-      val missing = spark.range(startH, endH + 1).toDF("height")
-        .join(covered, Seq("height"), "left_anti")
-      if (!opts.dryRun) {
-        val refetch = rawByKind(kind0).join(missing, Seq("height"), "left_semi")
-        AvroArchiveSink.writeSingles(refetch, kind, archiveDir,
-          forkHashCol = forkHashCol)
-      }
-      missing.select(lit(kind).as("kind"), col("height"))
+      Catalog.gaps(entries.filter(_.kind == kind).map(e => (e.start, e.end)), startH, endH)
+        .map { case (s, e) => (kind0, kind, s, e) }
     }
-    missingByKind.reduce(_ union _)
+    val missing = gaps.toDF("source", "kind", "s", "e")
+      .select(col("source"), col("kind"), explode(sequence(col("s"), col("e"))).as("height"))
+    if (!opts.dryRun) gaps.map(_._1).distinct.foreach { kind0 =>
+      val refetch = rawByKind(kind0).join(
+        missing.filter(col("source") === kind0).select("height"), Seq("height"), "left_semi")
+      AvroArchiveSink.writeSingles(refetch, Filenames.normalizeKind(kind0), archiveDir,
+        forkHashCol = forkHashCol)
+    }
+    missing.select("kind", "height")
   }
 
   /** `fix --tail N` (args.rs `--tail`: the latest N blocks instead of a

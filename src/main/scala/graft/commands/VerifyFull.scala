@@ -1,7 +1,6 @@
 package graft.commands
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.archive.Catalog
 import graft.model.ChainAdapter
@@ -13,7 +12,8 @@ import graft.sources.AvroArchiveSource
   *      (verify.rs:437-456), `select_complete` under --fix.clean
   *      (:308-322), fork removal against the canonical chain (:328-369),
   *      intersecting-range dedup keeping the largest (:372-406);
-  *   2. `merge_small` batching (:237-267);
+  *   2. `merge_small` batching (:237-267) — steps 1–2 are [[preprocess]],
+  *      plain Scala over the driver-side catalog;
   *   3. per-batch CONTENT checks — blocks: coverage, dup heights, JSON
   *      parse via ChainAdapter, chain-link continuity, top hash vs the
   *      canonical chain (:798-905); txes/traces: expected-txid
@@ -23,7 +23,9 @@ import graft.sources.AvroArchiveSource
   *      kind to the whole batch (:479-513); --dry-run suppresses deletes
   *      (:272-303, src/global.rs:48-57).
   *
-  * Spark-first shape: the reference verifies batch-by-batch under a
+  * Shape: the listing is already on the driver, so the filename passes run
+  * there as plain loops, like the reference's; Spark runs only where
+  * archive records are read. The reference verifies batch-by-batch under a
   * semaphore of 4; here EVERY batch is checked in one distributed
   * aggregation per kind, and only catalog-sized file lists ever reach the
   * driver (same scale as the reference's deletion list).
@@ -50,7 +52,98 @@ object VerifyFull {
   /** Per-batch verdicts + the applied (or dry-run-planned) deletions. */
   case class Report(batches: DataFrame, deleted: Seq[(String, String)])
 
-  private val GroupKey = Seq("start_h", "end_h", "fh")
+  /** Every file's fate after the filename passes: a deletion reason, or
+    * (path, kind, group_s, group_e) — the batch the file verifies under.
+    */
+  case class Fates(deletions: Seq[(String, String)], live: Seq[(String, String, Long, Long)])
+
+  /** Steps 1–2 over the driver-side catalog: the reference's four filename
+    * passes (duplicates, select_complete, remove_forks, dedup —
+    * verify.rs:155-207) and `merge_small` (:237-267), as plain Scala over
+    * the entries, like the reference's own loops over its listing.
+    * `canonicalAt` maps contested heights to their canonical hash; it is
+    * called only when some height is contested.
+    */
+  def preprocess(entries: Seq[Catalog.Entry], opts: Options,
+      canonicalAt: Seq[Long] => Map[Long, String]): Fates = {
+    type Key = (Long, Long, String) // (start, end, fork hash or "")
+    def key(e: Catalog.Entry): Key = (e.start, e.end, e.forkHash.getOrElse(""))
+    val deletions = Seq.newBuilder[(String, String)]
+
+    // 1a. duplicate slots: same (range, fork, kind) twice → BOTH files go
+    // (reference RangeGroupError::Duplicate, verify.rs:440-455)
+    val slotSize = entries.groupBy(e => (key(e), e.kind)).map { case (k, v) => k -> v.size }
+    val (dupSlot, cat) = entries.partition(e => slotSize((key(e), e.kind)) > 1)
+    dupSlot.foreach(e => deletions += ((e.path, "duplicate-slot")))
+
+    // 1b. groups (the reference's ArchiveGroup) with completeness per the
+    // requested tables (is_complete, range_group.rs)
+    val groups = cat.groupBy(key)
+    val keys = groups.keys.toIndexedSeq.sorted
+    val complete = groups.map { case (k, fs) =>
+      val has = fs.map(_.kind).toSet
+      k -> (has("blocks") && (!opts.checkTxes || has("txes")) &&
+        (!opts.checkTraces || has("traces")))
+    }
+    // 1c. select_complete (only under --fix.clean, verify.rs:161-165)
+    val incomplete = (k: Key) => opts.fixClean && !complete(k)
+
+    // 1d. remove_forks (verify.rs:328-369): of several single-height groups
+    // surviving 1c at one height, only the canonical-hash one stays; with
+    // no canonical hash every fork goes (the reference's fetch_block errors).
+    val isSingle = (k: Key) => k._1 == k._2
+    val contested = keys.filter(k => isSingle(k) && !incomplete(k))
+      .groupBy(_._1).collect { case (h, ks) if ks.size > 1 => h }.toSet
+    val canon = if (contested.isEmpty) Map.empty[Long, String]
+      else canonicalAt(contested.toSeq.sorted)
+    val forkedOut = (k: Key) => isSingle(k) && !incomplete(k) &&
+      contested(k._1) && !canon.get(k._1).contains(k._3)
+
+    // 1e. deduplicate intersecting ranges among survivors, keep the largest
+    // (verify.rs:372-406), chunk by chunk like the reference's verify loop
+    // (verify.rs:414 split_chunks): groups ordered by (start, end, fork)
+    // form overlap islands; in each the longest range survives, ties to
+    // the earliest start, then the lowest fork hash.
+    val chunkOf = (k: Key) => Math.floorDiv(k._1, opts.chunkSize)
+    val duplicateRange = keys.filter(k => !incomplete(k) && !forkedOut(k))
+      .groupBy(chunkOf).values.flatMap { inChunk => // keeps the order of `keys`
+        Catalog.runs(inChunk)(k => Some(k._2))((k, reached) => reached.forall(k._1 > _))
+          .flatMap(_.sortBy(k => (-(k._2 - k._1), k._1, k._3)).tail)
+      }.toSet
+
+    val reason = (k: Key) =>
+      if (incomplete(k)) Some("incomplete-group")
+      else if (forkedOut(k)) Some("forked-out")
+      else if (duplicateRange(k)) Some("duplicate-range")
+      else None
+
+    // 2. merge_small: adjacent complete small groups verify as one batch;
+    // incomplete or large groups stand alone, and batches never cross a
+    // chunk (verify.rs:237-267)
+    val kept = keys.filter(reason(_).isEmpty)
+    val batchOf = kept.zip(Catalog.mergeSmall(
+      kept.map(k => Catalog.Span(k._1, k._2, complete(k))),
+      opts.mergeThreshold, opts.chunkSize)).toMap
+
+    val live = Seq.newBuilder[(String, String, Long, Long)]
+    cat.foreach { e =>
+      val k = key(e)
+      reason(k) match {
+        case Some(r) => deletions += ((e.path, r))
+        case None    => live += ((e.path, e.kind, batchOf(k)._1, batchOf(k)._2))
+      }
+    }
+    Fates(deletions.result(), live.result())
+  }
+
+  /** The canonical hash at each of `heights`, read from the offline chain
+    * oracle in one small query (heights without a non-null hash are
+    * absent).
+    */
+  def canonicalLookup(canonical: DataFrame)(heights: Seq[Long]): Map[Long, String] =
+    canonical.filter(col("height").isin(heights: _*) && col("hash").isNotNull)
+      .select(col("height").cast("long"), col("hash"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
   /** `knownFiles` lets a caller that already listed the archive (a
     * preceding archive/compact/fix in the same session) share its catalog
@@ -68,134 +161,12 @@ object VerifyFull {
     import spark.implicits._
 
     val allFiles = knownFiles.getOrElse(AvroArchiveSource.listAvroFiles(spark, archiveDir))
-    // the catalog derives from a driver-local listing (a LocalRelation):
-    // re-reading it re-parses strings, never storage — no cache
-    val catalog = Catalog.intersecting(Catalog.ofAvroFiles(spark, allFiles), startH, endH)
-      .withColumn("fh", coalesce(col("fork_hash"), lit("")))
-      .select("path", "kind", "start_h", "end_h", "fh")
-
-    // ---- 1. filename-level preprocess as ONE lazy decision pipeline: the
-    // reference applies four sequential passes (duplicates, select_complete,
-    // remove_forks, deduplicate — verify.rs:155-207); here each pass is a
-    // column over the catalog-sized group list and a single collect at the
-    // end fetches every file's fate at once — ONE distributed action for
-    // the whole preprocess.
-
-    // 1a. duplicate slots: same (range, fork, kind) twice → BOTH files go
-    // (reference RangeGroupError::Duplicate, verify.rs:440-455)
-    val dupSlots = catalog.groupBy((GroupKey :+ "kind").map(col): _*)
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1).drop("n")
-    val cat = catalog.join(dupSlots, GroupKey :+ "kind", "left_anti")
-
-    // 1b. groups (the reference's ArchiveGroup) with completeness per the
-    // requested tables (is_complete, range_group.rs)
-    val complete = col("blocks") >= 1 &&
-      (if (opts.checkTxes) col("txes") >= 1 else lit(true)) &&
-      (if (opts.checkTraces) col("traces") >= 1 else lit(true))
-    val groups0 = cat.groupBy(GroupKey.map(col): _*)
-      .pivot("kind", Seq("blocks", "txes", "traces"))
-      .agg(count(lit(1)))
-      .na.fill(0L, Seq("blocks", "txes", "traces"))
-      .withColumn("complete", complete)
-
-    // 1c. select_complete (only under --fix.clean, verify.rs:161-165)
-    val incomplete = if (opts.fixClean) !col("complete") else lit(false)
-
-    // 1d. remove_forks (verify.rs:328-369): several single-height groups at
-    // one height → keep the one whose filename hash is canonical. The fork
-    // count is a height-partitioned window over SURVIVORS of 1c (the
-    // reference runs the passes in that order); the canonical hash joins in
-    // via the (tiny, broadcast) fork-height list against the data-sized
-    // chain — no driver round-trip.
-    val isSingle = col("start_h") === col("end_h")
-    val nf = sum(when(isSingle && !col("_incomplete"), 1).otherwise(0))
-      .over(Window.partitionBy("start_h"))
-    val forkHeights = groups0
-      .withColumn("_incomplete", incomplete)
-      .withColumn("_nf", nf)
-      .filter(col("_nf") > 1).select("start_h").distinct()
-    val canonicalAt = canonical
-      .join(broadcast(forkHeights.withColumnRenamed("start_h", "height")), Seq("height"))
-      .select(col("height").as("start_h"), col("hash").as("_canon"))
-    val withFork = groups0
-      .withColumn("_incomplete", incomplete)
-      .withColumn("_nf", nf)
-      .join(canonicalAt, Seq("start_h"), "left")
-      .withColumn("_forked_out",
-        isSingle && !col("_incomplete") && col("_nf") > 1 &&
-          // only an exact canonical-hash match survives a contested height;
-          // no canonical entry → every fork goes (the reference errors out
-          // of fetch_block — there is no right answer to keep)
-          !(col("_canon").isNotNull && col("fh") === col("_canon")))
-
-    // 1e. deduplicate intersecting ranges among survivors, keep the largest
-    // (verify.rs:372-406). Overlap islands via a running-max window,
-    // PARTITIONED BY CHUNK like the reference's per-chunk verify loop
-    // (verify.rs:414 split_chunks) — no task ever windows more than one
-    // chunk's file groups, so the preprocess scales with executors, not
-    // catalog size. Within an island the longest range (earliest start on
-    // ties) survives. Island ids restart per chunk, so rank/group windows
-    // carry the chunk key or same-numbered islands would fuse.
-    val chunkOf = Catalog.chunkKey(opts.chunkSize)
-    val w = Window.partitionBy("_chunk").orderBy("start_h", "end_h", "fh")
-    val ranked = withFork
-      .filter(!col("_incomplete") && !col("_forked_out"))
-      .withColumn("_chunk", chunkOf)
-      .withColumn("_pe", max("end_h").over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("_brk", when(col("_pe").isNull || col("start_h") > col("_pe"), 1).otherwise(0))
-      .withColumn("_isl", sum("_brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("_chunk", "_isl")
-          .orderBy((col("end_h") - col("start_h")).desc, col("start_h"), col("fh"))))
-
-    // Per-group outcome: reason to delete, or survivor. Lazy — its only
-    // consumers fold into the single fates collect below (the file→batch
-    // attribution continues on the DRIVER afterwards), so the whole
-    // preprocess is exactly one distributed action. The pivot/window
-    // subtree evaluates a couple of times inside that job — catalog-sized
-    // metadata, cheaper than any materialization. This replaces a round-2
-    // design that cached four intermediates and ran a collect per
-    // decision family.
-    val decisions = withFork
-      .join(ranked.select((GroupKey.map(col) :+ col("_rk")): _*), GroupKey, "left")
-      .withColumn("reason",
-        when(col("_incomplete"), "incomplete-group")
-          .when(col("_forked_out"), "forked-out")
-          .when(col("_rk") > 1, "duplicate-range"))
-      .select(col("start_h"), col("end_h"), col("fh"),
-        col("blocks"), col("txes"), col("traces"), col("complete"), col("reason"))
-
-    // ---- 2. merge_small: adjacent complete small groups verify as one
-    // batch; incomplete or large groups stand alone (verify.rs:237-267);
-    // batches never cross chunk boundaries, same as the reference's
-    // per-chunk processing. Lazy — folds into the fates collect.
-    val batched = Catalog.mergeSmall(
-        decisions.filter(col("reason").isNull),
-        opts.mergeThreshold, Seq(chunkOf), col("complete"))
-      .select(col("start_h"), col("end_h"), col("fh"),
-        col("group_s"), col("group_e"))
-
-    // ---- one collect for EVERY preprocess product: each file's fate —
-    // a deletion reason (duplicate slot / doomed group) or its batch
-    // assignment. The reference's four passes + its file loop become one
-    // catalog-sized driver list, same scale as its own deletion list.
-    val slotFates = catalog.join(dupSlots, GroupKey :+ "kind", "left_semi")
-      .select(col("path"), col("kind"), lit("duplicate-slot").as("reason"),
-        lit(null).cast("long").as("group_s"), lit(null).cast("long").as("group_e"))
-    val groupInfo = decisions.select((GroupKey.map(col) :+ col("reason")): _*)
-      .join(batched, GroupKey, "left")
-    val fates = cat.join(groupInfo, GroupKey)
-      .select(col("path"), col("kind"), col("reason"), col("group_s"), col("group_e"))
-      .unionByName(slotFates)
-      .collect()
-
-    val deletions = Seq.newBuilder[(String, String)]
-    val live = Seq.newBuilder[(String, String, Long, Long)] // path, kind, batch
-    fates.foreach { r =>
-      if (!r.isNullAt(2)) deletions += ((r.getString(0), r.getString(2)))
-      else live += ((r.getString(0), r.getString(1), r.getLong(3), r.getLong(4)))
-    }
-    val liveRows = live.result()
+    // ---- 1–2. filename passes and batching on the driver; the only Spark
+    // work is the canonical lookup for contested heights
+    val fates = preprocess(Catalog.entries(allFiles, startH, endH), opts,
+      canonicalLookup(canonical))
+    val deletions = Seq.newBuilder[(String, String)] ++= fates.deletions
+    val liveRows = fates.live
     val filesOf: Map[String, Seq[String]] =
       liveRows.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
 
@@ -204,7 +175,7 @@ object VerifyFull {
     // batch at once
     val batchKey = Seq("group_s", "group_e")
     // file→batch attribution is already on the driver — a LocalRelation
-    // broadcast, no recompute of the preprocess subtree
+    // broadcast
     val fileBatch = broadcast(
       liveRows.toDF("_path", "kind", "group_s", "group_e"))
     val blockRows = AvroArchiveSource
@@ -300,7 +271,7 @@ object VerifyFull {
       }))
 
     // ---- 4. verdict assembly over the catalog-sized batch list; per-batch
-    // file counts come straight from the collected fates (LocalRelation)
+    // file counts come straight from the driver-side fates (LocalRelation)
     val perBatchFiles = liveRows.groupBy(t => (t._3, t._4)).toSeq
       .map { case ((gs, ge), fs) =>
         (gs, ge, fs.count(_._2 == "blocks").toLong,

@@ -10,7 +10,7 @@ import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.util.Utf8
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
@@ -127,7 +127,7 @@ object AvroArchiveSink {
     private val writer = {
       val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avro))
       w.setCodec(codecFactory(codec))
-      w.create(avro, createUnchecksummed(fs, path))
+      w.create(avro, createTemp(fs, path))
     }
 
     def append(row: InternalRow): Unit = {
@@ -154,14 +154,16 @@ object AvroArchiveSink {
     }
   }
 
-  /** Hadoop's checksummed local FS writes a `.<name>.crc` sidecar next to
-    * every file it creates; the rename in [[commitClaimed]] moves only the
-    * container, so temps are created on the raw FS underneath.
+  /** On `file://` the temp is opened with java.nio, like the claim and the
+    * rename: Hadoop's local FS would write a `.crc` sidecar that
+    * [[commitClaimed]] never moves, and forks `chmod` without libhadoop.
     */
-  private def createUnchecksummed(fs: FileSystem, p: Path): OutputStream = fs match {
-    case c: ChecksumFileSystem => c.getRawFileSystem.create(p, true)
-    case _                     => fs.create(p, true)
-  }
+  private def createTemp(fs: FileSystem, p: Path): OutputStream =
+    if (fs.getScheme == "file") {
+      val local = java.nio.file.Paths.get(p.toUri.getPath)
+      java.nio.file.Files.createDirectories(local.getParent)
+      java.nio.file.Files.newOutputStream(local)
+    } else fs.create(p, true)
 
   /** Reference kind of an archive table — one with a height column and a
     * kind alias the reference knows; None routes to flat part-file names.

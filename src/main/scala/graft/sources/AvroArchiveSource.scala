@@ -43,18 +43,28 @@ object AvroArchiveSource {
 
   /** All `.avro` files under `dir`, at any L1/(L2) nesting level — the
     * recursive walk the reference's listing does (src/storage/fs.rs:62-132).
-    * The listing is catalog-sized: one RPC stream, no data reads.
+    * On `file://` it walks `listStatusIterator`: the recursive `listFiles`
+    * reads each local file's permissions, forking `ls` per file without
+    * libhadoop. Elsewhere it is `listFiles` (on S3A one paginated LIST).
     */
   def listAvroFiles(spark: SparkSession, dir: String): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return Seq.empty
     val out = Seq.newBuilder[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".avro"))
-        out += f.getPath.toString
+    def add(f: org.apache.hadoop.fs.FileStatus): Unit =
+      if (f.isFile && f.getPath.getName.endsWith(".avro")) out += f.getPath.toString
+    def walk(d: org.apache.hadoop.fs.Path): Unit = {
+      val it = fs.listStatusIterator(d)
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.isDirectory) walk(f.getPath) else add(f)
+      }
+    }
+    if (fs.getScheme == "file") walk(path)
+    else {
+      val it = fs.listFiles(path, true)
+      while (it.hasNext) add(it.next())
     }
     out.result()
   }

@@ -52,16 +52,11 @@ class CatalogSpec extends SparkSpec {
   test("mergeSmall batches adjacent small ranges, leaves large ones alone") {
     // reference scenarios (verify.rs:237-267): contiguous singles batch
     // together; a big range keeps its own group; gaps split batches
-    val c = catalogOf(
-      (0L to 5L).map(h => f"/a/$h%09d.blocks.avro") ++ Seq(
-        "/a/range-000000100_000000999.blocks.avro",
-        "/a/000001000.blocks.avro",
-        "/a/000001001.blocks.avro",
-        "/a/000002000.blocks.avro"): _*)
-    val g = Catalog.mergeSmall(c, threshold = 10L, Seq(Catalog.chunkKey()))
-      .select("start_h", "group_s", "group_e")
-      .orderBy("start_h").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val spans = ((0L to 5L).map(h => (h, h)) ++ Seq(
+      (100L, 999L), (1000L, 1000L), (1001L, 1001L), (2000L, 2000L)))
+      .map { case (s, e) => Catalog.Span(s, e) }.toIndexedSeq
+    val g = spans.map(_.start).zip(Catalog.mergeSmall(spans, threshold = 10L, chunkSize = 1000L))
+      .map { case (s, (gs, ge)) => (s, gs, ge) }
     assert(g.filter(_._1 <= 5L).forall(x => x._2 === 0L && x._3 === 5L))
     assert(g.find(_._1 == 100L).get === ((100L, 100L, 999L)))
     assert(g.find(_._1 == 1000L).get === ((1000L, 1000L, 1001L)))
@@ -69,13 +64,19 @@ class CatalogSpec extends SparkSpec {
     assert(g.find(_._1 == 2000L).get === ((2000L, 2000L, 2000L)))
   }
 
-  test("mergeSmall refuses an unpartitioned (global) window") {
-    // a bare Window.orderBy over a catalog-sized input is the single-task
-    // funnel the library bans — the chunk key is the only path
-    val c = catalogOf("/a/000000001.blocks.avro")
-    intercept[IllegalArgumentException] {
-      Catalog.mergeSmall(c, threshold = 10L, Seq.empty)
-    }
+  test("mergeSmall batches never cross a chunk") {
+    // 8..12 are contiguous small singles, but 10 starts chunk 1 (size 10):
+    // the batch breaks there, like the reference's per-chunk verify
+    // (verify.rs:414 split_chunks). A range is judged in its start chunk,
+    // and an unmergeable span stands alone even when small.
+    val spans = IndexedSeq(
+      Catalog.Span(8L, 8L), Catalog.Span(9L, 9L), Catalog.Span(10L, 10L),
+      Catalog.Span(11L, 11L), Catalog.Span(12L, 12L),
+      Catalog.Span(17L, 21L), Catalog.Span(22L, 22L),
+      Catalog.Span(23L, 23L, mergeable = false), Catalog.Span(24L, 24L))
+    assert(Catalog.mergeSmall(spans, threshold = 10L, chunkSize = 10L) === IndexedSeq(
+      (8L, 9L), (8L, 9L), (10L, 12L), (10L, 12L), (10L, 12L),
+      (17L, 21L), (22L, 22L), (23L, 23L), (24L, 24L)))
   }
 
   test("verify_chunk filename pass: dedup, forks, incomplete groups") {

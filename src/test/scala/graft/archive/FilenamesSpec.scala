@@ -30,7 +30,8 @@ class FilenamesSpec extends SparkSpec {
       // back to the canonical kind (datakind.rs:42)
       assert(r.getString(4) === "blocks")
       assert(r.isNullAt(5), "no fork hash")
-      assertScalaAgrees(r.getString(1), r.getString(4), r.getLong(2), r.getLong(3))
+      assertScalaAgrees(r.getString(1), r.getString(4), r.getLong(2), r.getLong(3),
+        Option(r.getString(5)))
     }
     val p = got.find(_.getLong(0) == 723743L).get.getString(1)
     assert(p === "000000000/000723000/000723743.block.avro")
@@ -68,7 +69,8 @@ class FilenamesSpec extends SparkSpec {
     assert(r.getString(0) === hash64)
     assert(r.getString(1) === "blocks")
     assert(r.getLong(2) === 723743L)
-    assertScalaAgrees(r.getString(4), r.getString(1), r.getLong(2), r.getLong(3))
+    assertScalaAgrees(r.getString(4), r.getString(1), r.getLong(2), r.getLong(3),
+      Option(r.getString(0)))
   }
 
   test("reference-written names parse: aliases, codec segment, wide heights") {
@@ -96,7 +98,7 @@ class FilenamesSpec extends SparkSpec {
       assert(r.getLong(2) === s, f)
       assert(r.getLong(3) === e, f)
       assert(Option(r.getString(4)) === Option(fh), f)
-      assertScalaAgrees(f, r.getString(1), r.getLong(2), r.getLong(3))
+      assertScalaAgrees(f, r.getString(1), r.getLong(2), r.getLong(3), Option(r.getString(4)))
     }
   }
 
@@ -108,15 +110,19 @@ class FilenamesSpec extends SparkSpec {
     // `abc123` is not a 64-hex hash, so that name reads as kind=abc123 →
     // rejected, same as the reference regex
     assert(df.collect().forall(_.isNullAt(0)))
-    df.collect().foreach(r =>
-      assert(Filenames.parseKindS(r.getString(1)) === None, r.getString(1)))
+    df.collect().foreach { r =>
+      assert(Filenames.parseKindS(r.getString(1)) === None, r.getString(1))
+      assert(Filenames.parseForkHashS(r.getString(1)) === None, r.getString(1))
+    }
   }
 
   /** The plain-Scala parsers read `name` (a basename or a whole path) the
     * way the column parsers read its basename.
     */
-  private def assertScalaAgrees(name: String, kind: String, s: Long, e: Long): Unit = {
+  private def assertScalaAgrees(name: String, kind: String, s: Long, e: Long,
+      forkHash: Option[String] = None): Unit = {
     assert(Filenames.parseKindS(name) === Some(kind), name)
     assert(Filenames.parseRangeS(name) === Some((s, e)), name)
+    assert(Filenames.parseForkHashS(name) === forkHash, name)
   }
 }
