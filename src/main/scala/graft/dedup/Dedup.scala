@@ -31,16 +31,10 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
       .filter(col("n_copies") > 1)
 
-  /** Distinct (id, shingle) pairs with global document-frequency pruning:
-    * shingles present in more than `maxDf` documents are dropped on BOTH
-    * sides of any downstream comparison (common-shingle pruning).
-    */
   /** The pre-prune hashed (id, s) stream — the tokenize→shingle-hash→
-    * distinct kernel every dedup consumer starts from. Exposed (round 14)
-    * so a caller that eagerly materializes the pruned set can release
-    * this intermediate: `unpersist()` on a Dataset with the same analyzed
-    * plan matches the CacheManager entry (see
-    * graft.ops.DedupOps.persistedShingles).
+    * distinct kernel every dedup consumer starts from. Exposed so a
+    * caller that persists it for the two prune passes can release it
+    * (graft.ops.DedupOps.persistedShingles).
     */
   def hashedShingleStream(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
@@ -61,20 +55,21 @@ object Dedup {
       .select(col(idCol).as("id"),
         explode(array_distinct(TextAnalysis.shingleHashes(col(textCol), n))).as("s"))
 
-  /** `cacheHashed` persists the pre-prune hashed stream so the two prune
-    * passes share one kernel evaluation (round 13; see the skewSafe
-    * branch). Default FALSE (opt-IN, flipped by ADVICE r13): the hidden
-    * persist is only safe for callers that manage the entry's lifetime —
-    * a per-micro-batch caller (the streaming ingest) would register one
-    * un-releasable CacheManager entry per batch, unbounded cache growth
-    * on a long-running stream (round-13 review finding). The batch seam
-    * that wants it (graft.ops.DedupOps.persistedShingles) passes true
-    * explicitly and RELEASES the entry once the pruned set materializes.
+  /** Distinct (id, shingle) pairs with global document-frequency pruning:
+    * shingles present in more than `maxDf` documents are dropped on BOTH
+    * sides of any downstream comparison (common-shingle pruning).
     */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, maxDf: Int = 20, skewSafe: Boolean = true,
-      cacheHashed: Boolean = false): DataFrame = {
-    val sh = hashedShingleStream(docs, idCol, textCol, n)
+      n: Int = 3, maxDf: Int = 20, skewSafe: Boolean = true): DataFrame =
+    pruneShingles(hashedShingleStream(docs, idCol, textCol, n), maxDf, skewSafe)
+
+  /** The df prune of [[shingleSets]] over a hashed (id, s) stream. The
+    * skew-safe form reads `sh` twice (the df aggregation and the
+    * anti-join's left side); a caller that wants one kernel evaluation
+    * persists `sh` itself and releases it once the result materializes.
+    */
+  def pruneShingles(sh: DataFrame, maxDf: Int = 20,
+      skewSafe: Boolean = true): DataFrame =
     if (skewSafe) {
       // 100 TB form: a viral shingle ("the of the" in a billion docs) would
       // make the window partition hot; the two-pass prune pre-aggregates df
@@ -82,30 +77,16 @@ object Dedup {
       // no single partition ever holds a hot shingle's full row set.
       // `hot` is tiny (only shingles above maxDf survive) — broadcast it so
       // the anti-join never shuffles the full (id, shingle) row set.
-      //
-      // The hashed stream persists (round 13, unless the caller opts out —
-      // see cacheHashed): BOTH prune passes (the df aggregation and the
-      // anti-join's left side) otherwise re-run the full
-      // tokenize→shingle→distinct→hash kernel — the one cost column
-      // pruning cannot shrink (dropping `id` from the df branch still
-      // pays the whole kernel). The cached row is two longs; at scale
-      // MEMORY_AND_DISK spills rather than re-deriving from text.
-      // A/B min-of-3: fill:shingles 5.32 → 3.59 s.
-      val cached =
-        if (cacheHashed)
-          sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else sh
-      val hot = cached.groupBy("s").agg(count(lit(1)).as("df"))
+      val hot = sh.groupBy("s").agg(count(lit(1)).as("df"))
         .filter(col("df") > maxDf)
         .select("s")
-      cached.join(broadcast(hot), Seq("s"), "left_anti").select("id", "s")
+      sh.join(broadcast(hot), Seq("s"), "left_anti").select("id", "s")
     } else {
       // Fixture-scale form: one shuffle, no join.
       sh.withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
         .filter(col("df") <= maxDf)
         .select("id", "s")
     }
-  }
 
   /** Exact Jaccard over pruned shingle sets for every pair sharing at
     * least one shingle. Output: d1, d2, jac (rounded, ≥ threshold).
@@ -252,9 +233,7 @@ object Dedup {
     // (ReusedExchange shares its input exchanges, not the join). The
     // round-5 "checkpoint measured ~25% slower" finding was a blocking
     // localCheckpoint of cand over UNCACHED signatures — a different
-    // trade; A/B for this shape is in OPTIMIZATION_r13.md. Both caches
-    // are lazily deduped across calls by CacheManager plan matching
-    // (same analyzed plan → one entry), the persistedShingles convention.
+    // trade; A/B for this shape is in OPTIMIZATION_r13.md.
     val sigs = minhashSignatures(shingles, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = lshCandidates(sigs, k, r)

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Op, Tables}
+import graft.{Op, StageMemo, Tables}
 
 /** Aggregations (SURVEY.md §2.4).
   *
@@ -13,35 +13,18 @@ import graft.{Op, Tables}
 object AggOps {
 
   /** The KS grid — the (cents, event_type) count table [[aggKsDrift]]
-    * reads four times — memoized per (session, dir) and persisted, the
-    * persistedJaccardPairs/persistedDocClusters convention (ADVICE r11:
-    * a bare per-call persist relied on CacheManager analyzed-plan dedup
-    * and accumulated an entry per call for the session lifetime).
-    * Grid-sized (distinct cents × types), so the cache entry is tiny.
-    *
-    * Staleness caveat shared by every (session, dir)-keyed memo in this
-    * codebase (CentroidCacheSpec documents it for centroids): the key is
-    * the DIR STRING, so rewriting a fixture dir within one session
-    * serves the persisted counts of the OLD data. Batch sessions read
-    * immutable snapshot dirs, so this is accepted by convention; a
-    * rewrite-in-place workflow must use a fresh session (or dir) per
-    * fixture generation. The WeakHashMap entry is uncollectable while
-    * the session lives (the cached DataFrame references its session) —
-    * weakness only releases STOPPED sessions (ADVICE r12).
+    * reads four times. Grid-sized (distinct cents × types), so the cache
+    * entry is tiny.
     */
-  private val ksGridCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]]()
   private[graft] def persistedKsGrid(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = ksGridCache.synchronized {
-    ksGridCache.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-      .getOrElseUpdate(d,
-        Tables.events(s, d)
-          .select(col("event_type"),
-            round(col("value") * 100).cast("long").as("cents"))
-          .groupBy("cents", "event_type").agg(count(lit(1)).as("c"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    StageMemo(s, d, "events", "ks-grid") {
+      Tables.events(s, d)
+        .select(col("event_type"),
+          round(col("value") * 100).cast("long").as("cents"))
+        .groupBy("cents", "event_type").agg(count(lit(1)).as("c"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** `deduplicate` — among duplicate candidates keep the one covering the
     * most (reference: src/command/verify.rs:373-404). One map-side-combined

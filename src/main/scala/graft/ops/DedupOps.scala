@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import graft.{Op, Tables}
+import graft.{Op, StageMemo, Tables}
 import graft.dedup.Dedup
 
 /** Deduplication ops over the documents/embeddings tables (scale
@@ -11,52 +11,41 @@ import graft.dedup.Dedup
   */
 object DedupOps {
 
-  /** The pruned shingle set, persisted once per session: the same analyzed
-    * plan backs dedup-ngram-jaccard, dedup-minhash and dedup-cluster-rep,
-    * so whichever runs first fills the cache and the rest scan it.
-    *
-    * Round 14 (VERDICT r13 item 5, cache-retention sweep): memoized per
-    * (session, dir) and EAGER — the first call materializes the pruned
-    * set (`count()`), then releases the pre-prune hashed stream whose
-    * persist (`cacheHashed = true`) only exists to share the kernel
-    * between the two prune passes. Without the release that corpus-sized
-    * (id, s) entry stayed resident for the JVM lifetime alongside the
-    * pruned copy it subsumes. `unpersist()` matches the CacheManager
-    * entry by analyzed plan, and Dataset.unpersist is non-cascading —
-    * the already-materialized pruned cache keeps its data.
+  /** The pruned shingle set, shared by dedup-ngram-jaccard, dedup-minhash,
+    * dedup-cluster-rep and every pair/cluster stage below. EAGER: the
+    * first call persists the hashed stream so the two prune passes share
+    * one kernel evaluation, materializes the pruned set, then releases
+    * that same hashed Dataset (non-cascading — the pruned cache keeps
+    * its data).
     */
-  private val shinglesCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]]()
   private[graft] def persistedShingles(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = shinglesCache.synchronized {
-    shinglesCache.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-      .getOrElseUpdate(d, {
-        val docs = Tables.documents(s, d)
-        val pruned = Dedup.shingleSets(docs, "doc_id", "text",
-            cacheHashed = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pruned.count()
-        Dedup.hashedShingleStream(docs, "doc_id", "text").unpersist()
-        pruned
-      })
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    StageMemo(s, d, "documents", "shingles") {
+      val hashed = Dedup.hashedShingleStream(Tables.documents(s, d), "doc_id", "text")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pruned = Dedup.pruneShingles(hashed)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pruned.count()
+      hashed.unpersist()
+      pruned
+    }
 
-  /** The exact-jaccard pair table at the loose j ≥ 0.5 threshold,
-    * persisted once per session: dedup-ngram-jaccard returns it,
-    * dedup-edit-distance re-scores it, and dedup-simhash-eval's truth set
-    * is its j ≥ 0.8 slice (thresholding only filters — the scored pair
-    * set is one computation). Pair rows are candidate-count-sized.
+  /** The exact-jaccard pair table at the loose j ≥ 0.5 threshold:
+    * dedup-ngram-jaccard returns it, dedup-edit-distance re-scores it,
+    * and dedup-simhash-eval's truth set is its j ≥ 0.8 slice
+    * (thresholding only filters — the scored pair set is one
+    * computation). Pair rows are candidate-count-sized.
     */
   private[graft] def persistedJaccardPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Dedup.jaccardPairs(persistedShingles(s, d), threshold = 0.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    StageMemo(s, d, "documents", "jaccard-pairs") {
+      Dedup.jaccardPairs(persistedShingles(s, d), threshold = 0.5)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** md5-family signature BASE (id, shingle-hash) for pair-member docs,
-    * persisted once per session — shared by the two estimator-audit ops
-    * (dedup-minhash-accuracy and dedup-minhash-k-sweep build identical
-    * plans over it, so whichever runs first fills the cache).
+    * shared by the two estimator-audit ops (dedup-minhash-accuracy and
+    * dedup-minhash-k-sweep).
     *
     * Scale shape: the pair-member semi-join lands BEFORE the explode
     * (mem is pair-member-sized → broadcast), so the corpus never
@@ -69,64 +58,57 @@ object DedupOps {
     * over the surviving member rows (the audited set, not the corpus).
     */
   private[graft] def persistedMd5Base(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val mem = persistedJaccardPairs(s, d)
-      .select(explode(array(col("d1"), col("d2"))).as("id")).distinct()
-    // Round 14: the cache's `s` is now the tuple-hash
-    // (TextAnalysis.shingleHashes), so the join key must be computed the
-    // same way; the gram STRING stays only for the oracle-visible md5
-    // (shingleHashedStructs zips both per position — member-sized, the
-    // semi-join lands before the explode).
-    val sh = Tables.documents(s, d)
-      .join(broadcast(mem), col("doc_id") === col("id"), "left_semi")
-      .select(col("doc_id").as("id"),
-        explode(array_distinct(
-          graft.text.TextAnalysis.shingleHashedStructs(col("text"), 3))).as("p"))
-      .select(col("id"), col("p.s").as("s"), col("p.sraw").as("sraw"))
-    val pruned = persistedShingles(s, d)
-      .join(broadcast(mem), Seq("id"), "left_semi")
-    sh.join(pruned, Seq("id", "s"), "left_semi")
-      .select(col("id"),
-        conv(substring(md5(col("sraw")), 1, 8), 16, 10).cast("long").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    StageMemo(s, d, "documents", "md5-sig-base") {
+      val mem = persistedJaccardPairs(s, d)
+        .select(explode(array(col("d1"), col("d2"))).as("id")).distinct()
+      // Round 14: the cache's `s` is now the tuple-hash
+      // (TextAnalysis.shingleHashes), so the join key must be computed the
+      // same way; the gram STRING stays only for the oracle-visible md5
+      // (shingleHashedStructs zips both per position — member-sized, the
+      // semi-join lands before the explode).
+      val sh = Tables.documents(s, d)
+        .join(broadcast(mem), col("doc_id") === col("id"), "left_semi")
+        .select(col("doc_id").as("id"),
+          explode(array_distinct(
+            graft.text.TextAnalysis.shingleHashedStructs(col("text"), 3))).as("p"))
+        .select(col("id"), col("p.s").as("s"), col("p.sraw").as("sraw"))
+      val pruned = persistedShingles(s, d)
+        .join(broadcast(mem), Seq("id"), "left_semi")
+      sh.join(pruned, Seq("id", "s"), "left_semi")
+        .select(col("id"),
+          conv(substring(md5(col("sraw")), 1, 8), 16, 10).cast("long").as("h"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
-  /** The verified minhash pair set at j ≥ 0.8, persisted once per session:
-    * dedup-minhash returns it directly and dedup-cluster-rep builds its
-    * component graph from it — without this the cluster op re-ran the
-    * whole signature→band→verify pipeline a second time (the single
-    * largest repeated subtree in the registry, ~4 s per evaluation at
-    * sf0.1). Pair rows are near-dup-count-sized (orders of magnitude
-    * smaller than the corpus), so the cache cost is trivial.
+  /** The verified minhash pair set at j ≥ 0.8: dedup-minhash returns it
+    * directly and dedup-cluster-rep builds its component graph from it —
+    * without the share the cluster op re-ran the whole
+    * signature→band→verify pipeline a second time (the single largest
+    * repeated subtree in the registry, ~4 s per evaluation at sf0.1).
+    * Pair rows are near-dup-count-sized (orders of magnitude smaller
+    * than the corpus), so the cache cost is trivial.
     */
   private[graft] def persistedMinhashPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Dedup.minhashNearDups(persistedShingles(s, d), threshold = 0.8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    StageMemo(s, d, "documents", "minhash-pairs") {
+      Dedup.minhashNearDups(persistedShingles(s, d), threshold = 0.8)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The document near-dup cluster table (connected components over the
-    * persisted minhash pairs), memoized per (session, dir) and shared by
-    * dedup-cluster-rep and dedup-survivorship. CacheManager plan-matching
-    * cannot dedup this one — the CC loop's localCheckpoints give every
-    * invocation a distinct physical lineage — so the memo is an explicit
-    * map. Cluster rows are corpus-count-sized ids (16 B/row).
+    * persisted minhash pairs), shared by dedup-cluster-rep and
+    * dedup-survivorship. Cluster rows are corpus-count-sized ids
+    * (16 B/row).
     */
-  // Weak on the session: a stopped SparkSession (and the cluster
-  // DataFrames persisted under it) must be collectable — a strong
-  // (session, dir) map would pin every session ever used for the
-  // driver-JVM lifetime.
-  private val clusterCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]]()
   private[graft] def persistedDocClusters(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = clusterCache.synchronized {
-    clusterCache.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-      .getOrElseUpdate(d,
-        graft.dedup.Clusters.connectedComponents(
-          Tables.documents(s, d).select(col("doc_id").as("id")),
-          persistedMinhashPairs(s, d).select("d1", "d2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    StageMemo(s, d, "documents", "doc-clusters") {
+      graft.dedup.Clusters.connectedComponents(
+        Tables.documents(s, d).select(col("doc_id").as("id")),
+        persistedMinhashPairs(s, d).select("d1", "d2"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   private[ops] val ShingleOracle =
     """sh AS (
@@ -189,9 +171,8 @@ object DedupOps {
     // predated the one-shuffle pair generation): the pruned shingle set is
     // consumed 2× here (pair lists + per-doc sizes) and 4× by the minhash
     // verify path, and materializing it now wins (fill 3.2 s + reuse 1.7 s
-    // vs 5.0 s recompute at sf0.1, with far less variance). The same
-    // analyzed plan persists once per session — dedup-minhash and
-    // dedup-cluster-rep reuse this fill through CacheManager plan matching.
+    // vs 5.0 s recompute at sf0.1, with far less variance). dedup-minhash
+    // and dedup-cluster-rep reuse the same StageMemo fill.
     // MEMORY_AND_DISK: at 100 TB the shingle set spills instead of
     // evicting mid-job.
     DedupOps.persistedJaccardPairs(s, d)
@@ -436,8 +417,7 @@ object DedupOps {
     // Persisted: the stream feeds two consumers (sharedness agg + the
     // position join back); without the persist the scan+tokenize+hash
     // pass runs twice. ~24 B/gram cached (MEMORY_AND_DISK spills at
-    // scale); Spark's cache manager dedups the identical plan across
-    // calls, same as persistedShingles.
+    // scale).
     // Round 14: the native gram-hash kernel over the 8-token tuples — no
     // slice, no gram-string concat, no per-gram interpreted lambda
     // (graft.functions.ShingleHashes; every doc here has ≥ K tokens, so
@@ -1016,51 +996,37 @@ object DedupOps {
   ) { (s, d) => hammingPairs(s, d).orderBy("d1", "d2") }
 
   /** The Manku banded Hamming ≤ 3 pair pipeline (see dedup-simhash-hamming)
-    * as a reusable table — shared with dedup-method-agreement. Memoized
-    * per (session, dir) like persistedDocClusters/persistedKsGrid
-    * (VERDICT r12 item 6: a bare per-call persist here was the one
-    * remaining non-memoized cross-op cache — each caller registered the
-    * large banded plan with the CacheManager anew, the agg-ks-drift
-    * pattern ADVICE r11 flagged). Same dir-string staleness caveat as
-    * every memo of this shape (see persistedKsGrid's scaladoc).
+    * as a reusable table — shared with dedup-method-agreement.
     */
-  private val hammingCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]]()
-  private def hammingPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = hammingCache.synchronized {
-    hammingCache.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-      .getOrElseUpdate(d, hammingPairsPlan(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  private def hammingPairsPlan(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    // The fingerprint table persists (round 13): both sides of the band
-    // self-join consume it, and without a cache the corpus-wide tokenize +
-    // 48-bit vote kernel runs twice (the band sides project different
-    // aliases, so even their exchanges don't canonicalize equal). The
-    // table is doc-count-sized (two longs per doc) — the fill is noise
-    // against one kernel pass. A/B in OPTIMIZATION_r13.md.
-    val fp = Tables.documents(s, d).select(col("doc_id").as("id"),
-      graft.functions.SimhashFingerprint.mixed(
-        graft.text.TextAnalysis.tokens(col("text")), 48).as("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = fp.select(col("id"), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("b"),
-          shiftright(col("simhash"), b * 12).bitwiseAND(lit(4095L)).as("k"))): _*))
-        .as("bk"))
-      .select(col("id"), col("simhash"), col("bk.b").as("b"), col("bk.k").as("k"))
-    bands.select(col("b"), col("k"), col("id").as("d1"), col("simhash").as("f1"))
-      .join(bands.select(col("b"), col("k"), col("id").as("d2"),
-        col("simhash").as("f2")), Seq("b", "k"))
-      .filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        bit_count(col("f1").bitwiseXOR(col("f2"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .distinct()
-  }
+  private[graft] def hammingPairs(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    StageMemo(s, d, "documents", "hamming-pairs") {
+      // The fingerprint table persists (round 13): both sides of the band
+      // self-join consume it, and without a cache the corpus-wide tokenize +
+      // 48-bit vote kernel runs twice (the band sides project different
+      // aliases, so even their exchanges don't canonicalize equal). The
+      // table is doc-count-sized (two longs per doc) — the fill is noise
+      // against one kernel pass. A/B in OPTIMIZATION_r13.md.
+      val fp = Tables.documents(s, d).select(col("doc_id").as("id"),
+        graft.functions.SimhashFingerprint.mixed(
+          graft.text.TextAnalysis.tokens(col("text")), 48).as("simhash"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bands = fp.select(col("id"), col("simhash"),
+        explode(array((0 until 4).map(b =>
+          struct(lit(b).as("b"),
+            shiftright(col("simhash"), b * 12).bitwiseAND(lit(4095L)).as("k"))): _*))
+          .as("bk"))
+        .select(col("id"), col("simhash"), col("bk.b").as("b"), col("bk.k").as("k"))
+      bands.select(col("b"), col("k"), col("id").as("d1"), col("simhash").as("f1"))
+        .join(bands.select(col("b"), col("k"), col("id").as("d2"),
+          col("simhash").as("f2")), Seq("b", "k"))
+        .filter(col("d1") < col("d2"))
+        .select(col("d1"), col("d2"),
+          bit_count(col("f1").bitwiseXOR(col("f2"))).cast("long").as("hamming"))
+        .filter(col("hamming") <= 3)
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Near-dup graph degree distribution — the first diagnostic read off
     * any pair-producing dedup stage: a heavy right tail means boilerplate

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import graft.{Op, Tables}
+import graft.{Op, StageMemo, Tables}
 import graft.sim.Similarity
 import graft.text.TextAnalysis
 
@@ -871,6 +871,24 @@ object SimOps {
     round(Similarity.dot(a, b) / (Similarity.norm(a) * Similarity.norm(b))
       * 1000000).cast("long")
 
+  /** 1-round deterministic k-means centroids for any k, sorted by cid —
+    * the k = 4 entry is the SemDeDup model, the other ks back the elbow
+    * sweep. KMeans.fit executes eagerly (one corpus shuffle + a k·dims
+    * collect), and several board ops build on it.
+    */
+  private[graft] def fittedCentroids(s: org.apache.spark.sql.SparkSession,
+      d: String, k: Int): IndexedSeq[(Long, Seq[Double])] =
+    StageMemo(s, d, "embeddings", s"centroids-k=$k") {
+      graft.sim.KMeans.fit(Tables.embeddings(s, d), k = k, iters = 1)
+        .collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1)))
+        .toIndexedSeq
+        .sortBy(_._1)
+    }
+
+  private[graft] def semanticCentroids(s: org.apache.spark.sql.SparkSession,
+      d: String): IndexedSeq[(Long, Seq[Double])] = fittedCentroids(s, d, 4)
+
   /** SemDeDup cluster membership (vec_id, cid, embedding): 1-round
     * k-means + reassignment at the micro-cosine grain — the `m` CTE of
     * [[SemDedupCtes]], shared by [[semanticKeepTable]] and DedupOps'
@@ -885,35 +903,6 @@ object SimOps {
     * crossJoin+window spelling sorted the 4×-exploded corpus on vec_id
     * purely to argmax over 4 rows).
     */
-  // The fitted SemDeDup centroids, memoized per (session, dir) — KMeans.fit
-  // executes eagerly (one corpus shuffle + a k·dims collect) at every
-  // builder CALL, and four board ops build this subtree (sim-semantic-dedup,
-  // dedup-semantic, dedup-semantic-sweep, dedup-semantic-orphans — the last
-  // twice, members + keep table). Fit is deterministic, so the memo can
-  // never change a result. Weak on the session (the clusterCache rationale:
-  // a stopped session must stay collectable).
-  private val centroidCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, IndexedSeq[(Long, Seq[Double])]]]()
-  /** 1-round deterministic k-means centroids for any k, memoized per
-    * (session, dir, k) — the k = 4 entry is the SemDeDup model, the
-    * other ks back the elbow sweep. Fit is deterministic, so the memo
-    * can never change a result.
-    */
-  private[graft] def fittedCentroids(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int): IndexedSeq[(Long, Seq[Double])] =
-    centroidCache.synchronized {
-      centroidCache.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$d#k=$k",
-          graft.sim.KMeans.fit(Tables.embeddings(s, d), k = k, iters = 1)
-            .collect()
-            .map(r => (r.getLong(0), r.getSeq[Double](1)))
-            .toIndexedSeq
-            .sortBy(_._1))
-    }
-  private[graft] def semanticCentroids(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[(Long, Seq[Double])] = fittedCentroids(s, d, 4)
-
   private[graft] def semanticMembers(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val centStructs = semanticCentroids(s, d).map { case (cid, cv) =>

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Op, Tables}
+import graft.{Op, StageMemo, Tables}
 import graft.text.TextAnalysis
 
 /** Text-analysis ops over the documents table (scale extensions —
@@ -1168,36 +1168,36 @@ object TextOps {
        |      FROM $scoreCte, b)""".stripMargin
 
   private[graft] def unigramDecileBuckets(
-      s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val toks = Tables.documents(s, d)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-    val vocab = toks.groupBy("w").agg(count(lit(1)).as("cnt"))
-    // total derives FROM vocab (round 13): sum of per-word counts == the
-    // raw token count — one fewer corpus explode (the model pass and the
-    // scoring join below remain the standard two corpus passes).
-    val total = vocab.agg(sum("cnt").cast("long").as("tot"))
-    val lm = vocab.crossJoin(broadcast(total))
-      .select(col("w"),
-        round((log(col("cnt")) - log(col("tot"))) * 1000000).cast("long").as("lp"))
-    // scores and the bucket table persist (round 13): scores feeds both
-    // the percentile-boundary agg and the final bucketing (2× the whole
-    // scoring pipeline without a cache), and the bucket table itself is
-    // consumed by FOUR ops (text-quality-deciles, text-classifier-score,
-    // pipeline-curation-e2e, pipeline-order-sensitivity) whose identical
-    // plans dedup to one JVM-wide entry via CacheManager plan matching.
-    // Both are doc-count-sized (two/three longs per row).
-    val scores = toks.join(broadcast(lm), Seq("w"))
-      .groupBy("doc_id")
-      .agg(round(sum("lp") * lit(1.0) / count(lit(1))).cast("long").as("mean_u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bnds = scores.agg(
-      expr("percentile(mean_u, array(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9))")
-        .as("bnds"))
-    scores.crossJoin(broadcast(bnds))
-      .select(col("doc_id"), col("mean_u"),
-        size(filter(col("bnds"), x => x <= col("mean_u"))).cast("long").as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
+      s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    StageMemo(s, d, "documents", "unigram-deciles") {
+      val toks = Tables.documents(s, d)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val vocab = toks.groupBy("w").agg(count(lit(1)).as("cnt"))
+      // total derives FROM vocab (round 13): sum of per-word counts == the
+      // raw token count — one fewer corpus explode (the model pass and the
+      // scoring join below remain the standard two corpus passes).
+      val total = vocab.agg(sum("cnt").cast("long").as("tot"))
+      val lm = vocab.crossJoin(broadcast(total))
+        .select(col("w"),
+          round((log(col("cnt")) - log(col("tot"))) * 1000000).cast("long").as("lp"))
+      // scores persists (round 13): it feeds both the percentile-boundary
+      // agg and the final bucketing (2× the whole scoring pipeline without
+      // a cache). The bucket table itself is the stage FOUR ops consume
+      // (text-quality-deciles, text-classifier-score,
+      // pipeline-curation-e2e, pipeline-order-sensitivity). Both are
+      // doc-count-sized (two/three longs per row).
+      val scores = toks.join(broadcast(lm), Seq("w"))
+        .groupBy("doc_id")
+        .agg(round(sum("lp") * lit(1.0) / count(lit(1))).cast("long").as("mean_u"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bnds = scores.agg(
+        expr("percentile(mean_u, array(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9))")
+          .as("bnds"))
+      scores.crossJoin(broadcast(bnds))
+        .select(col("doc_id"), col("mean_u"),
+          size(filter(col("bnds"), x => x <= col("mean_u"))).cast("long").as("bucket"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Language-ID classifier evaluation: the confusion table of the truth
     * label vs the langGuess heuristic, with per-cell corpus share and the

@@ -323,14 +323,8 @@ object Streams {
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // cacheHashed = false: every micro-batch builds a DISTINCT plan, so
-        // shingleSets' internal persist would leak one un-releasable
-        // CacheManager entry per batch on a long-running stream (round-13
-        // review). The batch is one micro-batch — the double kernel pass
-        // the cache saves is small here, the leak is not.
         val sigs = graft.dedup.Dedup.minhashSignatures(
-          graft.dedup.Dedup.shingleSets(batch, "doc_id", "text",
-            cacheHashed = false))
+          graft.dedup.Dedup.shingleSets(batch, "doc_id", "text"))
         val bands = graft.dedup.Dedup.lshBandKeys(sigs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val index =

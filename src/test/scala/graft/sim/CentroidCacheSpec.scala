@@ -1,18 +1,22 @@
 package graft.sim
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 import graft.SparkSpec
+import graft.ops.{AggOps, DedupOps, TextOps}
+import org.apache.spark.scheduler.SparkListenerApplicationEnd
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The memoized-centroid contract (VERDICT r11 item 6) and the degenerate
+/** The [[graft.StageMemo]] contract on its stages, and the degenerate
   * single-vector corpus (ADVICE r11).
   *
-  * The (session, dir, k) WeakHashMap cache behind `ops.SimOps.fittedCentroids`
-  * feeds six board ops; its failure modes are silent — a re-fit on a hit
-  * would just be slow, but a shared entry across DIRS would assign stale
-  * centroids to every downstream op after a fixture rewrite. Both halves
-  * are pinned here: a cache hit performs ZERO Spark jobs (statusTracker
-  * job-group count), and two dirs never share an entry (distinct fixtures
-  * must yield distinct centroids, each fit running real jobs).
+  * A memo's failure modes are silent: a rebuild on a hit is just slow,
+  * and a stale entry feeds old data to every downstream op. Pinned here:
+  * a hit returns the same value and runs ZERO Spark jobs (job-group
+  * count), distinct dirs and ks never share an entry, a table rewritten
+  * in place is rebuilt from the new data, and an ended application's
+  * entries are dropped.
   */
 class CentroidCacheSpec extends SparkSpec {
   import spark.implicits._
@@ -73,6 +77,89 @@ class CentroidCacheSpec extends SparkSpec {
         "dirB returned dirA's centroids — cross-dir cache collision")
     }
     assert(jobsB > 0, "dirB's fit must execute, not hit dirA's entry")
+  }
+
+  test("rewriting embeddings.parquet in place refits the centroids") {
+    val dir = freshDir("cc-rewrite")
+    writeEmbeddings(dir, fixtureA)
+    val before = graft.ops.SimOps.fittedCentroids(spark, dir, 2)
+    writeEmbeddings(dir, fixtureB)
+    val after = graft.ops.SimOps.fittedCentroids(spark, dir, 2)
+    val fresh = freshDir("cc-rewrite-ref")
+    writeEmbeddings(fresh, fixtureB)
+    assert(after !== before, "served the centroids of the overwritten table")
+    assert(after === graft.ops.SimOps.fittedCentroids(spark, fresh, 2))
+  }
+
+  private def writeEvents(dir: String, values: Seq[(String, Double)]): Unit =
+    values.zipWithIndex.map { case ((t, v), i) => (i.toLong, t, v) }
+      .toDF("ts", "event_type", "value").write.mode("overwrite")
+      .parquet(s"$dir/events.parquet")
+
+  private def ksGrid(dir: String): Set[(Long, String, Long)] =
+    AggOps.persistedKsGrid(spark, dir).collect()
+      .map(r => (r.getAs[Long]("cents"), r.getAs[String]("event_type"), r.getAs[Long]("c")))
+      .toSet
+
+  test("rewriting events.parquet in place rebuilds the KS grid") {
+    val dir = freshDir("ks-rewrite")
+    writeEvents(dir, Seq("a" -> 1.0, "a" -> 1.0, "b" -> 2.5))
+    assert(ksGrid(dir) === Set((100L, "a", 2L), (250L, "b", 1L)))
+    writeEvents(dir, Seq("a" -> 3.0, "c" -> 2.5, "c" -> 2.5, "c" -> 2.5))
+    assert(ksGrid(dir) === Set((300L, "a", 1L), (250L, "c", 3L)))
+  }
+
+  test("replacing documents.parquet outside Spark rebuilds the decile buckets") {
+    // a rewrite Spark does not see leaves the build's inner persist (the
+    // per-doc scores) registered under the same plan as the new build's
+    def buckets(dir: String): Set[(Long, Long, Long)] =
+      TextOps.unigramDecileBuckets(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val dir = freshDir("deciles")
+    val ref = freshDir("deciles-ref")
+    Seq((1L, "a a b"), (2L, "b c"), (3L, "c c c d")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    Seq((1L, "x y"), (2L, "y y z z"), (5L, "z")).toDF("doc_id", "text")
+      .write.parquet(s"$ref/documents.parquet")
+    buckets(dir)
+    val target = Paths.get(dir, "documents.parquet")
+    Files.walk(target).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    Files.createDirectory(target)
+    Files.list(Paths.get(ref, "documents.parquet"))
+      .forEach(p => Files.copy(p, target.resolve(p.getFileName)))
+    assert(buckets(dir) === buckets(ref))
+  }
+
+  private val dataFrameStages: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "shingles" -> DedupOps.persistedShingles,
+    "jaccard-pairs" -> DedupOps.persistedJaccardPairs,
+    "minhash-pairs" -> DedupOps.persistedMinhashPairs,
+    "doc-clusters" -> DedupOps.persistedDocClusters,
+    "md5-sig-base" -> DedupOps.persistedMd5Base,
+    "hamming-pairs" -> DedupOps.hammingPairs,
+    "unigram-deciles" -> TextOps.unigramDecileBuckets,
+    "ks-grid" -> AggOps.persistedKsGrid)
+
+  test("the second call of each DataFrame stage is the same Dataset and runs zero Spark jobs") {
+    dataFrameStages.foreach { case (name, stage) =>
+      val first = stage(spark, sf())
+      var second: DataFrame = null
+      val jobs = jobsDuring { second = stage(spark, sf()) }
+      assert(second eq first, s"$name: a hit returned a new Dataset")
+      assert(jobs === 0, s"$name: a hit ran $jobs Spark job(s)")
+    }
+  }
+
+  test("an ended application's entries are dropped") {
+    val dir = freshDir("cc-end")
+    writeEmbeddings(dir, fixtureA)
+    val grid = AggOps.persistedKsGrid(spark, sf())
+    graft.ops.SimOps.fittedCentroids(spark, dir, 2)
+    graft.StageMemo.listener(spark.sparkContext)
+      .onApplicationEnd(SparkListenerApplicationEnd(0L))
+    assert(!(AggOps.persistedKsGrid(spark, sf()) eq grid), "ks-grid entry survived")
+    assert(jobsDuring { graft.ops.SimOps.fittedCentroids(spark, dir, 2) } > 0,
+      "centroid entry survived")
   }
 
   test("single-vector corpus: fit degrades to one centroid instead of throwing") {
