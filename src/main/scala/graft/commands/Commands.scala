@@ -425,8 +425,8 @@ object Commands {
       case "parquet" => spark.read.parquet(s"$archiveDir/blocks")
       case "avro" =>
         // the reference's own on-disk format at any L1/(L2) nesting level,
-        // via the recursive lister (flat globs would miss the tree, and
-        // binaryFiles fails outright on a matchless glob)
+        // via the recursive lister (a flat glob would miss the tree and
+        // fail on an empty archive)
         AvroArchiveSource.readArchive(spark, archiveDir, "blocks")
       case other => throw new IllegalArgumentException(s"format: $other")
     }

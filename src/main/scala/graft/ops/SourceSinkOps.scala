@@ -43,10 +43,11 @@ object SourceSinkOps {
     clearDir(out)
     // One container per partition is the sink's contract, and the fixture
     // parquet is a single ~11 MB file → ONE input partition → a
-    // single-task encode AND a single-file (single-task) decode. Spread
-    // the row-at-a-time Avro encode across the cores first — this is
-    // exactly what a real archive job does by partitioning on the chunk
-    // column (write() scaladoc), spelled neutrally for a chunkless table.
+    // single-task encode AND a single container, which the scan never
+    // splits (a single-task decode). Spread the row-at-a-time Avro encode
+    // across the cores first — this is exactly what a real archive job
+    // does by partitioning on the chunk column (write() scaladoc), spelled
+    // neutrally for a chunkless table.
     val parts = s.sparkContext.defaultParallelism
     graft.sources.AvroArchiveSink.write(li.repartition(parts), "lineitem", out,
       codec = "snappy")
@@ -62,8 +63,8 @@ object SourceSinkOps {
     * BETWEEN predicate — the connector prunes non-intersecting container
     * FILES at plan time from the filename ranges alone (the archive's
     * filename is its zone map, reference src/archiver/filenames.rs:51-83)
-    * and decodes only the pruned column set. V2ConnectorSpec asserts the
-    * partition count actually shrinks; this op gates the row values.
+    * and converts only the pruned column set. V2ConnectorSpec asserts the
+    * planned container count actually shrinks; this op gates the row values.
     */
   val scanAvroPruned: Op = Op.sql(
     "scan-avro-pruned",
@@ -101,9 +102,9 @@ object SourceSinkOps {
     * temps + serial claim/rename in the driver's `BatchWrite.commit`
     * (speculative attempts can't race a claim; Spark's task-commit
     * coordination delivers one message per partition). Cross-
-    * implementation roundtrip: V2 writes the range layout, the v1
-    * container decoder reads it back; scan-avro-pruned proves the other
-    * direction (v1 write → V2 read).
+    * implementation roundtrip: the V2 write lands the range layout and
+    * `readArchive` (the V2 scan over the listed files) reads it back;
+    * scan-avro-pruned proves the other direction (sink write → V2 load).
     */
   val sinkAvroV2: Op = Op.sql(
     "sink-avro-v2",

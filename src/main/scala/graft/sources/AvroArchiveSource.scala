@@ -1,35 +1,46 @@
 package graft.sources
 
-import java.io.{Closeable, InputStream}
+import java.io.{Closeable, FileNotFoundException, InputStream}
 import java.nio.ByteBuffer
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericEnumSymbol, GenericRecord}
 import org.apache.avro.util.Utf8
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.archive.Filenames
 import graft.model.Schemas
+import graft.sources.v2.AvroArchiveTable
 
 /** Reader for the reference's ACTUAL storage format — Avro object-container
   * files (reference writer: src/storage/fs.rs:135-219; reader:
   * src/storage/avro_reader.rs:28-70). The container ships no spark-avro
-  * datasource, so this decodes via the core avro jar inside
-  * `binaryFiles` partitions, which pack many small containers into one
-  * task.
+  * datasource, so this decodes via the core avro jar.
   *
-  * Every read — these v1 reads and the V2 connector's partition reader —
-  * goes through one decode loop ([[Decoder]]): records map by FIELD NAME
+  * There is one read path: every read here is a thin wrapper that plans
+  * the `avro-archive` DataSourceV2 scan ([[graft.sources.v2.AvroArchiveScan]])
+  * over an explicit file list, and that scan's partition reader is the only
+  * user of the one decode loop ([[Decoder]]): records map by FIELD NAME
   * onto the static Spark schemas (graft.model.Schemas; the reference's
   * readers use the same fixed schemas, never inference) and become
   * Catalyst rows directly.
   */
 object AvroArchiveSource {
+
+  /** The column [[readArchiveFilesWithPath]] adds: the source container of
+    * each record, as the exact path string the caller listed.
+    */
+  private[sources] val PathColumn = "_path"
 
   /** Read one-or-many `.avro` archive files (glob ok) as the given kind
     * ("blocks" | "txes" | "traces").
@@ -37,24 +48,43 @@ object AvroArchiveSource {
   def read(spark: SparkSession, pathGlob: String, kind: String): DataFrame =
     read(spark, pathGlob, Schemas.schemaFor(kind))
 
-  /** Read with an explicit pinned schema (arbitrary tables). */
+  /** Read with an explicit pinned schema (arbitrary tables). `pathGlob` is
+    * a comma-separated list of files or globs, expanded on the driver;
+    * names starting with `_` or `.` (temp containers) are skipped, and an
+    * entry that matches no file fails the read.
+    */
   def read(spark: SparkSession, pathGlob: String, schema: StructType): DataFrame =
-    decodeFiles(spark, Seq(pathGlob), schema, lenient = false, withPath = false)
+    scan(spark, schema, "", expand(spark, pathGlob), lenient = false)
+
+  private def expand(spark: SparkSession, pathGlob: String): Seq[String] =
+    pathGlob.split(",").toSeq.flatMap { entry =>
+      val path = new Path(entry)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = Option(fs.globStatus(path)).toSeq.flatten
+        .filter(f => f.isFile && !f.getPath.getName.matches("[_.].*"))
+      if (files.isEmpty) throw new FileNotFoundException(s"avro-archive: no file matches $entry")
+      files.map(_.getPath.toString)
+    }
 
   /** All `.avro` files under `dir`, at any L1/(L2) nesting level — the
     * recursive walk the reference's listing does (src/storage/fs.rs:62-132).
-    * On `file://` it walks `listStatusIterator`: the recursive `listFiles`
-    * reads each local file's permissions, forking `ls` per file without
-    * libhadoop. Elsewhere it is `listFiles` (on S3A one paginated LIST).
     */
-  def listAvroFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+  def listAvroFiles(spark: SparkSession, dir: String): Seq[String] =
+    listAvroStatuses(spark, dir).map(_.getPath.toString)
+
+  /** [[listAvroFiles]] with each file's status. On `file://` it walks
+    * `listStatusIterator`: the recursive `listFiles` reads each local file's
+    * permissions, forking `ls` per file without libhadoop. Elsewhere it is
+    * `listFiles` (on S3A one paginated LIST).
+    */
+  private[sources] def listAvroStatuses(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return Seq.empty
-    val out = Seq.newBuilder[String]
-    def add(f: org.apache.hadoop.fs.FileStatus): Unit =
-      if (f.isFile && f.getPath.getName.endsWith(".avro")) out += f.getPath.toString
-    def walk(d: org.apache.hadoop.fs.Path): Unit = {
+    val out = Seq.newBuilder[FileStatus]
+    def add(f: FileStatus): Unit =
+      if (f.isFile && f.getPath.getName.endsWith(".avro")) out += f
+    def walk(d: Path): Unit = {
       val it = fs.listStatusIterator(d)
       while (it.hasNext) {
         val f = it.next()
@@ -72,8 +102,7 @@ object AvroArchiveSource {
   /** Read every `<kind>` container file under an archive directory tree,
     * filtered by parsed filename kind. Empty-archive-safe: a missing or
     * empty dir yields an empty DataFrame (the reference verify's
-    * does-nothing-on-empty-archive, src/command/verify.rs:951-970) instead
-    * of `binaryFiles` failing on a matchless glob.
+    * does-nothing-on-empty-archive, src/command/verify.rs:951-970).
     */
   def readArchive(spark: SparkSession, dir: String, kind: String): DataFrame =
     readArchiveFiles(spark,
@@ -87,12 +116,13 @@ object AvroArchiveSource {
 
   /** Read an explicit list of container files (empty-safe). */
   def readArchiveFiles(spark: SparkSession, files: Seq[String], kind: String): DataFrame =
-    decodeFiles(spark, files, Schemas.schemaFor(kind), lenient = false, withPath = false)
+    scan(spark, Schemas.schemaFor(kind), kind, files, lenient = false)
 
   /** Like [[readArchiveFiles]] but with a `_path` column attributing every
     * record to its source container — the content verifier needs to mark
     * whole FILES broken, not rows (reference FileReference,
-    * src/storage/mod.rs:231-258).
+    * src/storage/mod.rs:231-258). `_path` is the exact string of `files`
+    * the record came from, so it joins back against the caller's list.
     *
     * `lenient = true` turns an unreadable or mid-stream-corrupt container
     * into "the records stop here" instead of a task failure: the verify
@@ -105,25 +135,17 @@ object AvroArchiveSource {
     */
   def readArchiveFilesWithPath(spark: SparkSession, files: Seq[String],
       kind: String, lenient: Boolean = false): DataFrame =
-    decodeFiles(spark, files, Schemas.schemaFor(kind), lenient, withPath = true)
+    scan(spark, Schemas.schemaFor(kind).add(PathColumn, StringType, nullable = false),
+      kind, files, lenient)
 
-  /** Decode `paths` (files or globs) through `binaryFiles`; no paths → an
-    * empty frame.
+  /** The V2 scan of an explicit file list, as a DataFrame over its relation
+    * (the `lenient` reader option rides on the relation's options).
     */
-  private def decodeFiles(spark: SparkSession, paths: Seq[String], schema: StructType,
-      lenient: Boolean, withPath: Boolean): DataFrame = {
-    val out =
-      if (withPath) schema.add(StructField("_path", StringType, nullable = false))
-      else schema
-    val fields = schema.fields // serialize the field list, not the StructType
-    val rows =
-      if (paths.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
-      else spark.sparkContext.binaryFiles(paths.mkString(",")).flatMap { case (path, pds) =>
-        new Decoder(() => pds.open(), fields, lenient,
-          if (withPath) UTF8String.fromString(path) else null)
-      }
-    Bridge.dataFrame(spark, rows, out)
-  }
+  private def scan(spark: SparkSession, schema: StructType, kind: String,
+      files: Seq[String], lenient: Boolean): DataFrame =
+    Bridge.ofRows(spark, DataSourceV2Relation.create(
+      new AvroArchiveTable(schema, kind, dir = "", Some(files)), None, None,
+      new CaseInsensitiveStringMap(Map("lenient" -> lenient.toString).asJava)))
 
   /** The decode loop: the records of one container as Catalyst rows of
     * `fields`, plus a trailing `path` column when one is given. Lookahead —
@@ -136,6 +158,9 @@ object AvroArchiveSource {
       fields: Array[StructField], lenient: Boolean, path: UTF8String = null)
       extends Iterator[InternalRow] with Closeable {
     private var stream: DataFileStream[GenericRecord] = null
+    // each field's position in the container's writer schema (fixed per
+    // container), -1 when the container lacks it
+    private var slots: Array[Int] = null
     private var pending: InternalRow = null
     private var done = false
 
@@ -146,6 +171,8 @@ object AvroArchiveSource {
           stream =
             try new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
             catch { case t: Throwable => in.close(); throw t }
+          val writer = stream.getSchema
+          slots = fields.map(f => Option(writer.getField(f.name)).fold(-1)(_.pos))
         }
         if (stream.hasNext) pending = toRow(stream.next())
         else close()
@@ -160,8 +187,8 @@ object AvroArchiveSource {
       val row = new GenericInternalRow(fields.length + (if (path == null) 0 else 1))
       var i = 0
       while (i < fields.length) {
-        val slot = rec.getSchema.getField(fields(i).name)
-        row.update(i, toCatalyst(if (slot == null) null else rec.get(slot.pos), fields(i)))
+        val slot = slots(i)
+        row.update(i, toCatalyst(if (slot < 0) null else rec.get(slot), fields(i)))
         i += 1
       }
       if (path != null) row.update(fields.length, path)

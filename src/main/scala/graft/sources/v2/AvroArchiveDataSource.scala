@@ -4,15 +4,19 @@ import java.util
 
 import org.apache.avro.Schema
 import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.archive.Filenames
@@ -21,10 +25,9 @@ import graft.sources.{AvroArchiveSink, AvroArchiveSource}
 
 /** DataSourceV2 connector for the reference's Avro object-container archive
   * layout: `spark.read.format("avro-archive").option("kind", "blocks")
-  * .load(dir)`.
-  *
-  * What makes this the Spark-native read path (vs the binaryFiles seam in
-  * [[graft.sources.AvroArchiveSource]]):
+  * .load(dir)`. Its scan is the ONE way a container becomes rows: the v1
+  * reads in [[graft.sources.AvroArchiveSource]] plan the same scan over an
+  * explicit file list.
   *
   *  - **Filename-range partition pruning.** The archive's filename IS its
   *    zone map (`range-<min>_<max>.<kind>.avro` — reference
@@ -32,17 +35,17 @@ import graft.sources.{AvroArchiveSink, AvroArchiveSource}
   *    container files at PLAN time: `pushFilters` extracts the conjunctive
   *    height bounds and `planInputPartitions` drops every file whose range
   *    doesn't intersect. A 100-TB archive query for one 1000-block chunk
-  *    plans exactly one input partition. (Filters are still re-applied by
+  *    plans exactly one container. (Filters are still re-applied by
   *    Spark post-scan — the source prunes files, it does not claim
   *    row-exact evaluation.)
-  *  - **Column-pruned decode.** `pruneColumns` narrows the conversion to
-  *    the columns the query needs: a `select(height)` over a payload-heavy
-  *    blocks archive never materializes the json/uncle blobs into rows
-  *    (the container itself is row-major, so the byte stream is still
-  *    read — the saving is decode/alloc, the dominant cost for blob
-  *    columns).
-  *  - **One file per partition** — the natural unit, since range files are
-  *    chunk-bounded by construction (≤1000 blocks, src/args.rs:136).
+  *  - **Column-pruned conversion.** `pruneColumns` narrows the Catalyst
+  *    conversion to the columns the query needs. The Avro decode itself
+  *    still materializes every field of a record: the container is
+  *    row-major and the decoder reads with the writer schema.
+  *  - **Packed partitions.** Containers pack into [[FilePartition]]s by
+  *    Spark's own file rule (`spark.sql.files.maxPartitionBytes` /
+  *    `openCostInBytes`, largest first), so an archive of many small
+  *    singles does not cost one task per file. Files are never split.
   *
   * Schemas are the pinned static ones (Schemas.schemaFor — never
   * inference; reference src/storage/avro_reader.rs:28-70).
@@ -68,14 +71,20 @@ class AvroArchiveDataSource extends TableProvider with DataSourceRegister {
   }
 }
 
-final class AvroArchiveTable(tableSchema: StructType, kind: String, dir: String)
+/** The archive's `kind` files under `dir`, listed at plan time — or, when
+  * `files` is given, exactly those files, whatever their names' kind. A
+  * schema field named [[AvroArchiveSource.PathColumn]] is filled with each
+  * record's file, as the string it was listed by.
+  */
+final class AvroArchiveTable(tableSchema: StructType, kind: String, dir: String,
+    files: Option[Seq[String]] = None)
     extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = s"avro-archive($kind, $dir)"
+  override def name(): String = s"avro-archive($kind, ${files.fold(dir)(f => s"${f.size} files")})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new AvroArchiveScanBuilder(tableSchema, kind, dir,
+    new AvroArchiveScanBuilder(tableSchema, kind, dir, files,
       options.getBoolean("lenient", false))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new AvroArchiveWriteBuilder(info.schema(), kind, dir,
@@ -83,7 +92,7 @@ final class AvroArchiveTable(tableSchema: StructType, kind: String, dir: String)
 }
 
 final class AvroArchiveScanBuilder(fullSchema: StructType, kind: String,
-    dir: String, lenient: Boolean = false) extends ScanBuilder
+    dir: String, files: Option[Seq[String]], lenient: Boolean) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var required: StructType = fullSchema
@@ -120,59 +129,86 @@ final class AvroArchiveScanBuilder(fullSchema: StructType, kind: String,
       (Long.MinValue, Long.MaxValue)) { case ((a, b), (c, e)) =>
       (math.max(a, c), math.min(b, e))
     }
-    new AvroArchiveScan(required, kind, dir, lo, hi, lenient)
+    new AvroArchiveScan(required, kind, dir, files, lo, hi, lenient)
   }
 }
 
-final case class AvroFilePartition(path: String) extends InputPartition
-
 final class AvroArchiveScan(required: StructType, kind: String, dir: String,
-    lo: Long, hi: Long, lenient: Boolean = false) extends Scan with Batch {
+    files: Option[Seq[String]], lo: Long, hi: Long, lenient: Boolean)
+    extends Scan with Batch {
 
-  override def readSchema(): StructType = required
+  // the decoded fields, then the path column (the decoder appends it)
+  private val (pathField, fields) =
+    required.fields.partition(_.name == AvroArchiveSource.PathColumn)
+
+  override def readSchema(): StructType = StructType(fields ++ pathField)
   override def toBatch: Batch = this
 
-  // Catalog-sized driver-side planning: list + filename-parse + prune.
+  // Catalog-sized driver-side planning: list (or stat the given files),
+  // filename-prune, pack.
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val all = AvroArchiveSource.filesOfKind(spark,
-      AvroArchiveSource.listAvroFiles(spark, dir), kind)
-    val kept = all.filter { p =>
-      // an unparsable range is never silently dropped
+    val conf = spark.sparkContext.hadoopConfiguration
+    // an unparsable range is never silently dropped
+    val intersects = (p: String) =>
       Filenames.parseRangeS(p).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    val sized: Seq[(String, Long)] = files match {
+      case Some(given) => given.filter(intersects).map { p =>
+        val path = new Path(p)
+        (p, path.getFileSystem(conf).getFileStatus(path).getLen)
+      }
+      case None =>
+        val listed = AvroArchiveSource.listAvroStatuses(spark, dir)
+          .map(f => (f.getPath.toString, f.getLen))
+        val ofKind = AvroArchiveSource.filesOfKind(spark, listed.map(_._1), kind).toSet
+        listed.filter { case (p, _) => ofKind(p) && intersects(p) }
     }
-    kept.map(AvroFilePartition(_): InputPartition).toArray
+    val parts = sized.sortBy(-_._2).map { case (p, len) =>
+      // the listed string rides along: `_path` must be exactly it, and
+      // a SparkPath re-encodes
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p), 0, len,
+        Array.empty[String], 0L, len, Map(AvroArchiveSource.PathColumn -> p))
+    }
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    FilePartition.getFilePartitions(spark, parts,
+      FilePartition.maxSplitBytes(spark, parts.map(_.length + openCost).sum)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableConfiguration(
       SparkSession.active.sparkContext.hadoopConfiguration)
-    new AvroPartitionReaderFactory(conf, required, lenient)
+    new AvroPartitionReaderFactory(conf, fields, pathField.nonEmpty, lenient)
   }
 
   override def description(): String =
-    s"avro-archive kind=$kind dir=$dir heightBounds=[$lo, $hi] " +
-      s"readSchema=${required.fieldNames.mkString(",")}"
+    s"avro-archive kind=$kind ${files.fold(s"dir=$dir")(f => s"files=${f.size}")} " +
+      s"heightBounds=[$lo, $hi] readSchema=${readSchema().fieldNames.mkString(",")}"
 }
 
 final class AvroPartitionReaderFactory(conf: SerializableConfiguration,
-    required: StructType, lenient: Boolean = false)
+    fields: Array[StructField], withPath: Boolean, lenient: Boolean)
     extends PartitionReaderFactory {
 
-  /** One container per partition, decoded by the v1 source's decode loop
-    * ([[AvroArchiveSource.Decoder]]) — so `lenient = true` has the same
-    * meaning as in `AvroArchiveSource.readArchiveFilesWithPath`: an
-    * unreadable or mid-stream-corrupt container ends its rows instead of
-    * failing the task.
+  /** The containers of one packed partition, in order, each decoded by its
+    * own [[AvroArchiveSource.Decoder]] — so `lenient = true` ends only an
+    * unreadable or mid-stream-corrupt container's rows, never the rest of
+    * the partition, and a strict read fails the task.
     */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val path = new Path(partition.asInstanceOf[AvroFilePartition].path)
-    val rows = new AvroArchiveSource.Decoder(
-      () => path.getFileSystem(conf.value).open(path), required.fields, lenient)
+    var current: AvroArchiveSource.Decoder = null
+    val rows = partition.asInstanceOf[FilePartition].files.iterator.flatMap { file =>
+      val path = file.toPath
+      current = new AvroArchiveSource.Decoder(
+        () => path.getFileSystem(conf.value).open(path), fields, lenient,
+        if (withPath) UTF8String.fromString(
+          file.otherConstantMetadataColumnValues(AvroArchiveSource.PathColumn).toString)
+        else null)
+      current
+    }
     new PartitionReader[InternalRow] {
       override def next(): Boolean = rows.hasNext
       override def get(): InternalRow = rows.next()
-      override def close(): Unit = rows.close()
+      override def close(): Unit = if (current != null) current.close()
     }
   }
 }

@@ -1,29 +1,27 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.StructType
 
 /** Bridge to Spark's `private[sql]` API. Spark 4 made the `Column(expr)`
   * constructor and `.expr` accessor `private[sql]` (Column is API-agnostic
-  * now); custom Catalyst expressions still need both, and the Avro decode
-  * seam builds DataFrames over Catalyst rows, so this lives in an
+  * now); custom Catalyst expressions still need both, and the Avro archive
+  * reads build DataFrames over their own plans, so this lives in an
   * org.apache.spark.sql subpackage — the standard extension seam.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** DataFrame over an RDD of Catalyst rows — decode seams that build
-    * InternalRows directly skip the external-Row round trip that the
-    * public `createDataFrame` makes per row.
+  /** DataFrame over a logical plan — the Avro archive reads build their
+    * DataSourceV2 relation directly (an explicit file list is no reader
+    * option), then analyze it like any other query.
     */
-  def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rows, schema)
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Unwrap a sort Column (`col.desc` / `col.asc`) into its child column,
     * whether it ascends, and whether the null ordering is the direction's

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the curation ops (dedup-paragraph,
   * dedup-incremental, text-cap-per-source, dedup-threshold-sweep,
@@ -17,10 +18,6 @@ class OpsR10Spec extends SparkSpec {
     .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
     .collect()
     .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
 
   /** Reference block decomposition: non-overlapping 10-token windows,
     * trailing partial dropped, docs under 10 tokens contribute nothing.

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the late round-5 ops (text-boilerplate-strip,
   * text-bpe-pairs, sim-mrl-recall) over sf0.001. The driver gate owns
@@ -16,10 +17,6 @@ class OpsR11Spec extends SparkSpec {
     .select(col("doc_id"), col("text"))
     .collect()
     .map(r => (r.getLong(0), r.getString(1)))
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
 
   test("text-boilerplate-strip: counts and reassembled text match brute force") {
     val ds = docs()

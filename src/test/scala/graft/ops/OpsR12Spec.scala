@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the round-6 ops (text-entropy, text-chunk-overlap,
   * text-mix-temperature, text-vocab-coverage, sim-bucket-diversity,
@@ -442,9 +443,6 @@ class OpsR12Spec extends SparkSpec {
 
   test("text-split-leakage: leakage counts match a brute-force shingle audit") {
     val ds = docs()
-    def md5hex2(s: String): String =
-      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(2)
     def split(t: String): String = {
       val b = md5hex2(t)
       if (b < "e6") "train" else if (b < "f3") "val" else "test"

@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the round-9 op batch over the sf0.001 fixtures.
   * The driver gate owns value-exactness vs DuckDB; these pin semantics
@@ -12,10 +11,6 @@ import graft.SparkSpec
   * model, and a diagonal-covariance Mahalanobis scorer.
   */
 class OpsR18Spec extends SparkSpec {
-
-  /** Spark round() semantics: HALF_UP on the double's decimal value. */
-  private def halfUp(v: Double): Long =
-    new JBigDecimal(v).setScale(0, RoundingMode.HALF_UP).longValueExact()
 
   /** From-scratch greedy BPE: learn up to `rounds` merges over the word
     * vocab (count desc, pair asc tiebreak), mirroring OpsR17Spec's

@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the round-10 op batch over the sf0.001 fixtures.
   * The driver gate owns value-exactness vs DuckDB; these pin semantics
@@ -14,22 +13,6 @@ import graft.SparkSpec
   * BPE encode parity proof (the documented 32k-merge production swap).
   */
 class OpsR19Spec extends SparkSpec {
-
-  /** Spark round() semantics: HALF_UP on the double's value, scale 0. */
-  private def halfUp(v: Double): Long =
-    new JBigDecimal(v).setScale(0, RoundingMode.HALF_UP).longValueExact()
-
-  /** Spark round(x, 6) semantics on a double. */
-  private def round6(v: Double): Double =
-    new JBigDecimal(v).setScale(6, RoundingMode.HALF_UP).doubleValue()
-
-  /** Left-fold double dot product — ArrayDot's accumulation order. */
-  private def dotD(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length && i < b.length) { s += a(i) * b(i); i += 1 }
-    s
-  }
 
   private def cos6(a: Array[Double], b: Array[Double]): Double =
     round6(dotD(a, b) / (math.sqrt(dotD(a, a)) * math.sqrt(dotD(b, b)))) + 0.0
@@ -298,9 +281,6 @@ class OpsR19Spec extends SparkSpec {
   }
 
   test("text-perplexity-holdout equals a from-scratch held-out KN scorer") {
-    def md5hex2(s: String): String = java.security.MessageDigest
-      .getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .take(1).map("%02x".format(_)).mkString
     val docs = graft.Tables.documents(spark, sf())
       .filter(col("text").isNotNull)
       .select("doc_id", "source", "text").collect()

@@ -4,6 +4,7 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the round-11 op batch. The driver gate owns
   * value-exactness vs DuckDB; these pin semantics independently with a
@@ -16,16 +17,6 @@ import graft.SparkSpec
   */
 class OpsR20Spec extends SparkSpec {
 
-  private def halfUp(v: Double): Long =
-    new JBigDecimal(v).setScale(0, RoundingMode.HALF_UP).longValueExact()
-
-  private def round6(v: Double): Double =
-    new JBigDecimal(v).setScale(6, RoundingMode.HALF_UP).doubleValue()
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
   /** Spark `percentile` (linear interpolation) over sorted longs. */
   private def pct(sorted: IndexedSeq[Long], p: Double): Double = {
     val pos = p * (sorted.length - 1)
@@ -36,14 +27,6 @@ class OpsR20Spec extends SparkSpec {
 
   private case class DocMeta(id: Long, src: String, bytes: Long, nTok: Long,
       h: String, isTrain: Boolean)
-
-  /** Left-fold double dot product — ArrayDot's accumulation order. */
-  private def dotD(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length && i < b.length) { s += a(i) * b(i); i += 1 }
-    s
-  }
 
   /** Micro-integer cosine — SimOps.cosMicro's grain. */
   private def cosU(a: Array[Double], b: Array[Double]): Long =

@@ -3,6 +3,7 @@ package graft.ops
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the round-11 extension batch (session 2). The
   * driver gate owns value-exactness vs DuckDB; these pin semantics with
@@ -10,15 +11,8 @@ import graft.SparkSpec
   */
 class OpsR21Spec extends SparkSpec {
 
-  private def halfUp(v: Double): Long =
-    new JBigDecimal(v).setScale(0, RoundingMode.HALF_UP).longValueExact()
-
   private def round1(v: Double): Double =
     new JBigDecimal(v).setScale(1, RoundingMode.HALF_UP).doubleValue()
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
 
   /** Spark `percentile` (linear interpolation) over sorted longs. */
   private def pct(sorted: IndexedSeq[Long], p: Double): Double = {
@@ -26,17 +20,6 @@ class OpsR21Spec extends SparkSpec {
     val lo = math.floor(pos).toInt
     val hi = math.ceil(pos).toInt
     sorted(lo) + (pos - lo) * (sorted(hi) - sorted(lo))
-  }
-
-  private def round6(v: Double): Double =
-    new JBigDecimal(v).setScale(6, RoundingMode.HALF_UP).doubleValue()
-
-  /** Left-fold double dot product — ArrayDot's accumulation order. */
-  private def dotD(a: Seq[Double], b: Seq[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length && i < b.length) { s += a(i) * b(i); i += 1 }
-    s
   }
 
   private def cos(a: Seq[Double], b: Seq[Double]): Double =

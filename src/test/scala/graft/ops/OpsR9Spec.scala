@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.OpsSpecMath._
 
 /** Invariant tests for the round-5 late additions (join-range-bin,
   * sim-semantic-dedup, stream-dedup, text-mix-apply, text-hash-embedding,
@@ -74,9 +75,6 @@ class OpsR9Spec extends SparkSpec {
     val ev = events()
     val out = StreamOps.streamDedup.build(spark, sf()).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
     val groups = ev.groupBy(e => md5hex(s"${e._2}|${e._3}"))
     assert(out.length === groups.size)
     assert(out.map(_._4).sum + out.length === ev.length,
@@ -94,9 +92,6 @@ class OpsR9Spec extends SparkSpec {
       .select(col("doc_id"), col("source"), size(split(col("text"), " ")).cast("long"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
     val out = TextOps.textMixApply.build(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val bySource = docs.groupBy(_._2)

@@ -2,20 +2,21 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The DataSourceV2 avro-archive connector: filename-range partition
-  * pruning, column-pruned decode, and value-exact roundtrip against the
-  * sink.
+/** The DataSourceV2 avro-archive connector: filename-range file pruning,
+  * file packing, column-pruned conversion, and value-exact roundtrip
+  * against the sink.
   */
 class V2ConnectorSpec extends SparkSpec {
 
-  private lazy val dir: String = {
-    val out = Files.createTempDirectory("graft-v2-").toAbsolutePath.toString
-    val recs = spark.range(0, 5000).toDF("height").select(
+  /** Block records for heights [from, until). */
+  private def blocks(from: Long, until: Long) =
+    spark.range(from, until).toDF("height").select(
       lit("BITCOIN").as("blockchainType"), lit("BTC").as("blockchainId"),
       to_timestamp(lit(0)).as("archiveTimestamp"),
       col("height"),
@@ -26,13 +27,14 @@ class V2ConnectorSpec extends SparkSpec {
       lit(0).as("unclesCount"),
       lit(null).cast("binary").as("uncle0Json"),
       lit(null).cast("binary").as("uncle1Json"))
+
+  private lazy val dir: String = {
+    val out = Files.createTempDirectory("graft-v2-").toAbsolutePath.toString
     // exact 1000-height chunks → 5 range files with deterministic disjoint
     // name ranges (range-0_999 … range-4000_4999); one write per chunk so
     // no partitioner sampling can smear a boundary
     (0 until 5).foreach { c =>
-      AvroArchiveSink.write(
-        recs.where(col("height").between(c * 1000, c * 1000 + 999)).coalesce(1),
-        "blocks", out)
+      AvroArchiveSink.write(blocks(c * 1000L, c * 1000L + 1000).coalesce(1), "blocks", out)
     }
     out
   }
@@ -42,18 +44,31 @@ class V2ConnectorSpec extends SparkSpec {
       .getOrElse(fail("no BatchScanExec in plan:\n" +
         df.queryExecution.executedPlan.toString))
 
+  /** The containers the scan planned, partition by partition. */
+  private def planned(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    scan(df).inputPartitions.map(_.asInstanceOf[FilePartition].files.toSeq
+      .map(_.toPath.getName))
+
+  /** How many containers the scan planned (the pruning pins count files:
+    * partitions pack several).
+    */
+  private def containers(df: org.apache.spark.sql.DataFrame): Int = planned(df).flatten.size
+
   private def read() =
     spark.read.format("avro-archive").option("kind", "blocks").load(dir)
 
   test("height predicate prunes container files at plan time") {
     val all = read()
-    assert(scan(all).inputRDD.getNumPartitions == 5)
+    assert(containers(all) == 5)
+    // Spark's file rule over 4 cores at the default 4 MB open cost packs
+    // the five ~0.1 MB containers two to a partition
+    assert(scan(all).inputRDD.getNumPartitions == 3, planned(all))
     val pruned = read().where(col("height").between(1200, 1800))
-    assert(scan(pruned).inputRDD.getNumPartitions == 1)
+    assert(containers(pruned) == 1)
     assert(pruned.count() == 601)
     // boundary-straddling range hits exactly the two covering files
     val straddle = read().where(col("height") >= 900 && col("height") <= 1100)
-    assert(scan(straddle).inputRDD.getNumPartitions == 2)
+    assert(containers(straddle) == 2)
     assert(straddle.count() == 201)
   }
 
@@ -83,13 +98,13 @@ class V2ConnectorSpec extends SparkSpec {
       sc.description())
     assert(sc.readSchema().fieldNames.toSeq == Seq("height", "blockId"),
       sc.readSchema().treeString)
-    assert(scan(df).inputRDD.getNumPartitions == 3) // files 1k/2k/3k only
+    assert(containers(df) == 3) // files 1k/2k/3k only
     assert(df.count() == 2000)
     // an equality predicate folds to a point range → exactly one file
     val pt = read().select("height").where(col("height") === 4242)
     assert(scan(pt).scan.description().contains("heightBounds=[4242, 4242]"),
       scan(pt).scan.description())
-    assert(scan(pt).inputRDD.getNumPartitions == 1)
+    assert(containers(pt) == 1)
   }
 
   test("roundtrip values survive: strings, timestamps, binaries, nulls") {
@@ -111,8 +126,8 @@ class V2ConnectorSpec extends SparkSpec {
     // copy one healthy range file in, then smash a byte window at 60% —
     // mid-block garbage fails the codec/sync check (a clean truncation
     // can masquerade as EOF)
-    val src = java.nio.file.Paths.get(
-      AvroArchiveSource.listAvroFiles(spark, dir).head.stripPrefix("file:"))
+    val src = java.nio.file.Paths.get(AvroArchiveSource.listAvroFiles(spark, dir)
+      .find(_.contains("range-000000000_")).get.stripPrefix("file:"))
     val broken = java.nio.file.Paths.get(out, src.getFileName.toString)
     java.nio.file.Files.copy(src, broken)
     val ch = java.nio.channels.FileChannel.open(broken,
@@ -121,11 +136,30 @@ class V2ConnectorSpec extends SparkSpec {
       val garbage = java.nio.ByteBuffer.wrap(Array.fill[Byte](64)(-1))
       ch.write(garbage, ch.size() * 3 / 5)
     } finally ch.close()
-    def read(lenient: Boolean) = spark.read.format("avro-archive")
-      .option("kind", "blocks").option("lenient", lenient.toString).load(out)
-    val n = read(lenient = true).count()
+    def read(dir: String, lenient: Boolean) = spark.read.format("avro-archive")
+      .option("kind", "blocks").option("lenient", lenient.toString).load(dir)
+    val n = read(out, lenient = true).count()
     assert(n > 0 && n < 1000, s"expected a partial decode, got $n")
-    intercept[Exception] { read(lenient = false).count() }
+    intercept[Exception] { read(out, lenient = false).count() }
+
+    // packed: a larger and a smaller healthy container around the broken
+    // one (partitions pack largest first), all three in ONE partition
+    val packed = Files.createTempDirectory("graft-v2p-").toAbsolutePath.toString
+    java.nio.file.Files.copy(broken, java.nio.file.Paths.get(packed, broken.getFileName.toString))
+    AvroArchiveSink.write(blocks(5000, 7000).coalesce(1), "blocks", packed)
+    AvroArchiveSink.write(blocks(7000, 7200).coalesce(1), "blocks", packed)
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try {
+      val lenient = read(packed, lenient = true)
+      assert(planned(lenient).map(_.map(_.takeWhile(_ != '.'))) === Seq(Seq(
+        "range-000005000_000006999", "range-000000000_000000999", "range-000007000_000007199")))
+      val heights = lenient.select("height").collect().map(_.getLong(0))
+      // every row of both healthy containers, a prefix of the broken one
+      assert(heights.count(_ >= 5000) === 2200)
+      val partial = heights.count(_ < 1000)
+      assert(partial > 0 && partial < 1000, s"expected a partial decode, got $partial")
+      intercept[Exception] { read(packed, lenient = false).count() }
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
   }
 
   test("v2 write lands the range layout and the v1 decoder reads it back") {
