@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Dataset, SparkSession}
+
+import graft.sources.ArchiveFs
 
 /** The one memo for pipeline stages that several board ops share:
   * `StageMemo(s, dir, table, stage)(build)` runs `build` once per
@@ -14,9 +16,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Lifetime: an entry records a fingerprint of the one table its stage
   * reads, `<dir>/<table>.parquet` — the file's length and mtime or, for
-  * a directory, its files' paths, lengths and mtimes, taken with
-  * `getFileStatus`/`listStatus` (on `file://` without libhadoop,
-  * `listFiles` forks `ls` per file). A get whose fingerprint differs
+  * a directory, its files' paths, lengths and mtimes, taken by the
+  * archive's walk ([[ArchiveFs.files]]). A get whose fingerprint differs
   * unpersists the old value, refreshes Spark's cached plans over the path
   * (the build's inner persists would otherwise plan-match the old data)
   * and rebuilds. One listener per SparkContext drops its sessions'
@@ -41,7 +42,7 @@ object StageMemo {
   def apply[T](s: SparkSession, dir: String, table: String, stage: String)(
       build: => T): T = synchronized {
     val path = s"$dir/$table.parquet"
-    val fp = fingerprint(s, new Path(path))
+    val fp = fingerprint(s, path)
     val key = Key(s, dir, stage)
     entries.get(key) match {
       case Some(e) if e.fingerprint == fp => e.value.asInstanceOf[T]
@@ -73,13 +74,7 @@ object StageMemo {
     })
   }
 
-  private def fingerprint(s: SparkSession, path: Path): Seq[(String, Long, Long)] = {
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def walk(st: FileStatus): Seq[(String, Long, Long)] =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
-      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
-    try walk(fs.getFileStatus(path))
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
+  private def fingerprint(s: SparkSession, path: String): Seq[(String, Long, Long)] =
+    ArchiveFs.files(ArchiveFs.fs(s, path), new Path(path))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
 }

@@ -1,7 +1,10 @@
 package graft.archive
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.{ArchiveFs, AvroArchiveSink, AvroArchiveSource}
 
 /** Compaction: merge per-block files into aligned range files, only for
   * chunks that verify complete, then drop the fully-copied sources
@@ -34,16 +37,9 @@ object Compaction {
   /** Whether any `.parquet` file lies under `dir` (a missing dir has none;
     * a no-op prior run leaves only `_SUCCESS`).
     */
-  private def hasParquet(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(path) && {
-      val it = fs.listFiles(path, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-  }
+  private def hasParquet(spark: SparkSession, dir: String): Boolean =
+    ArchiveFs.files(ArchiveFs.fs(spark, dir), new Path(dir))
+      .exists(_.getPath.getName.endsWith(".parquet"))
 
   /** Chunk ids already present under `outDir`, or empty when the dir does
     * not exist yet. The read touches only the height column (column
@@ -124,7 +120,6 @@ object Compaction {
       chunkSize: Long = 1000L,
       dryRun: Boolean = false): (DataFrame, Seq[String]) = {
     import spark.implicits._
-    import graft.sources.{AvroArchiveSink, AvroArchiveSource}
     // chunkSize 1 would name a "range" with its source single's own path
     require(chunkSize > 1, "compactAvro needs chunkSize > 1")
     // the selection is catalog-sized and the listing is on the driver:
@@ -173,13 +168,20 @@ object Compaction {
           .groupBy("_path")
           .agg(count(lit(1)).as("n"), count("c").as("n_cov"))
           .filter(col("n") === col("n_cov"))
-          .select("_path").as[String].collect()
-        val fs = new org.apache.hadoop.fs.Path(archiveDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        deletable.foreach { p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), false)
-        }
-        deleted ++= deletable
+          .select("_path").as[String].collect().toSeq
+        // singles beside a pre-existing range are crash residue, and that
+        // range may be a crashed write's empty claim: such a single goes
+        // only if a lenient read of the ranges returns its height
+        val residue = settled.filter(e => e.kind == kind &&
+          existingRange.getOrElse(kind, Nil).contains(Math.floorDiv(e.start, chunkSize)))
+        val held = if (residue.isEmpty) Set.empty[Long]
+          else AvroArchiveSource.readArchiveFilesWithPath(spark, entries.collect {
+            case r if !r.isSingle && r.kind == kind &&
+              residue.exists(e => r.start <= e.start && e.start <= r.end) => r.path
+          }, kind, lenient = true).select("height").as[Long].collect().toSet
+        val gone = deletable.filterNot(residue.filterNot(e => held(e.start)).map(_.path).toSet)
+        ArchiveFs.delete(spark, gone.map(new Path(_)))
+        deleted ++= gone
       }
       rows.unpersist()
       verdictsByKind += verdicts
@@ -232,13 +234,7 @@ object Compaction {
     // File count is catalog-sized; drive deletion from the collected list
     // (reference deletes with a semaphore of 4, verify.rs:278).
     val deletable = perFile.collect().map(_.getAs[String]("file")).toSeq
-    if (!dryRun) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      deletable.foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-    }
+    if (!dryRun) ArchiveFs.delete(spark, deletable.map(f => new Path(new java.net.URI(f))))
     (verdicts, deletable)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.archive.{Catalog, Compaction, Filenames, Sinks}
 import graft.functions.{BlockLink, ChainSequenceAggregator}
-import graft.sources.{AvroArchiveSink, AvroArchiveSource}
+import graft.sources.{ArchiveFs, AvroArchiveSink, AvroArchiveSource}
 import graft.streaming.Streams
 
 /** The reference's five CLI commands (README.adoc:107-155, src/args.rs:165-173)
@@ -119,10 +119,8 @@ object Commands {
       val fresh = batch.dropDuplicates("height")
       val bounds = fresh.agg(min("height").cast("long"), max("height").cast("long")).head()
       if (!bounds.isNullAt(0)) {
-        val path = new org.apache.hadoop.fs.Path(blocksDir)
-        val fs = path.getFileSystem(spk.sparkContext.hadoopConfiguration)
         val novel =
-          if (!fs.exists(path)) fresh
+          if (!ArchiveFs.fs(spk, blocksDir).exists(new org.apache.hadoop.fs.Path(blocksDir))) fresh
           else {
             val archived = spk.read.parquet(blocksDir)
               .filter(col("l2").between(

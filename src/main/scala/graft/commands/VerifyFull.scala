@@ -1,10 +1,11 @@
 package graft.commands
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.archive.Catalog
 import graft.model.ChainAdapter
-import graft.sources.AvroArchiveSource
+import graft.sources.{ArchiveFs, AvroArchiveSource}
 
 /** The reference `verify` command's FULL pipeline (src/command/verify.rs):
   *
@@ -346,13 +347,7 @@ object VerifyFull {
     }
 
     val toDelete = deletions.result()
-    if (!opts.dryRun && toDelete.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(archiveDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      toDelete.foreach { case (p, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), false)
-      }
-    }
+    if (!opts.dryRun) ArchiveFs.delete(spark, toDelete.map(d => new Path(d._1)))
     // a long-lived session may run many commands — drop this run's caches
     (blockRows +: cached.result()).foreach(_.unpersist())
     Report(verdicts, toDelete)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.OutputStream
 import java.nio.ByteBuffer
 import java.util.UUID
 
@@ -27,33 +26,14 @@ import graft.archive.Filenames
   *
   * The Avro schema is DERIVED from the engine's static StructTypes
   * (graft.model.Schemas) — same field names/types the reference embeds.
-  * ALL IO goes through `org.apache.hadoop.fs.FileSystem`, resolved from
-  * the output path's scheme — local paths, HDFS and object stores (the
-  * reference's S3 backend, src/storage/objects.rs:170-330) take the same
-  * code path.
   *
   * Commit protocol, shared by [[write]], [[writeSingles]], [[writeChunked]]
-  * and the V2 connector's write side:
-  *   1. rows stream into a hidden temp container ([[TempContainer]]),
-  *      written without a checksum sidecar, so a rename moves everything
-  *      the write left behind;
-  *   2. the closed container's height range names it ([[targetName]]) —
-  *      the filename IS the metadata (src/archiver/filenames.rs:51-83);
-  *   3. [[commit]] claims the final name and swaps the temp onto the claim
-  *      in ONE atomic rename. A name that is already taken keeps its file
-  *      (the reference's never-overwrite `create`, src/storage/fs.rs:33-39):
-  *      the temp is deleted, and the write either skips it or fails.
-  * A crashed task can only ever leave a hidden temp orphan, never a
-  * partial file under a final name.
-  *
-  * Atomicity caveat, scoped honestly: the claim is atomic on HDFS and
-  * `file://` only. On S3A, `create(overwrite=false)` is itself
-  * check-then-act (a HEAD then PUT), so concurrent writers of the SAME
-  * target can both "win" — last PUT wins, same best-effort semantics as
-  * the reference's own S3 backend, whose never-overwrite is also a
-  * list-then-put (objects.rs:112-167,170-230). Callers that need a hard
-  * guarantee on object stores must fence at the job level (the archive
-  * commands already do: one task owns one chunk by partitioning).
+  * and the V2 connector's write side: rows stream into a hidden temp
+  * container ([[TempContainer]]); the closed container's height range
+  * names it ([[targetName]] — the filename IS the metadata,
+  * src/archiver/filenames.rs:51-83); [[ArchiveFs.commit]] claims the name
+  * and publishes the temp onto it, on any scheme (local, HDFS, object
+  * stores — the reference's S3 backend, src/storage/objects.rs:170-330).
   */
 object AvroArchiveSink {
 
@@ -127,7 +107,7 @@ object AvroArchiveSink {
     private val writer = {
       val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avro))
       w.setCodec(codecFactory(codec))
-      w.create(avro, createTemp(fs, path))
+      w.create(avro, ArchiveFs.createTemp(fs, path))
     }
 
     def append(row: InternalRow): Unit = {
@@ -150,20 +130,9 @@ object AvroArchiveSink {
 
     def discard(): Unit = {
       try writer.close() catch { case _: Throwable => () }
-      try fs.delete(path, false) catch { case _: Throwable => () }
+      try ArchiveFs.delete(fs, path) catch { case _: Throwable => () }
     }
   }
-
-  /** On `file://` the temp is opened with java.nio, like the claim and the
-    * rename: Hadoop's local FS would write a `.crc` sidecar that
-    * [[commitClaimed]] never moves, and forks `chmod` without libhadoop.
-    */
-  private def createTemp(fs: FileSystem, p: Path): OutputStream =
-    if (fs.getScheme == "file") {
-      val local = java.nio.file.Paths.get(p.toUri.getPath)
-      java.nio.file.Files.createDirectories(local.getParent)
-      java.nio.file.Files.newOutputStream(local)
-    } else fs.create(p, true)
 
   /** Reference kind of an archive table — one with a height column and a
     * kind alias the reference knows; None routes to flat part-file names.
@@ -184,62 +153,6 @@ object AvroArchiveSink {
     case Some(k)                 => Filenames.relativeRangePath(minH, maxH, k)
     case None                    => f"part-$pid%05d.$kind.avro"
   }
-
-  /** Claim a target path. On HDFS `create(overwrite = false)` is the
-    * atomic claim; on object stores it is best-effort check-then-act (see
-    * the object scaladoc caveat — the reference's S3 backend has the same
-    * semantics, objects.rs:170-230); on
-    * `file://` Hadoop's local create is a non-atomic check-then-act, so
-    * the claim drops to java.nio's O_EXCL create. Returns false when the
-    * target already exists (the reference's never-overwrite skip,
-    * src/storage/fs.rs:33-39 / stream.rs:49-52).
-    */
-  private[sources] def claimTarget(fs: FileSystem, target: Path): Boolean =
-    if (fs.getScheme == "file") {
-      val local = java.nio.file.Paths.get(target.toUri.getPath)
-      java.nio.file.Files.createDirectories(local.getParent)
-      try { java.nio.file.Files.createFile(local); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try { fs.create(target, false).close(); true }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-    }
-
-  /** Swap a successfully-claimed marker for the written temp container in
-    * ONE atomic rename — never delete-then-rename, which would reopen the
-    * claim window (a speculative/retried task could re-claim the name
-    * between the two calls and both writers would commit). On `file://`
-    * that is java.nio's ATOMIC_MOVE (rename(2) replaces the marker
-    * atomically); elsewhere it is `FileContext.rename(OVERWRITE)`, which
-    * HDFS serializes in the namenode.
-    */
-  private[sources] def commitClaimed(fs: FileSystem, tmp: Path, target: Path): Unit =
-    if (fs.getScheme == "file") {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(target.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.getUri, fs.getConf)
-        .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-
-  /** Claim `target` and move the closed temp container onto it; true when
-    * it landed. A taken name keeps the existing file and the temp is
-    * deleted — then the call returns false, or throws when `failIfTaken`.
-    */
-  private[sources] def commit(fs: FileSystem, tmp: Path, target: Path,
-      failIfTaken: Boolean): Boolean =
-    if (claimTarget(fs, target)) { commitClaimed(fs, tmp, target); true }
-    else {
-      fs.delete(tmp, false)
-      if (failIfTaken)
-        throw new IllegalStateException(
-          s"archive file exists (never overwritten): $target — partition " +
-            "the input so file ranges don't collide")
-      false
-    }
 
   /** Write `df` as one Avro container file per partition under `outDir`.
     *
@@ -315,7 +228,7 @@ object AvroArchiveSink {
     val keys = splitCols.map(c => (schema.fieldIndex(c), schema(c).dataType)).toArray
     val conf = new SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
-    new Path(outDir).getFileSystem(conf.value).mkdirs(new Path(outDir))
+    ArchiveFs.mkdirs(ArchiveFs.fs(new Path(outDir), conf.value), new Path(outDir))
     // Catalyst rows are reused between calls: keys copy their values out
     def copied(row: InternalRow, i: Int, dt: DataType): Any =
       if (row.isNullAt(i)) null
@@ -324,7 +237,7 @@ object AvroArchiveSink {
         case v             => v
       }
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val fs = new Path(outDir).getFileSystem(conf.value)
+      val fs = ArchiveFs.fs(new Path(outDir), conf.value)
       val avro = new Schema.Parser().parse(avroJson)
       var landed = 0L
       var open: TempContainer = null
@@ -334,7 +247,7 @@ object AvroArchiveSink {
         open.close()
         val target = new Path(outDir,
           targetName(kind, ref, pid, open.minH, open.maxH, fork))
-        if (commit(fs, open.path, target, failIfTaken)) landed += open.n
+        if (ArchiveFs.commit(fs, open.path, target, failIfTaken)) landed += open.n
         open = null
       }
       rows.foreach { row =>

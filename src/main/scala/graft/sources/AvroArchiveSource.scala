@@ -58,9 +58,7 @@ object AvroArchiveSource {
 
   private def expand(spark: SparkSession, pathGlob: String): Seq[String] =
     pathGlob.split(",").toSeq.flatMap { entry =>
-      val path = new Path(entry)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = Option(fs.globStatus(path)).toSeq.flatten
+      val files = Option(ArchiveFs.fs(spark, entry).globStatus(new Path(entry))).toSeq.flatten
         .filter(f => f.isFile && !f.getPath.getName.matches("[_.].*"))
       if (files.isEmpty) throw new FileNotFoundException(s"avro-archive: no file matches $entry")
       files.map(_.getPath.toString)
@@ -72,32 +70,10 @@ object AvroArchiveSource {
   def listAvroFiles(spark: SparkSession, dir: String): Seq[String] =
     listAvroStatuses(spark, dir).map(_.getPath.toString)
 
-  /** [[listAvroFiles]] with each file's status. On `file://` it walks
-    * `listStatusIterator`: the recursive `listFiles` reads each local file's
-    * permissions, forking `ls` per file without libhadoop. Elsewhere it is
-    * `listFiles` (on S3A one paginated LIST).
-    */
-  private[sources] def listAvroStatuses(spark: SparkSession, dir: String): Seq[FileStatus] = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Seq.empty
-    val out = Seq.newBuilder[FileStatus]
-    def add(f: FileStatus): Unit =
-      if (f.isFile && f.getPath.getName.endsWith(".avro")) out += f
-    def walk(d: Path): Unit = {
-      val it = fs.listStatusIterator(d)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isDirectory) walk(f.getPath) else add(f)
-      }
-    }
-    if (fs.getScheme == "file") walk(path)
-    else {
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) add(it.next())
-    }
-    out.result()
-  }
+  /** [[listAvroFiles]] with each file's status, by [[ArchiveFs.files]]. */
+  private[sources] def listAvroStatuses(spark: SparkSession, dir: String): Seq[FileStatus] =
+    ArchiveFs.files(ArchiveFs.fs(spark, dir), new Path(dir))
+      .filter(_.getPath.getName.endsWith(".avro")).toSeq
 
   /** Read every `<kind>` container file under an archive directory tree,
     * filtered by parsed filename kind. Empty-archive-safe: a missing or

@@ -21,7 +21,7 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.archive.Filenames
 import graft.model.Schemas
-import graft.sources.{AvroArchiveSink, AvroArchiveSource}
+import graft.sources.{ArchiveFs, AvroArchiveSink, AvroArchiveSource}
 
 /** DataSourceV2 connector for the reference's Avro object-container archive
   * layout: `spark.read.format("avro-archive").option("kind", "blocks")
@@ -154,8 +154,7 @@ final class AvroArchiveScan(required: StructType, kind: String, dir: String,
       Filenames.parseRangeS(p).forall { case (mn, mx) => mx >= lo && mn <= hi }
     val sized: Seq[(String, Long)] = files match {
       case Some(given) => given.filter(intersects).map { p =>
-        val path = new Path(p)
-        (p, path.getFileSystem(conf).getFileStatus(path).getLen)
+        (p, ArchiveFs.fs(new Path(p), conf).getFileStatus(new Path(p)).getLen)
       }
       case None =>
         val listed = AvroArchiveSource.listAvroStatuses(spark, dir)
@@ -199,7 +198,7 @@ final class AvroPartitionReaderFactory(conf: SerializableConfiguration,
     val rows = partition.asInstanceOf[FilePartition].files.iterator.flatMap { file =>
       val path = file.toPath
       current = new AvroArchiveSource.Decoder(
-        () => path.getFileSystem(conf.value).open(path), fields, lenient,
+        () => ArchiveFs.fs(path, conf.value).open(path), fields, lenient,
         if (withPath) UTF8String.fromString(
           file.otherConstantMetadataColumnValues(AvroArchiveSource.PathColumn).toString)
         else null)
@@ -215,15 +214,14 @@ final class AvroPartitionReaderFactory(conf: SerializableConfiguration,
 
 /** The connector's write side: `df.write.format("avro-archive")
   * .option("kind", ...).mode("append").save(dir)`, on the sink's commit
-  * protocol ([[AvroArchiveSink]]) with the claim moved to the driver:
-  * every task streams its partition into a hidden temp container and
-  * reports (temp, min/max height, count) in its commit message; the
-  * DRIVER then claims + renames all winners serially in
-  * `BatchWrite.commit`. Spark's task-commit coordination guarantees one
-  * message per partition, so a speculative duplicate attempt can never
-  * race a claim — its `abort` just deletes its temp. A name collision (two
-  * partitions covering the same height range, or a pre-existing archive
-  * file) fails the JOB, and the abort deletes every temp not yet renamed.
+  * protocol with the commit moved to the driver: every task streams its
+  * partition into a temp container and reports (temp, min/max height,
+  * count); the DRIVER then commits them serially ([[ArchiveFs.commit]]).
+  * Spark's task-commit coordination guarantees one message per partition,
+  * so a speculative duplicate attempt can never race a claim. A name
+  * collision (two partitions covering the same height range, or a
+  * pre-existing archive file) fails the JOB, and the abort deletes every
+  * temp not yet published.
   */
 final class AvroArchiveWriteBuilder(schema: StructType, kind: String,
     dir: String, codec: String) extends WriteBuilder {
@@ -243,29 +241,23 @@ final class AvroArchiveBatchWrite(schema: StructType, kind: String,
     extends BatchWrite {
 
   private val refKind = AvroArchiveSink.refKind(kind, schema, "height")
+  private lazy val fs = ArchiveFs.fs(new Path(dir), conf.value)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new AvroArchiveWriterFactory(schema, kind, dir, codec, conf,
       refKind.isDefined)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(conf.value)
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case m: AvroWriteCommit if m.n > 0 =>
       val target = new Path(dir, AvroArchiveSink.targetName(
         kind, refKind, m.partitionId, m.minH, m.maxH, fork = None))
-      AvroArchiveSink.commit(fs, new Path(m.tmpPath), target, failIfTaken = true)
+      ArchiveFs.commit(fs, new Path(m.tmpPath), target, failIfTaken = true)
     }
-  }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(conf.value)
-    messages.foreach {
-      case m: AvroWriteCommit =>
-        try fs.delete(new Path(m.tmpPath), false)
-        catch { case _: Throwable => () }
-      case _ => ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    messages.collect { case m: AvroWriteCommit =>
+      try ArchiveFs.delete(fs, new Path(m.tmpPath)) catch { case _: Throwable => () }
     }
-  }
 }
 
 final class AvroArchiveWriterFactory(schema: StructType, kind: String,
@@ -276,7 +268,7 @@ final class AvroArchiveWriterFactory(schema: StructType, kind: String,
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val fs = new Path(dir).getFileSystem(conf.value)
+      private val fs = ArchiveFs.fs(new Path(dir), conf.value)
       private val out = new AvroArchiveSink.TempContainer(fs, dir, schema,
         new Schema.Parser().parse(schemaJson), codec,
         if (trackHeight) schema.fieldIndex("height") else -1)
@@ -285,7 +277,7 @@ final class AvroArchiveWriterFactory(schema: StructType, kind: String,
 
       override def commit(): WriterCommitMessage = {
         out.close()
-        if (out.n == 0L) fs.delete(out.path, false)
+        if (out.n == 0L) ArchiveFs.delete(fs, out.path)
         AvroWriteCommit(out.path.toString, partitionId, out.minH, out.maxH, out.n)
       }
 

@@ -44,6 +44,22 @@ class CompactionSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() === 20L)
   }
 
+  test("compactAndClean deletes through the source path's filesystem (mocks3://)") {
+    graft.sources.MockS3FileSystem.install(spark.sparkContext.hadoopConfiguration)
+    val srcDir = "mocks3:" + Files.createTempDirectory("graft-cc-s3src").toString
+    val outDir = "mocks3:" + Files.createTempDirectory("graft-cc-s3out").toString
+    val heights = ((0L to 9L) ++ (10L to 17L)).toDF("height")
+      .withColumn("payload", md5(col("height").cast("string")))
+      .withColumn("bucket", floor(col("height") / 10).cast("long"))
+    heights.repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(srcDir)
+    val (_, deleted) = Compaction.compactAndClean(spark, srcDir, "height", 10L, outDir)
+    assert(deleted.nonEmpty && deleted.forall(_.startsWith("mocks3:")), deleted)
+    assert(spark.read.parquet(srcDir).select("height").as[Long].collect().sorted.toSeq ===
+      (10L to 17L))
+    assert(spark.read.parquet(outDir).count() === 10L)
+  }
+
   test("compact writes only complete chunks and keeps sources intact") {
     val out = Files.createTempDirectory("graft-compact").toString
     val heights = ((0L to 9L) ++ (10L to 17L) ++ (20L to 29L)).toDF("height")
@@ -148,5 +164,31 @@ class CompactionSpec extends SparkSpec {
     val (_, deleted2) = Compaction.compactAvro(spark, dir, chunkSize = 100L)
     assert(deleted2.isEmpty)
     assert(AvroArchiveSource.listAvroFiles(spark, dir).size === 106)
+  }
+
+  test("a compactAvro crash between claim and publish never costs a chunk its singles") {
+    import graft.model.Schemas
+    import graft.sources.{ArchiveFs, AvroArchiveSink, AvroArchiveSource}
+    import org.apache.spark.sql.Row
+    val dir = Files.createTempDirectory("graft-compact-crash").toString
+    val rows = (0L to 19L).map(h => Row("BITCOIN", "BTC", new java.sql.Timestamp(0L), h,
+      s"hash-$h", s"hash-${h - 1}", new java.sql.Timestamp(h), s"{}".getBytes("UTF-8"),
+      0, null, null))
+    AvroArchiveSink.writeSingles(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), Schemas.block), "blocks", dir)
+    val crash = new ArchiveFs.Crash(ArchiveFs.Step.Publish, _.getName.startsWith("range-"))
+    ArchiveFs.crashWith(Some(crash))
+    try intercept[Exception](Compaction.compactAvro(spark, dir, chunkSize = 10L))
+    finally ArchiveFs.crashWith(None)
+    assert(crash.fired)
+    // the crash left empty claims at the range names; the rerun keeps them
+    // (never overwrite) and must keep every single they do not hold
+    Compaction.compactAvro(spark, dir, chunkSize = 10L)
+    val nonEmpty = ArchiveFs.files(ArchiveFs.fs(spark, dir), new org.apache.hadoop.fs.Path(dir))
+      .filter(f => f.getLen > 0 && f.getPath.getName.endsWith(".avro"))
+      .map(_.getPath.toString).toSeq
+    val heights = AvroArchiveSource.readArchiveFiles(spark, nonEmpty, "blocks")
+      .select("height").as[Long].collect().sorted.toSeq
+    assert(heights.distinct === (0L to 19L))
   }
 }

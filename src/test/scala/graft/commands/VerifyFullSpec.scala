@@ -327,8 +327,8 @@ class VerifyFullSpec extends SparkSpec {
     // between them: the full pipeline must parse the names, keep the
     // ranges as separate batches, content-check the real Bitcoin payloads
     // (chain links, coverage, top hash) and find nothing to delete —
-    // dry-run, nothing in /root/reference is ever touched
-    val dir = "/root/reference/testdata/fullAvroFiles/btc"
+    // dry-run, nothing in the fixture tree is ever touched
+    val dir = graft.ReferenceFixtures("fullAvroFiles/btc")
     val blocks = graft.sources.AvroArchiveSource.readArchive(spark, dir, "blocks")
     val canonical = blocks.select(col("height"),
       BitcoinAdapter.blockHash(

@@ -9,7 +9,7 @@ class TraceReplaySpec extends SparkSpec {
   import spark.implicits._
 
   private def fixtureJson = new String(java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("/root/reference/testdata/blockTraces-1.json")), "UTF-8")
+    java.nio.file.Paths.get(graft.ReferenceFixtures("blockTraces-1.json"))), "UTF-8")
 
   test("splits the reference's replay fixture into per-tx trace records") {
     val in = Seq((15437941L, "0xblock", new java.sql.Timestamp(1000L), fixtureJson))

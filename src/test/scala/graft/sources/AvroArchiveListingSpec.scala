@@ -38,4 +38,23 @@ class AvroArchiveListingSpec extends SparkSpec {
     assert(got.size === 5)
     assert(AvroArchiveSource.listAvroFiles(spark, s"$dir/absent").isEmpty)
   }
+
+  test("ArchiveFs.files sees the same (path, length, mtime) set as a recursive listStatus") {
+    // a Spark-written table: part files, _SUCCESS and their .crc sidecars
+    val dir = java.nio.file.Files.createTempDirectory("walk").resolve("t.parquet").toString
+    spark.range(0, 40, 1, 3).withColumn("b", org.apache.spark.sql.functions.col("id") % 2)
+      .write.partitionBy("b").parquet(dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def statuses(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) statuses(s.getPath) else Seq(s))
+    def fp(ss: Seq[org.apache.hadoop.fs.FileStatus]) =
+      ss.map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).toSet
+    val walked = ArchiveFs.files(fs, root).toSeq
+    assert(fp(walked) === fp(statuses(root)))
+    assert(walked.exists(_.getPath.getName == "_SUCCESS"))
+    val file = walked.find(_.getPath.getName.endsWith(".parquet")).get.getPath
+    assert(fp(ArchiveFs.files(fs, file).toSeq) === fp(Seq(fs.getFileStatus(file))))
+    assert(ArchiveFs.files(fs, new org.apache.hadoop.fs.Path(s"$dir-absent")).isEmpty)
+  }
 }

@@ -46,7 +46,7 @@ class AvroArchiveSinkSpec extends SparkSpec {
 
   test("reference golden file re-encodes losslessly to a reference name") {
     val golden = AvroArchiveSource.read(spark,
-      "/root/reference/testdata/fullAvroFiles/000723744.txes.avro", "txes")
+      graft.ReferenceFixtures("fullAvroFiles/000723744.txes.avro"), "txes")
     val out = Files.createTempDirectory("graft-avro-reenc").toString
     val n = AvroArchiveSink.write(golden.coalesce(1), "txes", out, "snappy")
     assert(n === 423L)

@@ -12,7 +12,7 @@ import graft.SparkSpec
   */
 class AvroArchiveSourceSpec extends SparkSpec {
 
-  private val fixtures = "/root/reference/testdata/fullAvroFiles"
+  private def fixtures = graft.ReferenceFixtures("fullAvroFiles")
 
   test("decodes a single-block Bitcoin file: 1 record, correct height") {
     val df = AvroArchiveSource.read(spark, s"$fixtures/000723744.block.avro", "blocks")

@@ -55,8 +55,8 @@ class ObjectStoreSinkSpec extends SparkSpec {
     val out = newOut()
     val fs = mockFs(out)
     val target = new Path(out, "005000/range-5000_5999.blocks.avro")
-    assert(AvroArchiveSink.claimTarget(fs, target), "first claim wins")
-    assert(!AvroArchiveSink.claimTarget(fs, target), "existing target is skipped")
+    assert(ArchiveFs.claim(fs, target), "first claim wins")
+    assert(!ArchiveFs.claim(fs, target), "existing target is skipped")
   }
 
   test("documented caveat: concurrent object-store claimants can both win; last commit wins") {
@@ -69,7 +69,7 @@ class ObjectStoreSinkSpec extends SparkSpec {
     var aWon = false
     @volatile var aErr: Throwable = null
     val a = new Thread(() => {
-      try aWon = AvroArchiveSink.claimTarget(fs, target)
+      try aWon = ArchiveFs.claim(fs, target)
       catch { case t: Throwable => aErr = t; entered.countDown() }
     })
     a.start()
@@ -78,7 +78,7 @@ class ObjectStoreSinkSpec extends SparkSpec {
 
     // B claims the SAME target inside A's window — its HEAD also sees no
     // object, so it PUTs and wins
-    val bWon = AvroArchiveSink.claimTarget(fs, target)
+    val bWon = ArchiveFs.claim(fs, target)
     assert(bWon, "B claims while A sits in the window")
 
     // A resumes: its PUT is unconditional — A 'wins' too (the race the
@@ -93,8 +93,8 @@ class ObjectStoreSinkSpec extends SparkSpec {
       val t = new Path(out, s".graft-tmp-$tag")
       val os = fs.create(t, true); os.write(tag.getBytes("UTF-8")); os.close(); t
     }
-    AvroArchiveSink.commitClaimed(fs, tempWith("writer-a"), target)
-    AvroArchiveSink.commitClaimed(fs, tempWith("writer-b"), target)
+    ArchiveFs.publish(fs, tempWith("writer-a"), target)
+    ArchiveFs.publish(fs, tempWith("writer-b"), target)
     val in = fs.open(target)
     val buf = new Array[Byte](32)
     val n = in.read(buf); in.close()
@@ -113,7 +113,7 @@ class ObjectStoreSinkSpec extends SparkSpec {
     val ts = (1 to 8).map { _ =>
       new Thread(() => {
         start.await()
-        if (AvroArchiveSink.claimTarget(fs, target)) wins.incrementAndGet()
+        if (ArchiveFs.claim(fs, target)) wins.incrementAndGet()
       })
     }
     ts.foreach(_.start()); start.countDown(); ts.foreach(_.join(30000))
