@@ -114,7 +114,7 @@ object Commands {
       archiveDir: String,
       checkpoint: String): Unit = {
     val blocksDir = s"$archiveDir/blocks"
-    val q = Streams.followHeads(spark, headsDir, headSchema, checkpoint) { (batch, _) =>
+    Streams.followHeads(spark, headsDir, headSchema, checkpoint) { (batch, _) =>
       val spk = batch.sparkSession
       val fresh = batch.dropDuplicates("height")
       val bounds = fresh.agg(min("height").cast("long"), max("height").cast("long")).head()
@@ -136,7 +136,6 @@ object Commands {
           .parquet(blocksDir)
       }
     }
-    q.awaitTermination(120000)
   }
 
   /** `archive` into the reference's OWN on-disk shape: chunk-aligned
@@ -194,7 +193,7 @@ object Commands {
       blockchain: String = "BITCOIN",
       rawTxes: Option[DataFrame] = None,
       rawTraces: Option[DataFrame] = None): Unit = {
-    val q = Streams.followHeads(spark, headsDir, headSchema, checkpoint) { (batch, _) =>
+    Streams.followHeads(spark, headsDir, headSchema, checkpoint) { (batch, _) =>
       val records = batch.select(
         lit(blockchain).as("blockchainType"),
         lit(blockchain).as("blockchainId"),
@@ -226,7 +225,6 @@ object Commands {
       }
       ()
     }
-    q.awaitTermination(120000)
   }
 
   /** `compact` — merge complete aligned chunks into range files, leave

@@ -168,12 +168,11 @@ object StreamOps {
     val ckpt = Files.createTempDirectory("graft-graceful-ckpt").toString
     val schema = Tables.events(s, d).schema
     val drained = s.sparkContext.longAccumulator("drained")
-    val q = s.readStream.schema(schema).parquet(tmp.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+    val q = graft.streaming.Streams
+      .eachBatch(s.readStream.schema(schema).parquet(tmp.toString)) { (b, _) =>
         drained.add(b.count())
       }
+      .option("checkpointLocation", ckpt)
       .start()
     q.processAllAvailable()
     val stopped = graft.streaming.Streams.gracefulStop(q)

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Head event as emitted by the chain subscription (reference:
   * src/blockchain/connection.rs:113-154 — `Height{height, hash}`).
@@ -52,26 +53,58 @@ private case class UpsertState(ts_us: Long, event_id: Long,
   */
 object Streams {
 
+  /** The one foreachBatch seam: a writer for `stream` that runs `onBatch`
+    * on each micro-batch in the session that built `stream`.
+    *
+    * Spark runs every query in a clone of its session, and with artifact
+    * isolation (on by default) each job carries the clone's artifact
+    * state, so the executor builds a class loader per clone and
+    * `CodeGenerator`'s cache, keyed by (loader, code), would miss for
+    * every new query: each `stream` call would compile the same generated
+    * classes, and the JIT compile them, again. So the batch is rebound to
+    * the parent session (its SQL executions take the parent's artifact
+    * state), and the body runs inside the parent's artifact scope, which
+    * covers raw RDD actions too. A body must not embed per-batch literal
+    * values in its plans: those change the generated code, and each batch
+    * compiles again.
+    */
+  def eachBatch(stream: DataFrame)(onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    val parent = stream.sparkSession
+    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      val rebound = Bridge.ofRows(parent, batch.queryExecution.logical)
+      Bridge.withArtifacts(parent)(onBatch(rebound, id))
+    }
+  }
+
+  /** How long [[followHeads]] waits for its query to drain the heads. */
+  @volatile private[graft] var followTimeoutMs: Long = 120000L
+
   /** `stream` live tail (reference: src/command/stream.rs:92-144): follow a
     * parquet directory of head events, archive each height once per block
-    * via foreachBatch. The batch body is the caller's (idempotent writes:
-    * SaveMode.Ignore — stream never overwrites, stream.rs:49-52).
+    * via [[eachBatch]]. The batch body is the caller's (idempotent writes:
+    * SaveMode.Ignore — stream never overwrites, stream.rs:49-52). Returns
+    * the finished query once every available head is processed; a query
+    * still running after [[followTimeoutMs]] is stopped and the call
+    * throws, so no query keeps writing behind a returned command.
     */
   def followHeads(
       spark: SparkSession,
       headsDir: String,
       schema: org.apache.spark.sql.types.StructType,
       checkpoint: String)(
-      onBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(headsDir)
-      .writeStream
+      onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = eachBatch(spark.readStream.schema(schema).parquet(headsDir))(onBatch)
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) => onBatch(batch, id) }
       .start()
+    if (!q.awaitTermination(followTimeoutMs)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"stream query ${q.id} did not finish within $followTimeoutMs ms; stopped it")
+    }
+    q
+  }
 
   /** Finalized-stream dedup + gap-fill (reference:
     * src/blockchain/next_block.rs:42-100): drop heights at or below the last
@@ -320,49 +353,48 @@ object Streams {
       indexDir: String,
       checkpointDir: String)(
       onBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val sigs = graft.dedup.Dedup.minhashSignatures(
-          graft.dedup.Dedup.shingleSets(batch, "doc_id", "text"))
-        val bands = graft.dedup.Dedup.lshBandKeys(sigs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val index =
-          try {
-            val raw = spark.read.parquet(indexDir)
-            // Format guard: the band key became an xxhash64 LONG when the
-            // seam was hashed; an index written by the old string format
-            // would silently match NOTHING through implicit casts (every
-            // indexed near-dup re-admitted). Fail loudly instead — the
-            // documented contract is "rebuild the index on upgrade".
-            val bt = raw.schema("bucket").dataType
-            require(bt == org.apache.spark.sql.types.LongType,
-              s"near-dup index at $indexDir has $bt band keys; this build " +
-                "uses xxhash64 longs — rebuild the index (delete the dir)")
-            raw.select(col("bucket")).distinct()
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException =>
-              spark.emptyDataFrame.select(lit(0L).as("bucket")).limit(0)
-          }
-        val dupVsIndex = bands.join(broadcast(index), Seq("bucket"), "left_semi")
-          .select(col("id"))
-        // first-wins within the batch: later ids sharing a bucket drop
-        val inBatchDup = bands
-          .join(bands.groupBy("bucket").agg(min("id").as("mn")), Seq("bucket"))
-          .filter(col("id") > col("mn"))
-          .select(col("id"))
-        val dropped = dupVsIndex.union(inBatchDup).distinct()
-          .withColumn("dup", lit(true))
-        val verdict = batch.select(col("doc_id"))
-          .join(dropped.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(!col("dup"), lit(true)).as("accepted"))
-        bands.join(verdict.filter(col("accepted")),
-          bands("id") === verdict("doc_id"), "left_semi")
-          .write.mode("append").parquet(indexDir)
-        onBatch(verdict, batchId)
-        bands.unpersist()
-        ()
-      }
+    eachBatch(docs) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val sigs = graft.dedup.Dedup.minhashSignatures(
+        graft.dedup.Dedup.shingleSets(batch, "doc_id", "text"))
+      val bands = graft.dedup.Dedup.lshBandKeys(sigs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val index =
+        try {
+          val raw = spark.read.parquet(indexDir)
+          // Format guard: the band key became an xxhash64 LONG when the
+          // seam was hashed; an index written by the old string format
+          // would silently match NOTHING through implicit casts (every
+          // indexed near-dup re-admitted). Fail loudly instead — the
+          // documented contract is "rebuild the index on upgrade".
+          val bt = raw.schema("bucket").dataType
+          require(bt == org.apache.spark.sql.types.LongType,
+            s"near-dup index at $indexDir has $bt band keys; this build " +
+              "uses xxhash64 longs — rebuild the index (delete the dir)")
+          raw.select(col("bucket")).distinct()
+        } catch {
+          case _: org.apache.spark.sql.AnalysisException =>
+            spark.emptyDataFrame.select(lit(0L).as("bucket")).limit(0)
+        }
+      val dupVsIndex = bands.join(broadcast(index), Seq("bucket"), "left_semi")
+        .select(col("id"))
+      // first-wins within the batch: later ids sharing a bucket drop
+      val inBatchDup = bands
+        .join(bands.groupBy("bucket").agg(min("id").as("mn")), Seq("bucket"))
+        .filter(col("id") > col("mn"))
+        .select(col("id"))
+      val dropped = dupVsIndex.union(inBatchDup).distinct()
+        .withColumn("dup", lit(true))
+      val verdict = batch.select(col("doc_id"))
+        .join(dropped.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(!col("dup"), lit(true)).as("accepted"))
+      bands.join(verdict.filter(col("accepted")),
+        bands("id") === verdict("doc_id"), "left_semi")
+        .write.mode("append").parquet(indexDir)
+      onBatch(verdict, batchId)
+      bands.unpersist()
+      ()
+    }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(0))
       .start()

@@ -23,6 +23,15 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Run `body` with `spark`'s job artifact state active, so every job it
+    * submits (a raw RDD action included) runs under that session's
+    * executor class loader. Jobs under one class loader share
+    * `CodeGenerator`'s compiled-class cache, keyed by (loader, code).
+    */
+  def withArtifacts[T](spark: SparkSession)(body: => T): T =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .artifactManager.withResources(body)
+
   /** Unwrap a sort Column (`col.desc` / `col.asc`) into its child column,
     * whether it ascends, and whether the null ordering is the direction's
     * default — Spark 4 Columns carry `sql.internal.SortOrder` NODES (not

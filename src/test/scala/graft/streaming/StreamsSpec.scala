@@ -29,6 +29,30 @@ class StreamsSpec extends SparkSpec {
     assert(seen.sorted.toSeq === Seq(10L, 11L, 12L))
   }
 
+  test("followHeads stops a query that outlives its timeout and throws, naming it") {
+    val dir = Files.createTempDirectory("graft-heads-slow").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-slow").toString
+    Seq(Head(20L, "a")).toDF().coalesce(1).write.mode("append").parquet(dir)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val saved = Streams.followTimeoutMs
+    Streams.followTimeoutMs = 2000L
+    val ex =
+      try intercept[java.util.concurrent.TimeoutException] {
+        Streams.followHeads(spark, dir, headSchema, ckpt) { (_, _) =>
+          release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          ()
+        }
+      } finally {
+        Streams.followTimeoutMs = saved
+        release.countDown()
+      }
+    val running = spark.streams.active.map(_.id.toString)
+    assert(running.isEmpty, s"queries still running after the timeout: ${running.mkString(", ")}")
+    val named = """stream query (\S+) """.r.findFirstMatchIn(ex.getMessage).map(_.group(1))
+    assert(named.exists(q => scala.util.Try(java.util.UUID.fromString(q)).isSuccess),
+      s"the message must name the query id: ${ex.getMessage}")
+  }
+
   test("finalizedFollower dedups and gap-fills oldest-first across batches") {
     // Memory-source streaming: two batches — 5 then {4 (dup), 8 (gap)}.
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Head](spark, 1)
