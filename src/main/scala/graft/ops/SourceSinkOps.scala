@@ -97,14 +97,14 @@ object SourceSinkOps {
       .agg(count(lit(1)).as("n"), sum("height").as("sum_h"))
   }
 
-  /** The DataSourceV2 WRITE path: `df.write.format("avro-archive")` with
-    * the sink's never-overwrite protocol moved to where V2 puts it — task
-    * temps + serial claim/rename in the driver's `BatchWrite.commit`
-    * (speculative attempts can't race a claim; Spark's task-commit
-    * coordination delivers one message per partition). Cross-
-    * implementation roundtrip: the V2 write lands the range layout and
-    * `readArchive` (the V2 scan over the listed files) reads it back;
-    * scan-avro-pruned proves the other direction (sink write → V2 load).
+  /** The DataSourceV2 WRITE path through its public entry,
+    * `df.write.format("avro-archive")`: the one container write the sink's
+    * wrappers also plan — task temps + serial claim/rename in the driver's
+    * `BatchWrite.commit` (speculative attempts can't race a claim; Spark's
+    * task-commit coordination delivers one message per partition). Entry
+    * roundtrip: the format's default layout lands range files and
+    * `readArchive` (the V2 scan over the listed files) reads them back;
+    * scan-avro-pruned covers the other pair (sink wrapper → format load).
     */
   val sinkAvroV2: Op = Op.sql(
     "sink-avro-v2",

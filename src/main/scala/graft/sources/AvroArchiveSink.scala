@@ -10,14 +10,16 @@ import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.util.Utf8
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{classic, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.AppendData
+import org.apache.spark.sql.execution.{CommandExecutionMode, QueryExecution}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.archive.Filenames
+import graft.sources.v2.AvroArchiveTable
 
 /** Writer for the reference's Avro object-container archive format
   * (reference: src/storage/fs.rs:135-219; codecs snappy | zstd(9),
@@ -27,12 +29,17 @@ import graft.archive.Filenames
   * The Avro schema is DERIVED from the engine's static StructTypes
   * (graft.model.Schemas) — same field names/types the reference embeds.
   *
-  * Commit protocol, shared by [[write]], [[writeSingles]], [[writeChunked]]
-  * and the V2 connector's write side: rows stream into a hidden temp
-  * container ([[TempContainer]]); the closed container's height range
-  * names it ([[targetName]] — the filename IS the metadata,
-  * src/archiver/filenames.rs:51-83); [[ArchiveFs.commit]] claims the name
-  * and publishes the temp onto it, on any scheme (local, HDFS, object
+  * There is one write path: [[write]], [[writeSingles]] and
+  * [[writeChunked]] are thin wrappers that plan an `AppendData` into the
+  * `avro-archive` DataSourceV2 table with a [[Layout]], the same write
+  * `df.write.format("avro-archive")` runs with the default one. Each
+  * task's one `DataWriter` streams its rows into hidden temp containers
+  * ([[TempContainer]]), a new one whenever the layout's split key changes,
+  * and discards them all if the task fails. The DRIVER then commits every
+  * closed container serially, in partition order: its height range names
+  * it ([[targetName]] — the filename IS the metadata,
+  * src/archiver/filenames.rs:51-83), and [[ArchiveFs.commit]] claims the
+  * name and publishes the temp onto it, on any scheme (local, HDFS, object
   * stores — the reference's S3 backend, src/storage/objects.rs:170-330).
   */
 object AvroArchiveSink {
@@ -90,12 +97,13 @@ object AvroArchiveSink {
     }
 
   /** A hidden temp container under `dir` being filled with rows of
-    * `rowSchema`. Record fields are taken by name, so row columns the Avro
-    * schema lacks (split keys) stay out of the file. Tracks the row count
-    * and the min/max of the `heightIdx` column (-1: no height).
+    * `rowSchema` (record fields taken by name, so split keys stay out of
+    * the file), to be named with `fork`. Tracks the row count and the
+    * min/max of the `heightIdx` column (-1: no height).
     */
   private[sources] final class TempContainer(fs: FileSystem, dir: String,
-      rowSchema: StructType, avro: Schema, codec: String, heightIdx: Int) {
+      rowSchema: StructType, avro: Schema, codec: String, heightIdx: Int,
+      val fork: Option[String]) {
     val path = new Path(dir, s".graft-tmp-${UUID.randomUUID()}")
     var n = 0L
     var minH = Long.MaxValue
@@ -134,14 +142,6 @@ object AvroArchiveSink {
     }
   }
 
-  /** Reference kind of an archive table — one with a height column and a
-    * kind alias the reference knows; None routes to flat part-file names.
-    */
-  private[sources] def refKind(kind: String, schema: StructType,
-      heightCol: String): Option[String] =
-    scala.util.Try(Filenames.normalizeKind(kind)).toOption
-      .filter(_ => schema.fieldNames.contains(heightCol))
-
   /** Relative final name of a closed container: `L1/L2/<h>[.<hash>].<suffix>
     * .avro` for one height, `L1/range-<min>_<max>.<kind>.avro` otherwise
     * (filenames.rs:51-83); tables without a reference kind land at flat
@@ -154,9 +154,18 @@ object AvroArchiveSink {
     case None                    => f"part-$pid%05d.$kind.avro"
   }
 
+  /** How a write's rows become containers: `record` holds the Avro
+    * record's columns (rows may carry more, such as a split key), a new
+    * container starts whenever the `splitCols` values change and takes its
+    * fork-hash name from `forkCol` of its first row, and a taken name fails
+    * the write when `failIfTaken`, else drops the container.
+    */
+  private[sources] final case class Layout(record: StructType,
+      splitCols: Seq[String], forkCol: Option[String], failIfTaken: Boolean)
+
   /** Write `df` as one Avro container file per partition under `outDir`.
     *
-    * Archive kinds (blocks/txes/traces aliases) with a `heightCol` column
+    * Archive kinds (blocks/txes/traces aliases) with a `height` column
     * get the reference's discoverable layout: each partition lands at
     * `L1/range-<min>_<max>.<kind>.avro`, or `L1/L2/<h>.<suffix>.avro` when
     * it holds a single height. Callers control file ranges by partitioning
@@ -167,15 +176,12 @@ object AvroArchiveSink {
     * Returns the number of records written.
     */
   def write(df: DataFrame, kind: String, outDir: String,
-      codec: String = "snappy", heightCol: String = "height",
-      forkHashCol: Option[String] = None): Long =
-    writeSplits(df, kind, outDir, codec, df.schema,
-      refKind(kind, df.schema, heightCol), heightCol, forkHashCol,
-      splitCols = Nil, failIfTaken = true)
+      codec: String = "snappy", forkHashCol: Option[String] = None): Long =
+    append(df, kind, outDir, codec, Layout(df.schema, Nil, forkHashCol, failIfTaken = true))
 
-  /** Write one single-height container PER HEIGHT (the stream command's
-    * file shape: one `L1/L2/<h>[.<hash>].<suffix>.avro` per archived
-    * block, reference src/command/stream.rs + archiver.rs:53-113).
+  /** Write one single-height snappy container PER HEIGHT (the stream
+    * command's file shape: one `L1/L2/<h>[.<hash>].<suffix>.avro` per
+    * archived block, reference src/command/stream.rs + archiver.rs:53-113).
     * Existing targets are SKIPPED, not overwritten — the reference
     * stream's `overwrite: false` (stream.rs:49-52), which is what makes
     * replays idempotent. Rows are co-partitioned by height and split into
@@ -184,84 +190,39 @@ object AvroArchiveSink {
     * file. Returns the number of records in files that actually landed.
     */
   def writeSingles(df: DataFrame, kind: String, outDir: String,
-      codec: String = "snappy", heightCol: String = "height",
       forkHashCol: Option[String] = None): Long = {
-    val split = heightCol +: forkHashCol.toSeq
-    writeSplits(df.repartition(col(heightCol)).sortWithinPartitions(split.map(col): _*),
-      kind, outDir, codec, df.schema, Some(Filenames.normalizeKind(kind)),
-      heightCol, forkHashCol, split, failIfTaken = false)
+    val split = "height" +: forkHashCol.toSeq
+    append(df.repartition(col("height")).sortWithinPartitions(split.map(col): _*),
+      kind, outDir, "snappy", Layout(df.schema, split, forkHashCol, failIfTaken = false))
   }
 
-  /** One container PER CHUNK (the compact command's range files): rows are
-    * co-partitioned by `chunkCol` and split on chunk boundaries INSIDE
+  /** One zstd container PER CHUNK (the compact command's range files): rows
+    * are co-partitioned by `chunkCol` and split on chunk boundaries INSIDE
     * each sorted partition — hash-partition collisions can therefore never
     * merge two chunks into one file. Each file is named from its own
     * min/max height (`L1/range-<s>_<e>.<kind>.avro`, or a single path for
     * one-height chunks); existing targets are kept (create-if-absent).
     * Returns records written into files that landed.
     */
-  def writeChunked(df: DataFrame, kind: String, outDir: String,
-      chunkCol: String, codec: String = "zstd",
-      heightCol: String = "height"): Long =
-    writeSplits(
-      df.repartition(col(chunkCol)).sortWithinPartitions(col(chunkCol), col(heightCol)),
-      kind, outDir, codec,
+  def writeChunked(df: DataFrame, kind: String, outDir: String, chunkCol: String): Long =
+    append(df.repartition(col(chunkCol)).sortWithinPartitions(col(chunkCol), col("height")),
+      kind, outDir, "zstd",
       // the chunk key drives file splitting but is NOT part of the record
-      StructType(df.schema.fields.filterNot(_.name == chunkCol)),
-      Some(Filenames.normalizeKind(kind)), heightCol, None, Seq(chunkCol),
-      failIfTaken = false)
+      Layout(StructType(df.schema.fields.filterNot(_.name == chunkCol)), Seq(chunkCol),
+        None, failIfTaken = false))
 
-  /** The v1 write loop: every partition's rows, in order, fill temp
-    * containers of `recordSchema`; a new container starts whenever the
-    * `splitCols` values change, and each closed one is committed under its
-    * [[targetName]] (a fork-hash name takes the first row's hash). Returns
-    * the records in containers that landed.
+  /** Plan the `avro-archive` append of `df` under `layout` and run it in the
+    * caller's job context, as an RDD action runs: a SQL execution of its own
+    * would describe the plan for the listeners on every write (~15% of a
+    * small write's driver CPU). Returns the records in containers that landed.
     */
-  private def writeSplits(df: DataFrame, kind: String, outDir: String,
-      codec: String, recordSchema: StructType, ref: Option[String],
-      heightCol: String, forkHashCol: Option[String], splitCols: Seq[String],
-      failIfTaken: Boolean): Long = {
-    val schema = df.schema
-    val avroJson = avroSchema(recordSchema, kind).toString
-    val hIdx = ref.fold(-1)(_ => schema.fieldIndex(heightCol))
-    val fIdx = forkHashCol.filter(_ => ref.isDefined).fold(-1)(schema.fieldIndex)
-    val keys = splitCols.map(c => (schema.fieldIndex(c), schema(c).dataType)).toArray
-    val conf = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    ArchiveFs.mkdirs(ArchiveFs.fs(new Path(outDir), conf.value), new Path(outDir))
-    // Catalyst rows are reused between calls: keys copy their values out
-    def copied(row: InternalRow, i: Int, dt: DataType): Any =
-      if (row.isNullAt(i)) null
-      else row.get(i, dt) match {
-        case s: UTF8String => s.toString
-        case v             => v
-      }
-    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val fs = ArchiveFs.fs(new Path(outDir), conf.value)
-      val avro = new Schema.Parser().parse(avroJson)
-      var landed = 0L
-      var open: TempContainer = null
-      var key: Seq[Any] = Nil
-      var fork: Option[String] = None
-      def close(): Unit = if (open != null) {
-        open.close()
-        val target = new Path(outDir,
-          targetName(kind, ref, pid, open.minH, open.maxH, fork))
-        if (ArchiveFs.commit(fs, open.path, target, failIfTaken)) landed += open.n
-        open = null
-      }
-      rows.foreach { row =>
-        val k = keys.toSeq.map { case (i, dt) => copied(row, i, dt) }
-        if (open == null || k != key) {
-          close()
-          key = k
-          fork = if (fIdx < 0) None else Option(copied(row, fIdx, StringType)).map(_.toString)
-          open = new TempContainer(fs, outDir, schema, avro, codec, hIdx)
-        }
-        open.append(row)
-      }
-      close()
-      Iterator.single(landed)
-    }.sum().toLong
+  private def append(df: DataFrame, kind: String, outDir: String, codec: String,
+      layout: Layout): Long = {
+    val table = new AvroArchiveTable(df.schema, kind, outDir, layout = Some(layout))
+    new QueryExecution(df.sparkSession.asInstanceOf[classic.SparkSession],
+      AppendData.byPosition(DataSourceV2Relation.create(table, None, None),
+        df.queryExecution.analyzed, Map("codec" -> codec)),
+      mode = CommandExecutionMode.SKIP).executedPlan.executeCollect()
+    table.landed
   }
 }

@@ -2,6 +2,9 @@ package graft.sources.v2
 
 import java.util
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.Try
+
 import org.apache.avro.Schema
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
@@ -74,11 +77,14 @@ class AvroArchiveDataSource extends TableProvider with DataSourceRegister {
 /** The archive's `kind` files under `dir`, listed at plan time — or, when
   * `files` is given, exactly those files, whatever their names' kind. A
   * schema field named [[AvroArchiveSource.PathColumn]] is filled with each
-  * record's file, as the string it was listed by.
+  * record's file, as the string it was listed by. A write lays its rows out
+  * by `layout` and leaves the number of records that landed in [[landed]].
   */
 final class AvroArchiveTable(tableSchema: StructType, kind: String, dir: String,
-    files: Option[Seq[String]] = None)
+    files: Option[Seq[String]] = None,
+    layout: Option[AvroArchiveSink.Layout] = None)
     extends Table with SupportsRead with SupportsWrite {
+  @volatile private[sources] var landed = 0L
   override def name(): String = s"avro-archive($kind, ${files.fold(dir)(f => s"${f.size} files")})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -86,9 +92,15 @@ final class AvroArchiveTable(tableSchema: StructType, kind: String, dir: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new AvroArchiveScanBuilder(tableSchema, kind, dir, files,
       options.getBoolean("lenient", false))
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new AvroArchiveWriteBuilder(info.schema(), kind, dir,
-      Option(info.options.get("codec")).getOrElse("snappy"))
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
+    override def build(): Write = new Write {
+      override def toBatch: BatchWrite = new AvroArchiveBatchWrite(info.schema(), kind, dir,
+        Option(info.options.get("codec")).getOrElse("snappy"),
+        layout.getOrElse(AvroArchiveSink.Layout(info.schema(), Nil, None, failIfTaken = true)),
+        new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration),
+        n => landed = n)
+    }
+  }
 }
 
 final class AvroArchiveScanBuilder(fullSchema: StructType, kind: String,
@@ -212,76 +224,103 @@ final class AvroPartitionReaderFactory(conf: SerializableConfiguration,
   }
 }
 
-/** The connector's write side: `df.write.format("avro-archive")
-  * .option("kind", ...).mode("append").save(dir)`, on the sink's commit
-  * protocol with the commit moved to the driver: every task streams its
-  * partition into a temp container and reports (temp, min/max height,
-  * count); the DRIVER then commits them serially ([[ArchiveFs.commit]]).
-  * Spark's task-commit coordination guarantees one message per partition,
-  * so a speculative duplicate attempt can never race a claim. A name
-  * collision (two partitions covering the same height range, or a
-  * pre-existing archive file) fails the JOB, and the abort deletes every
-  * temp not yet published.
+/** The connector's write side, and the ONE way a container is written:
+  * `df.write.format("avro-archive").option("kind", ...).mode("append")
+  * .save(dir)` and the sink's wrappers ([[AvroArchiveSink.write]],
+  * `writeSingles`, `writeChunked`) all run it. Every task streams its
+  * partition into temp containers (a new one whenever the layout's split
+  * key changes) and reports them; the DRIVER then commits them serially,
+  * in partition order ([[ArchiveFs.commit]], its only caller). Spark's
+  * task-commit coordination guarantees one message per partition, so a
+  * speculative duplicate attempt can never race a claim. A taken name
+  * either fails the JOB (then the abort deletes every temp not yet
+  * published) or drops its container, by the layout's policy.
   */
-final class AvroArchiveWriteBuilder(schema: StructType, kind: String,
-    dir: String, codec: String) extends WriteBuilder {
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new AvroArchiveBatchWrite(
-      schema, kind, dir, codec,
-      new SerializableConfiguration(
-        SparkSession.active.sparkContext.hadoopConfiguration))
-  }
-}
+final case class AvroTemp(path: String, minH: Long, maxH: Long, n: Long,
+    fork: Option[String])
 
-final case class AvroWriteCommit(tmpPath: String, partitionId: Int,
-    minH: Long, maxH: Long, n: Long) extends WriterCommitMessage
+final case class AvroWriteCommit(partitionId: Int, temps: Seq[AvroTemp])
+    extends WriterCommitMessage
 
-final class AvroArchiveBatchWrite(schema: StructType, kind: String,
-    dir: String, codec: String, conf: SerializableConfiguration)
-    extends BatchWrite {
+final class AvroArchiveBatchWrite(schema: StructType, kind: String, dir: String,
+    codec: String, layout: AvroArchiveSink.Layout, conf: SerializableConfiguration,
+    report: Long => Unit) extends BatchWrite {
 
-  private val refKind = AvroArchiveSink.refKind(kind, schema, "height")
+  // a table without a height column or a reference kind lands at flat part
+  // names, one per partition — never a split layout's many containers
+  private val ref =
+    if (layout.splitCols.nonEmpty) Some(Filenames.normalizeKind(kind))
+    else Try(Filenames.normalizeKind(kind)).toOption
+      .filter(_ => layout.record.fieldNames.contains("height"))
   private lazy val fs = ArchiveFs.fs(new Path(dir), conf.value)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new AvroArchiveWriterFactory(schema, kind, dir, codec, conf,
-      refKind.isDefined)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    ArchiveFs.mkdirs(fs, new Path(dir))
+    new AvroArchiveWriterFactory(schema, kind, dir, codec, layout,
+      if (ref.isDefined) schema.fieldIndex("height") else -1, conf)
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: AvroWriteCommit if m.n > 0 =>
-      val target = new Path(dir, AvroArchiveSink.targetName(
-        kind, refKind, m.partitionId, m.minH, m.maxH, fork = None))
-      ArchiveFs.commit(fs, new Path(m.tmpPath), target, failIfTaken = true)
-    }
+    report(messages.iterator.collect { case m: AvroWriteCommit => m }
+      .flatMap(m => m.temps.iterator.map(m.partitionId -> _))
+      .map { case (pid, t) =>
+        val target = new Path(dir,
+          AvroArchiveSink.targetName(kind, ref, pid, t.minH, t.maxH, t.fork))
+        if (ArchiveFs.commit(fs, new Path(t.path), target, layout.failIfTaken)) t.n else 0L
+      }.sum)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: AvroWriteCommit =>
-      try ArchiveFs.delete(fs, new Path(m.tmpPath)) catch { case _: Throwable => () }
-    }
+    messages.collect { case m: AvroWriteCommit => m.temps.foreach { t =>
+      try ArchiveFs.delete(fs, new Path(t.path)) catch { case _: Throwable => () }
+    } }
 }
 
+/** One writer per task: its rows, in order, fill temp containers, a new one
+  * whenever the layout's split key changes, named with the fork hash of its
+  * first row (reference singles only: `heightIdx` >= 0). `commit` reports
+  * every container; `abort` discards them all, none of them published yet.
+  */
 final class AvroArchiveWriterFactory(schema: StructType, kind: String,
-    dir: String, codec: String, conf: SerializableConfiguration,
-    trackHeight: Boolean) extends DataWriterFactory {
+    dir: String, codec: String, layout: AvroArchiveSink.Layout, heightIdx: Int,
+    conf: SerializableConfiguration) extends DataWriterFactory {
 
-  private val schemaJson = AvroArchiveSink.avroSchema(schema, kind).toString
+  private val avroJson = AvroArchiveSink.avroSchema(layout.record, kind).toString
+  private val keys = layout.splitCols.map(c => (schema.fieldIndex(c), schema(c).dataType))
+  private val forkIdx = layout.forkCol.filter(_ => heightIdx >= 0).fold(-1)(schema.fieldIndex)
+
+  // Catalyst rows are reused between calls: keys copy their values out
+  private def copied(row: InternalRow, i: Int, dt: DataType): Any =
+    if (row.isNullAt(i)) null
+    else row.get(i, dt) match {
+      case s: UTF8String => s.toString
+      case v             => v
+    }
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val fs = ArchiveFs.fs(new Path(dir), conf.value)
-      private val out = new AvroArchiveSink.TempContainer(fs, dir, schema,
-        new Schema.Parser().parse(schemaJson), codec,
-        if (trackHeight) schema.fieldIndex("height") else -1)
+      private val avro = new Schema.Parser().parse(avroJson)
+      private val temps = ArrayBuffer.empty[AvroArchiveSink.TempContainer]
+      private var key: Seq[Any] = Nil
 
-      override def write(row: InternalRow): Unit = out.append(row)
-
-      override def commit(): WriterCommitMessage = {
-        out.close()
-        if (out.n == 0L) ArchiveFs.delete(fs, out.path)
-        AvroWriteCommit(out.path.toString, partitionId, out.minH, out.maxH, out.n)
+      override def write(row: InternalRow): Unit = {
+        val k = keys.map { case (i, dt) => copied(row, i, dt) }
+        if (temps.isEmpty || k != key) {
+          temps.lastOption.foreach(_.close())
+          key = k
+          temps += new AvroArchiveSink.TempContainer(fs, dir, schema, avro, codec, heightIdx,
+            if (forkIdx < 0) None else Option(row.getUTF8String(forkIdx)).map(_.toString))
+        }
+        temps.last.append(row)
       }
 
-      override def abort(): Unit = out.discard()
+      override def commit(): WriterCommitMessage = {
+        temps.lastOption.foreach(_.close())
+        AvroWriteCommit(partitionId,
+          temps.map(t => AvroTemp(t.path.toString, t.minH, t.maxH, t.n, t.fork)).toSeq)
+      }
+
+      override def abort(): Unit = temps.foreach(_.discard())
 
       override def close(): Unit = ()
     }

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -109,17 +110,52 @@ class AvroArchiveSinkSpec extends SparkSpec {
     assert(AvroArchiveSource.readArchive(spark, out, "blocks").count() === 20L)
   }
 
+  /** Files under `out` whose names mark a hidden temp container. */
+  private def temps(out: String): Seq[String] =
+    ArchiveFs.files(ArchiveFs.fs(spark, out), new Path(out)).map(_.getPath.getName)
+      .filter(_.startsWith(".graft-tmp-")).toSeq
+
   test("colliding file ranges are never overwritten") {
     // two partitions holding the same single height would produce the same
     // path — the write must refuse, like the reference's create(overwrite
-    // = false) (src/storage/fs.rs:33-39)
+    // = false) (src/storage/fs.rs:33-39). The driver commits, so the
+    // refusal arrives as itself, not wrapped in a task failure.
     val rows = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(blockRow(7L), blockRow(7L)), 2), Schemas.block)
     val out = Files.createTempDirectory("graft-avro-collide").toString
-    val e = intercept[org.apache.spark.SparkException] {
+    val e = intercept[IllegalStateException] {
       AvroArchiveSink.write(rows, "blocks", out, "snappy")
     }
-    assert(e.getMessage.contains("never overwritten") ||
-      Option(e.getCause).exists(_.getMessage.contains("never overwritten")))
+    assert(e.getMessage.contains("never overwritten"))
+    // the first container landed and stays intact; the loser left no temp
+    val files = AvroArchiveSource.listAvroFiles(spark, out)
+    assert(files.size === 1 && files.head.endsWith("/000000007.block.avro"), files)
+    val back = AvroArchiveSource.readArchive(spark, out, "blocks").collect()
+    assert(back.map(_.getAs[Long]("height")).toSeq === Seq(7L))
+    assert(temps(out).isEmpty)
+  }
+
+  test("a failed write leaves no temp container behind") {
+    // one partition of 40 blocks whose json fails at height 25: the task
+    // dies with a temp container open, and its abort must discard it
+    val bad = spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 40L).map(blockRow), 1), Schemas.block)
+      .withColumn("json",
+        when(col("height") === 25L, raise_error(lit("boom"))).otherwise(col("json")))
+    val writes = Seq[(String, String => Unit)](
+      "write" -> (AvroArchiveSink.write(bad, "blocks", _)),
+      "writeSingles" -> (AvroArchiveSink.writeSingles(bad, "blocks", _)),
+      "writeChunked" -> (AvroArchiveSink.writeChunked(
+        bad.withColumn("chunk", floor(col("height") / 10).cast("long")), "blocks", _, "chunk")),
+      "save" -> (bad.write.format("avro-archive").option("kind", "blocks")
+        .mode("append").save(_)))
+    writes.foreach { case (name, writeTo) =>
+      val out = Files.createTempDirectory(s"graft-avro-fail-$name").toString
+      val e = intercept[Exception](writeTo(out))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("boom")), name)
+      assert(temps(out).isEmpty, s"$name left ${temps(out)}")
+      assert(AvroArchiveSource.listAvroFiles(spark, out).isEmpty, name)
+    }
   }
 }
