@@ -1,10 +1,14 @@
 package graft.commands
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import graft.archive.Catalog
-import graft.model.ChainAdapter
+import graft.model.{ChainAdapter, Schemas}
 import graft.sources.{ArchiveFs, AvroArchiveSource}
 
 /** The reference `verify` command's FULL pipeline (src/command/verify.rs):
@@ -19,17 +23,19 @@ import graft.sources.{ArchiveFs, AvroArchiveSource}
   *      parse via ChainAdapter, chain-link continuity, top hash vs the
   *      canonical chain (:798-905); txes/traces: expected-txid
   *      reconciliation from the block JSON, duplicate/unexpected/missing
-  *      txids, non-null payload fields (:648-783);
+  *      txids, non-null payload fields (:648-783) — [[checkBatch]];
   *   4. per-kind-file-set deletion verdicts; --fix.clean widens any broken
   *      kind to the whole batch (:479-513); --dry-run suppresses deletes
   *      (:272-303, src/global.rs:48-57).
   *
   * Shape: the listing is already on the driver, so the filename passes run
   * there as plain loops, like the reference's; Spark runs only where
-  * archive records are read. The reference verifies batch-by-batch under a
-  * semaphore of 4; here EVERY batch is checked in one distributed
-  * aggregation per kind, and only catalog-sized file lists ever reach the
-  * driver (same scale as the reference's deletion list).
+  * archive records are read. The reference checks one merge batch's tables
+  * in one function under a semaphore of 4; here one cogroup brings each
+  * batch's slim block and tx rows into one task, where [[checkBatch]] runs
+  * every content check of the batch as plain Scala. Only the per-batch
+  * counts reach the driver, which assembles the verdicts and the deletions
+  * over catalog-sized data (same scale as the reference's deletion list).
   *
   * Offline, the live data-provider becomes the `canonical` DataFrame of
   * (height, hash) — the same lookups verify.rs makes via
@@ -137,14 +143,83 @@ object VerifyFull {
     Fates(deletions.result(), live.result())
   }
 
-  /** The canonical hash at each of `heights`, read from the offline chain
-    * oracle in one small query (heights without a non-null hash are
-    * absent).
+  /** Every canonical (height, hash) row at `heights`, null hashes
+    * included, read from the offline chain oracle in one small query.
+    */
+  private def canonicalRows(canonical: DataFrame, heights: Seq[Long]): Seq[(Long, String)] =
+    canonical.filter(col("height").isin(heights: _*))
+      .select(col("height").cast("long"), col("hash"))
+      .collect().toSeq.map(r => r.getLong(0) -> r.getString(1))
+
+  /** The canonical hash at each of `heights` (heights without a non-null
+    * hash are absent).
     */
   def canonicalLookup(canonical: DataFrame)(heights: Seq[Long]): Map[Long, String] =
-    canonical.filter(col("height").isin(heights: _*) && col("hash").isNotNull)
-      .select(col("height").cast("long"), col("hash"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    canonicalRows(canonical, heights).filter(_._2 != null).toMap
+
+  /** One decoded block record: its height and the hash, parent hash
+    * (null where the JSON lacks them, or does not parse) and txids of its
+    * JSON.
+    */
+  final case class BlockRec(height: Long, hash: String, parent: String, txids: Seq[String])
+
+  /** One txes or traces record: its kind, its txid, and whether a payload
+    * field the options require is null or empty (verify_field_non_null).
+    */
+  final case class TxRec(kind: String, txid: String, bad: Boolean)
+
+  /** A batch's block checks; `topBad` is `None` when the batch has no
+    * record at its end height or the chain has no row there.
+    */
+  final case class BlockCounts(n: Long, nd: Long, rangeViol: Long, badJson: Long,
+      breaks: Long, topBad: Option[Long])
+
+  /** A batch's checks of one tx kind against the txids its blocks expect. */
+  final case class KindCounts(badNull: Long, n: Long, nd: Long, unexpected: Long,
+      missing: Long)
+
+  /** Everything the content checks count in one batch: the block counts if
+    * it has block records, and the counts of each tx kind it has records of.
+    */
+  final case class BatchCounts(blocks: Option[BlockCounts], kinds: Map[String, KindCounts])
+
+  /** Step 3 for one merge batch [gs, ge], the way verify_content checks a
+    * batch's tables (verify.rs:516-577): coverage and duplicate heights,
+    * range violations, unparsed JSON, chain links ((h).hash = (h+1).parent
+    * over every pair of records), the top hash against every canonical
+    * hash at `ge` (`canonicalAtEnd`), and per tx kind the payload checks,
+    * duplicate, unexpected and missing txids against the txids the block
+    * JSON lists (verify.rs:648-905). A null never matches, as in SQL.
+    */
+  def checkBatch(gs: Long, ge: Long, blocks: Iterable[BlockRec], txs: Iterable[TxRec],
+      canonicalAtEnd: Seq[String]): BatchCounts = {
+    val differ = (a: String, b: String) => a != null && b != null && a != b
+    val bs = blocks.toIndexedSeq
+    val byHeight = bs.groupBy(_.height)
+    val tops = byHeight.getOrElse(ge, Nil)
+    val blockCounts = if (bs.isEmpty) None else Some(BlockCounts(
+      n = bs.size,
+      nd = byHeight.size,
+      rangeViol = bs.count(b => b.height < gs || b.height > ge),
+      badJson = bs.count(b => b.hash == null || b.parent == null),
+      breaks = bs.map(b => byHeight.getOrElse(b.height + 1, Nil)
+        .count(next => differ(b.hash, next.parent)).toLong).sum,
+      topBad =
+        if (tops.isEmpty || canonicalAtEnd.isEmpty) None
+        else Some(tops.map(t => canonicalAtEnd.count(differ(t.hash, _)).toLong).sum)))
+    val expected = bs.flatMap(_.txids).filter(_ != null)
+    val expectedSet = expected.toSet
+    val kinds = txs.groupBy(_.kind).map { case (kind, rows) =>
+      val ids = rows.map(_.txid).toSet
+      kind -> KindCounts(
+        badNull = rows.count(_.bad),
+        n = rows.size,
+        nd = (ids - null).size,
+        unexpected = rows.count(r => !expectedSet(r.txid)),
+        missing = expected.count(!ids(_)))
+    }
+    BatchCounts(blockCounts, kinds)
+  }
 
   /** `knownFiles` lets a caller that already listed the archive (a
     * preceding archive/compact/fix in the same session) share its catalog
@@ -166,166 +241,90 @@ object VerifyFull {
     // work is the canonical lookup for contested heights
     val fates = preprocess(Catalog.entries(allFiles, startH, endH), opts,
       canonicalLookup(canonical))
-    val deletions = Seq.newBuilder[(String, String)] ++= fates.deletions
     val liveRows = fates.live
     val filesOf: Map[String, Seq[String]] =
       liveRows.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
+    val batches = liveRows.groupBy(t => (t._3, t._4)).toSeq.sortBy(_._1)
+    val txKinds = Seq("txes" -> opts.checkTxes, "traces" -> opts.checkTraces)
+      .collect { case (k, true) => k }
 
-    // ---- 3a. block content: coverage, dup heights, JSON parse, chain
-    // links, top hash (verify.rs:798-905) — ONE aggregation over every
-    // batch at once
-    val batchKey = Seq("group_s", "group_e")
-    // file→batch attribution is already on the driver — a LocalRelation
-    // broadcast
-    val fileBatch = broadcast(
-      liveRows.toDF("_path", "kind", "group_s", "group_e"))
-    val blockRows = AvroArchiveSource
-      .readArchiveFilesWithPath(spark, filesOf.getOrElse("blocks", Seq.empty), "blocks",
+    // ---- 3. every batch's content in one pass: the slim rows of each kind
+    // (file→batch attribution is a broadcast LocalRelation), cogrouped by
+    // batch, checked by checkBatch; only per-batch counts return
+    val fileBatch = broadcast(liveRows.toDF("_path", "kind", "group_s", "group_e"))
+    def read(kind: String): DataFrame = AvroArchiveSource
+      .readArchiveFilesWithPath(spark, filesOf.getOrElse(kind, Seq.empty), kind,
         lenient = true) // a corrupt container = records stop → coverage dooms it
-      .join(fileBatch.filter(col("kind") === "blocks").drop("kind"), Seq("_path"))
+      .join(fileBatch.filter(col("kind") === kind).drop("kind"), Seq("_path"))
+    val batchOf = (r: Row) => (r.getLong(0), r.getLong(1))
+    val blockRecs = read("blocks")
       .withColumn("_p", adapter.parseBlock(col("json").cast("string")))
-      .select(col("group_s"), col("group_e"), col("height"),
-        adapter.blockHash(col("_p")).as("_bhash"),
-        adapter.parentHash(col("_p")).as("_bparent"),
-        adapter.txIds(col("_p")).as("_btxs"))
-      .cache()
-
-    val bAgg = blockRows.groupBy(batchKey.map(col): _*).agg(
-      count(lit(1)).as("b_n"),
-      countDistinct(col("height")).as("b_nd"),
-      sum(when(col("height") < col("group_s") || col("height") > col("group_e"), 1)
-        .otherwise(0)).as("b_range_viol"),
-      sum(when(col("_bhash").isNull || col("_bparent").isNull, 1).otherwise(0))
-        .as("b_bad_json"))
-
-    // chain links: (h).hash must equal (h+1).parent — the win-chain-link
-    // self-equi-join shape, never a global window
-    val lhs = blockRows.select(col("group_s"), col("group_e"),
-      col("height"), col("_bhash"))
-    val rhs = blockRows.select(col("group_s"), col("group_e"),
-      (col("height") - 1).as("height"), col("_bparent"))
-    val bBreaks = lhs.join(rhs, batchKey :+ "height")
-      .filter(col("_bhash") =!= col("_bparent"))
-      .groupBy(batchKey.map(col): _*).agg(count(lit(1)).as("b_breaks"))
-
-    // top hash vs the canonical chain (verify.rs:893-903): tops are
-    // one-per-batch — broadcast them against the big canonical table
-    val tops = blockRows.filter(col("height") === col("group_e"))
-      .select(col("group_s"), col("group_e"), col("height"), col("_bhash"))
-    val bTop = canonical
-      .join(broadcast(tops), Seq("height"))
-      .groupBy(batchKey.map(col): _*)
-      .agg(sum(when(col("_bhash") =!= col("hash"), 1).otherwise(0)).as("b_top_bad"))
-
-    // ---- 3b. per-batch expected txids from the block JSON, then tx/trace
-    // reconciliation (verify.rs:648-783). Computed for every batch; the
-    // verdict only *consults* them where blocks are OK (the reference
-    // cannot verify txes under a corrupt block and must keep them).
-    val expected = blockRows
-      .select(col("group_s"), col("group_e"), explode_outer(col("_btxs")).as("txid"))
-      .filter(col("txid").isNotNull)
-
-    val cached = Seq.newBuilder[DataFrame]
-    def tableChecks(kind: String, payloadChecks: DataFrame => org.apache.spark.sql.Column)
-        : DataFrame = {
-      val raw = AvroArchiveSource
-        .readArchiveFilesWithPath(spark, filesOf.getOrElse(kind, Seq.empty), kind,
-          lenient = true)
-        .join(fileBatch.filter(col("kind") === kind).drop("kind"), Seq("_path"))
-      // evaluate the payload checks BEFORE caching and keep only (batch,
-      // txid, verdict-bit): caching full rows would pin every json/raw
-      // payload in memory — at archive scale the slim projection is ~50
-      // bytes/tx while the raw record is KBs
-      val rows = raw
-        .withColumn("_bad", when(payloadChecks(raw), 0).otherwise(1))
-        .select(col("group_s"), col("group_e"), col("txid"), col("_bad"))
-        .cache()
-      cached += rows
-      val perBatch = rows.groupBy(batchKey.map(col): _*).agg(
-        sum(col("_bad")).as(s"${kind}_bad_null"),
-        count(lit(1)).as(s"${kind}_n"),
-        countDistinct(col("txid")).as(s"${kind}_nd"))
-      val unexpected = rows.select(col("group_s"), col("group_e"), col("txid"))
-        .join(expected, batchKey :+ "txid", "left_anti")
-        .groupBy(batchKey.map(col): _*).agg(count(lit(1)).as(s"${kind}_unexpected"))
-      val missing = expected
-        .join(rows.select(col("group_s"), col("group_e"), col("txid")),
-          batchKey :+ "txid", "left_anti")
-        .groupBy(batchKey.map(col): _*).agg(count(lit(1)).as(s"${kind}_missing"))
-      perBatch
-        .join(unexpected, batchKey, "left")
-        .join(missing, batchKey, "left")
+      .select(col("group_s"), col("group_e"), col("height"), adapter.blockHash(col("_p")),
+        adapter.parentHash(col("_p")), adapter.txIds(col("_p")))
+      .rdd.map(r => batchOf(r) -> BlockRec(r.getLong(2), r.getString(3), r.getString(4),
+        Option(r.getSeq[String](5)).fold(Seq.empty[String])(_.toSeq)))
+    val nonNullBin = (c: Column) => c.isNotNull && length(c) > 0 && c.cast("string") =!= "null"
+    val payloadOk = Map(
+      "txes" -> (nonNullBin(col("json")) && col("raw").isNotNull && length(col("raw")) > 0),
+      "traces" -> ((if (opts.includeTrace) nonNullBin(col("traceJson")) else lit(true)) &&
+        (if (opts.includeStateDiff) nonNullBin(col("stateDiffJson")) else lit(true))))
+    val txRecs = txKinds.map { kind =>
+      read(kind).select(col("group_s"), col("group_e"), col("txid"),
+          when(payloadOk(kind), false).otherwise(true))
+        .rdd.map(r => batchOf(r) -> TxRec(kind, r.getString(2), r.getBoolean(3)))
+    }.reduceOption(_ union _).getOrElse(spark.sparkContext.emptyRDD[((Long, Long), TxRec)])
+    // the top hash: every canonical row at each batch end with a block file
+    val canonicalAtEnd = {
+      val ends = liveRows.collect { case (_, "blocks", _, ge) => ge }.distinct
+      if (ends.isEmpty) Map.empty[Long, Seq[String]]
+      else canonicalRows(canonical, ends).groupBy(_._1).map { case (h, rs) => h -> rs.map(_._2) }
     }
+    val counts: Map[(Long, Long), BatchCounts] =
+      if (batches.isEmpty) Map.empty
+      else blockRecs.cogroup(txRecs,
+          new HashPartitioner(math.min(batches.size, spark.sparkContext.defaultParallelism)))
+        .map { case ((gs, ge), (bs, ts)) =>
+          (gs, ge) -> checkBatch(gs, ge, bs, ts, canonicalAtEnd.getOrElse(ge, Nil))
+        }
+        .collect().toMap
 
-    val nonNullBin = (c: org.apache.spark.sql.Column) =>
-      c.isNotNull && length(c) > 0 && c.cast("string") =!= "null"
-    val txChecks =
-      if (!opts.checkTxes) None
-      else Some(tableChecks("txes",
-        r => nonNullBin(r("json")) && r("raw").isNotNull && length(r("raw")) > 0))
-    val traceChecks =
-      if (!opts.checkTraces) None
-      else Some(tableChecks("traces", r => {
-        val t = if (opts.includeTrace) nonNullBin(r("traceJson")) else lit(true)
-        val s = if (opts.includeStateDiff) nonNullBin(r("stateDiffJson")) else lit(true)
-        t && s
-      }))
-
-    // ---- 4. verdict assembly over the catalog-sized batch list; per-batch
-    // file counts come straight from the driver-side fates (LocalRelation)
-    val perBatchFiles = liveRows.groupBy(t => (t._3, t._4)).toSeq
-      .map { case ((gs, ge), fs) =>
-        (gs, ge, fs.count(_._2 == "blocks").toLong,
-          fs.count(_._2 == "txes").toLong, fs.count(_._2 == "traces").toLong)
-      }
-      .toDF("group_s", "group_e", "f_blocks", "f_txes", "f_traces")
-    var verdicts = perBatchFiles
-      .join(bAgg, batchKey, "left")
-      .join(bBreaks, batchKey, "left")
-      .join(bTop, batchKey, "left")
-    txChecks.foreach(t => verdicts = verdicts.join(t, batchKey, "left"))
-    traceChecks.foreach(t => verdicts = verdicts.join(t, batchKey, "left"))
-
-    val span = col("group_e") - col("group_s") + 1
-    val blocksOk = col("f_blocks") > 0 &&
-      coalesce(col("b_n"), lit(0L)) === span &&
-      coalesce(col("b_nd"), lit(0L)) === span &&
-      coalesce(col("b_range_viol"), lit(0L)) === 0 &&
-      coalesce(col("b_bad_json"), lit(0L)) === 0 &&
-      coalesce(col("b_breaks"), lit(0L)) === 0 &&
-      coalesce(col("b_top_bad"), lit(0L)) === 0
-    def kindOk(kind: String): org.apache.spark.sql.Column =
-      coalesce(col(s"${kind}_bad_null"), lit(0L)) === 0 &&
-        coalesce(col(s"${kind}_unexpected"), lit(0L)) === 0 &&
-        coalesce(col(s"${kind}_missing"), lit(0L)) === 0 &&
-        coalesce(col(s"${kind}_nd"), lit(0L)) === coalesce(col(s"${kind}_n"), lit(0L))
-
-    // localCheckpoint (eager), not cache: the returned batches must stay
-    // readable after this run deletes files AND unpersists intermediates —
-    // a recompute from a mutated archive would be wrong or fail
-    verdicts = verdicts
-      .withColumn("no_block_file", col("f_blocks") === 0)
-      .withColumn("blocks_ok", blocksOk)
-      .withColumn("txes_ok",
-        if (opts.checkTxes) col("f_txes") === 0 || kindOk("txes") else lit(true))
-      .withColumn("traces_ok",
-        if (opts.checkTraces) col("f_traces") === 0 || kindOk("traces") else lit(true))
-      .localCheckpoint()
+    // ---- 4. verdicts per batch, on the driver
+    val noCounts = BatchCounts(None, Map.empty)
+    val orNull = (v: Long) => if (v == 0) null else v // a count of no rows reads null
+    val verdicts = batches.map { case ((gs, ge), fs) =>
+      val files = Schemas.kinds.map(k => fs.count(_._2 == k).toLong) // blocks, txes, traces
+      val c = counts.getOrElse((gs, ge), noCounts)
+      val b = c.blocks.getOrElse(BlockCounts(0, 0, 0, 0, 0, None))
+      val span = ge - gs + 1
+      val blocksOk = files.head > 0 && b.n == span && b.nd == span && b.rangeViol == 0 &&
+        b.badJson == 0 && b.breaks == 0 && b.topBad.forall(_ == 0)
+      val kindOk = (kind: String, nFiles: Long) => !txKinds.contains(kind) || nFiles == 0 ||
+        c.kinds.get(kind).forall(k =>
+          k.badNull == 0 && k.unexpected == 0 && k.missing == 0 && k.nd == k.n)
+      val flags = (files.head == 0, blocksOk, kindOk("txes", files(1)), kindOk("traces", files(2)))
+      val row = Row.fromSeq(Seq(gs, ge) ++ files ++
+        c.blocks.fold(Seq.fill[Any](6)(null))(b => Seq(b.n, b.nd, b.rangeViol, b.badJson,
+          orNull(b.breaks), b.topBad.getOrElse(null))) ++
+        txKinds.flatMap(k => c.kinds.get(k).fold(Seq.fill[Any](5)(null))(t =>
+          Seq(t.badNull, t.n, t.nd, orNull(t.unexpected), orNull(t.missing)))) ++
+        flags.productIterator)
+      ((gs, ge), flags, row)
+    }
+    val schema = StructType(
+      Seq("group_s", "group_e", "f_blocks", "f_txes", "f_traces")
+        .map(StructField(_, LongType, nullable = false)) ++
+      (Seq("b_n", "b_nd", "b_range_viol", "b_bad_json", "b_breaks", "b_top_bad") ++
+        txKinds.flatMap(k => Seq("bad_null", "n", "nd", "unexpected", "missing")
+          .map(c => s"${k}_$c"))).map(StructField(_, LongType)) ++
+      Seq("no_block_file", "blocks_ok", "txes_ok", "traces_ok")
+        .map(StructField(_, BooleanType, nullable = false)))
 
     // deletion verdicts per kind-file-set (verify_content, verify.rs:516-577):
     //   no blocks file          → every OTHER table in the batch goes
     //   blocks corrupt          → blocks files go; txes/traces unverifiable, kept
     //   blocks ok, kind corrupt → that kind's files go
     //   fix.clean               → any of the above widens to the whole batch
-    // The per-batch flags are a cheap scan of the checkpointed verdicts and
-    // the file list is already on the driver, so the doom pass is plain
-    // Scala over catalog-sized data — no extra distributed join or action.
-    val flags = verdicts.select(col("group_s"), col("group_e"),
-        col("no_block_file"), col("blocks_ok"), col("txes_ok"), col("traces_ok"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getBoolean(2), r.getBoolean(3), r.getBoolean(4), r.getBoolean(5))))
-      .toMap
+    val flagsOf = verdicts.map(v => v._1 -> v._2).toMap
     def kindReason(kind: String, f: (Boolean, Boolean, Boolean, Boolean)): Option[String] = {
       val (noBlock, bOk, tOk, trOk) = f
       if (noBlock && kind != "blocks") Some("no-block-file")
@@ -335,21 +334,15 @@ object VerifyFull {
       else None
     }
     val perFile = liveRows.map { case (p, k, gs, ge) =>
-      (p, gs, ge, flags.get((gs, ge)).flatMap(kindReason(k, _)))
+      (p, gs, ge, kindReason(k, flagsOf((gs, ge))))
     }
-    if (!opts.fixClean)
-      deletions ++= perFile.collect { case (p, _, _, Some(r)) => (p, r) }
-    else {
-      val badBatches = perFile.collect { case (_, gs, ge, Some(_)) => (gs, ge) }.toSet
-      deletions ++= perFile.collect {
+    val badBatches = perFile.collect { case (_, gs, ge, Some(_)) => (gs, ge) }.toSet
+    val toDelete = fates.deletions ++ (
+      if (!opts.fixClean) perFile.collect { case (p, _, _, Some(r)) => (p, r) }
+      else perFile.collect {
         case (p, gs, ge, r) if badBatches((gs, ge)) => (p, r.getOrElse("fix-clean"))
-      }
-    }
-
-    val toDelete = deletions.result()
+      })
     if (!opts.dryRun) ArchiveFs.delete(spark, toDelete.map(d => new Path(d._1)))
-    // a long-lived session may run many commands — drop this run's caches
-    (blockRows +: cached.result()).foreach(_.unpersist())
-    Report(verdicts, toDelete)
+    Report(spark.createDataFrame(verdicts.map(_._3).asJava, schema), toDelete)
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,4 +18,26 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(name: String = "sf0.001"): String = s"/root/testdata/$name"
+
+  /** Spark jobs started while `body` runs, by any thread it spawns (a
+    * streaming query thread inherits the calling thread's local properties).
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.probe"
+    val probe = s"jobs-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == probe)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, probe)
+    try body finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.graft.TestBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 }

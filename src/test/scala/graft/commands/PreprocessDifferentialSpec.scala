@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.archive.{Catalog, Filenames}
@@ -102,33 +101,6 @@ class PreprocessDifferentialSpec extends SparkSpec {
       Seq((8L, 9L), (11L, 11L), (21L, 25L)))
     assert(Catalog.gaps(Seq((0L, 100L)), 10L, 20L) === Seq.empty)
     assert(Catalog.gaps(Seq.empty, 5L, 4L) === Seq.empty)
-  }
-
-  /** Spark jobs started while `f` runs. A marker job after `f` flushes the
-    * listener bus: events arrive in order, so once the marker is seen every
-    * job of `f` has been counted.
-    */
-  private def jobsDuring(f: => Unit): Int = {
-    val marker = "graft.jobs-marker"
-    var jobs = 0
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(marker) != null)) markerSeen = true
-        else synchronized { jobs += 1 }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener bus did not drain")
-      listener.synchronized(jobs)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("job pins: the preprocess runs 0 jobs uncontested, 1 with contested heights") {

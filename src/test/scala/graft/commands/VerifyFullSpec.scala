@@ -363,6 +363,69 @@ class VerifyFullSpec extends SparkSpec {
     assert(filesLeft(dir) === Seq("000000101.txes.avro"))
   }
 
+  /** The persisted RDDs and the number of cached plans: what a run that
+    * cleans up after itself leaves as it found.
+    */
+  private def sessionState: (Set[Int], Int) =
+    (spark.sparkContext.getPersistentRDDs.keySet.toSet,
+      org.apache.spark.sql.graft.CacheProbe.cachedPlans(spark))
+
+  test("a run leaves no persisted RDD or cached plan behind, also when it fails") {
+    val dir = Files.createTempDirectory("vf-state").toString
+    val h100 = mkHash(100)
+    writeBlocks(dir, Seq((100L, h100, mkHash(99), Seq("TX001", "TX002"))))
+    writeTxes(dir, Seq((100L, h100, 0L, "TX001")))
+    val before = sessionState
+    val r = VerifyFull.run(spark, dir, BitcoinAdapter, 100L, 110L,
+      canonicalOf(100L -> h100), VerifyFull.Options(dryRun = true))
+    assert(r.deleted.map(_._2) === Seq("txes-corrupt"))
+    assert(sessionState === before)
+    // the chain oracle fails while the content checks read it
+    val broken = spark.range(0, 200).select(col("id").as("height"),
+      raise_error(lit("chain unavailable")).cast("string").as("hash"))
+    intercept[Exception] {
+      VerifyFull.run(spark, dir, BitcoinAdapter, 100L, 110L, broken,
+        VerifyFull.Options(dryRun = true))
+    }
+    assert(sessionState === before)
+    assert(filesLeft(dir).size === 2)
+  }
+
+  test("job pin: the same archive shape at N and 10N heights runs the same jobs, at most 6") {
+    // singles over [0, n) in chunks of 10, two forks contesting height 5,
+    // and one batch whose txes carry a txid its blocks do not list
+    def jobsAt(n: Long): Int = {
+      val dir = Files.createTempDirectory(s"vf-jobs-$n").toString
+      val hs = (0L until n).filter(_ != 5L)
+      val blocks = spark.createDataFrame(spark.sparkContext.parallelize(
+        hs.map(h => blockRow(h, mkHash(h), mkHash(h - 1), Seq(s"TX$h"))), 2), Schemas.block)
+      AvroArchiveSink.writeSingles(blocks, "blocks", dir)
+      val txes = spark.createDataFrame(spark.sparkContext.parallelize(
+        hs.map(h => txRow(h, mkHash(h), 0L, if (h == 13L) "TX?" else s"TX$h")), 2),
+        Schemas.transaction)
+      AvroArchiveSink.writeSingles(txes, "txes", dir)
+      Seq(mkHash(5), mkHash(9005)).foreach { hash =>
+        writeBlocks(dir, Seq((5L, hash, mkHash(4), Seq("TX5"))), forked = true)
+        writeTxes(dir, Seq((5L, hash, 0L, "TX5")), forked = true)
+      }
+      // a chain that is not a local relation, so each lookup is a job
+      val canonical = spark.range(0, n)
+        .select(col("id").as("height"), lpad(lower(hex(col("id"))), 64, "0").as("hash"))
+      var report: VerifyFull.Report = null
+      val jobs = jobsDuring {
+        report = VerifyFull.run(spark, dir, BitcoinAdapter, 0L, n - 1, canonical,
+          VerifyFull.Options(chunkSize = 10L))
+      }
+      val deleted = report.deleted.map(_._2).groupBy(identity).map { case (k, v) => k -> v.size }
+      assert(deleted === Map("forked-out" -> 2, "txes-corrupt" -> 10), s"n = $n")
+      assert(report.batches.count() === n / 10, s"n = $n")
+      jobs
+    }
+    val (small, large) = (jobsAt(20L), jobsAt(200L))
+    assert(small === large)
+    assert(small <= 6)
+  }
+
   test("corrupt top hash marks blocks broken but keeps unverifiable txes") {
     val dir = Files.createTempDirectory("vf-tophash").toString
     val h100 = mkHash(100)

@@ -21,17 +21,6 @@ import org.apache.spark.sql.functions._
 class CentroidCacheSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Runs `body` inside a fresh job group; returns the number of Spark
-    * jobs it submitted (collect() is blocking, so by return time every
-    * submitted job is registered with the status tracker).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = s"centroid-cache-probe-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, "cache probe", false)
-    try body finally spark.sparkContext.clearJobGroup()
-    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-  }
-
   private def writeEmbeddings(dir: String, vecs: Seq[(Long, Array[Float])]): Unit =
     vecs.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")

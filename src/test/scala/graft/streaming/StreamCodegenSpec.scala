@@ -2,10 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -55,28 +53,6 @@ class StreamCodegenSpec extends SparkSpec {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
-
-  /** Spark jobs started while `body` runs, by any thread it spawns (the
-    * query thread inherits the calling thread's local properties).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.test.probe"
-    val probe = s"stream-jobs-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == probe)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, probe)
-    try body finally {
-      sc.setLocalProperty(key, null)
-      org.apache.spark.graft.TestBridge.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   /** Runs `call` once per batch over fresh heads: two warm-up batches, then
