@@ -1,8 +1,9 @@
 package graft.archive
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.{ArchiveFs, AvroArchiveSink, AvroArchiveSource}
 
@@ -10,10 +11,10 @@ import graft.sources.{ArchiveFs, AvroArchiveSink, AvroArchiveSource}
   * chunks that verify complete, then drop the fully-copied sources
   * (reference: src/command/compact.rs:44-244,343-500).
   *
-  * Transactional shape: validate → write new → delete old, relying on
-  * Spark's commit protocol for the write and on explicit validation before
-  * any delete (compact.rs:89-106). This is the Delta-OPTIMIZE analogue
-  * flagged in SURVEY.md §4.
+  * Transactional shape: validate → write new → delete old, no delete
+  * before its write has committed (compact.rs:89-106) — Spark's file
+  * commit for parquet, the driver-committed `avro-archive` V2 write for
+  * Avro. This is the Delta-OPTIMIZE analogue flagged in SURVEY.md §4.
   */
 object Compaction {
 
@@ -103,77 +104,80 @@ object Compaction {
     verdicts
   }
 
-  /** Compact an Avro-format archive IN the reference's own on-disk shape
-    * (the real compact command, src/command/compact.rs:44-244): single
-    * files of a kind whose chunk is complete merge into one
-    * `L1/range-<s>_<e>.<kind>.avro`, then the fully-copied singles are
-    * deleted — write-new-then-delete-old, never overwriting an existing
-    * range file. Forked singles (hash-named, several at one height) are
-    * left alone — verify settles forks first, compact only merges settled
-    * heights. A txes/traces chunk is complete when its settled singles
-    * cover every height of the chunk, however many rows each holds.
-    * Returns per-(kind, chunk) verdicts and deleted files.
+  /** [[validateChunks]]'s rows, in chunk order, over heights held on the
+    * driver: `rowsAt` gives each height once, with its row count.
     */
-  def compactAvro(
-      spark: SparkSession,
-      archiveDir: String,
-      chunkSize: Long = 1000L,
+  def chunkVerdicts(rowsAt: Seq[(Long, Long)], chunkSize: Long): Seq[Row] =
+    rowsAt.groupBy(h => Math.floorDiv(h._1, chunkSize)).toSeq.sortBy(_._1).map { case (c, hs) =>
+      val (n, nd, mn, mx) = (hs.map(_._2).sum, hs.size.toLong, hs.map(_._1).min, hs.map(_._1).max)
+      Row(c, n, nd, mn, mx, n == chunkSize && nd == n && mx - mn + 1 == n && mn == c * chunkSize)
+    }
+
+  private val VerdictSchema = StructType.fromDDL("chunk BIGINT, n BIGINT NOT NULL, " +
+    "n_distinct BIGINT NOT NULL, mn BIGINT, mx BIGINT, complete BOOLEAN, kind STRING NOT NULL")
+
+  /** Compact an Avro-format archive IN the reference's own on-disk shape
+    * (the real compact command, src/command/compact.rs:44-244): singles of
+    * a kind whose chunk is complete merge into one
+    * `L1/range-<s>_<e>.<kind>.avro`, then the fully-copied singles are
+    * deleted, never overwriting a range file. Forked singles (several at
+    * one height) stay: verify settles forks, compact merges settled heights.
+    *
+    * Spark runs one aggregate per call, the settled singles' rows per
+    * (kind, height) and the singles holding them; verdicts, chunks to write
+    * and deletable singles are plain Scala over it, nothing is cached. Per
+    * kind, the write reads only the singles of complete chunks without a
+    * range file, then the kind's deletes run. Returns per-(kind, chunk)
+    * verdicts ([[validateChunks]]'s columns and `kind`) and deleted files.
+    */
+  def compactAvro(spark: SparkSession, archiveDir: String, chunkSize: Long = 1000L,
       dryRun: Boolean = false): (DataFrame, Seq[String]) = {
     import spark.implicits._
     // chunkSize 1 would name a "range" with its source single's own path
     require(chunkSize > 1, "compactAvro needs chunkSize > 1")
-    // the selection is catalog-sized and the listing is on the driver:
-    // plain Scala over its entries
     val entries = Catalog.entries(AvroArchiveSource.listAvroFiles(spark, archiveDir))
+    val chunkOf = (h: Long) => Math.floorDiv(h, chunkSize)
     // settled singles only: exactly one file at the height for the kind
-    val settled = entries.filter(_.isSingle).groupBy(e => (e.kind, e.start)).values
-      .collect { case Seq(only) => only }.toSeq.sortBy(_.path)
+    val singlesOf = entries.filter(_.isSingle).groupBy(e => (e.kind, e.start)).values
+      .collect { case Seq(only) => only }.toSeq.sortBy(_.path).groupBy(_.kind)
+    val kinds = singlesOf.keys.toSeq.sorted
     // chunks already touched by any range file are skipped
     // (create-if-absent; an unaligned range may span several chunks)
-    val existingRange: Map[String, Seq[Long]] = entries.filterNot(_.isSingle)
-      .groupBy(_.kind).map { case (kind, rs) =>
-        kind -> rs.flatMap(r =>
-          Math.floorDiv(r.start, chunkSize) to Math.floorDiv(r.end, chunkSize)).distinct
-      }
-    val verdictsByKind = Seq.newBuilder[DataFrame]
-    val deleted = Seq.newBuilder[String]
-    val kinds = settled.map(_.kind).distinct.sorted
-    kinds.foreach { kind =>
-      val files = settled.filter(_.kind == kind).map(_.path)
-      val rows = AvroArchiveSource.readArchiveFilesWithPath(spark, files, kind)
-        .withColumn("chunk", floor(col("height") / chunkSize).cast("long"))
-        .cache()
-      // a blocks chunk is judged by its rows (one block per height); txes
-      // and traces carry any number of rows per height, so their chunks
-      // are judged by the distinct heights they cover. localCheckpoint
-      // (eager): the verdicts must outlive the source files this run is
-      // about to delete — a lazy plan would re-scan them
-      val covered = if (kind == "blocks") rows else rows.select("height").distinct()
-      val verdicts = validateChunks(covered, "height", chunkSize)
-        .withColumn("kind", lit(kind))
-        .localCheckpoint()
-      val toWrite = verdicts.filter(col("complete")).select("chunk")
-        .filter(!col("chunk").isin(existingRange.getOrElse(kind, Seq.empty): _*))
-      if (!dryRun) {
-        val chunkRows = rows
-          .join(broadcast(toWrite), Seq("chunk"), "left_semi")
-          .drop("_path")
-        AvroArchiveSink.writeChunked(chunkRows, kind, archiveDir, "chunk")
-        // a single is deletable iff every one of its rows landed in a
-        // complete chunk that now has a range file (newly written or
-        // pre-existing)
-        val coveredChunks = verdicts.filter(col("complete")).select("chunk")
-        val deletable = rows
-          .join(broadcast(coveredChunks).withColumn("c", lit(1)), Seq("chunk"), "left")
-          .groupBy("_path")
-          .agg(count(lit(1)).as("n"), count("c").as("n_cov"))
-          .filter(col("n") === col("n_cov"))
-          .select("_path").as[String].collect().toSeq
+    val rangedOf = entries.filterNot(_.isSingle).groupBy(_.kind)
+      .map { case (k, rs) => k -> rs.flatMap(r => chunkOf(r.start) to chunkOf(r.end)).toSet }
+      .withDefaultValue(Set.empty[Long])
+    val perHeight = if (kinds.isEmpty) Seq.empty[Row] else kinds.map(kind => AvroArchiveSource
+        .readArchiveFilesWithPath(spark, singlesOf(kind).map(_.path), kind)
+        .select(lit(kind).as("kind"), col("height"), col("_path"))).reduce(_ union _)
+      .groupBy("kind", "height").agg(count(lit(1)), collect_set("_path")).collect().toSeq
+    val perKind = kinds.map { kind =>
+      val heights = perHeight.collect {
+        case r if r.getString(0) == kind => (r.getLong(1), r.getLong(2), r.getSeq[String](3)) }
+      // blocks chunks are judged by their rows (one block per height), txes
+      // and traces chunks by the distinct heights they cover
+      val byChunk = chunkVerdicts(
+        heights.map(h => h._1 -> (if (kind == "blocks") h._2 else 1L)), chunkSize)
+      val complete = byChunk.collect { case v if v.getBoolean(5) => v.getLong(0) }.toSet
+      val toWrite = complete -- rangedOf(kind)
+      val files = heights.filter(h => toWrite(chunkOf(h._1))).flatMap(_._3).toSet
+      val gone = if (dryRun) Nil else {
+        // a single whose rows disagree with its name may hold heights of other
+        // chunks: only then does a broadcast semi-join (one job) cut the read
+        val rows = AvroArchiveSource.readArchiveFiles(spark, files.toSeq.sorted, kind)
+          .withColumn("chunk", floor(col("height") / chunkSize).cast("long"))
+        if (files.nonEmpty) AvroArchiveSink.writeChunked(
+          if (!heights.exists(h => !toWrite(chunkOf(h._1)) && h._3.exists(files))) rows
+          else rows.join(broadcast(toWrite.toSeq.toDF("chunk")), Seq("chunk"), "left_semi"),
+          kind, archiveDir, "chunk")
+        // a single is deletable iff every height it holds (by its rows, not
+        // its name) lies in a complete chunk, which now has a range file
+        val heightsIn = heights.flatMap(h => h._3.map(_ -> h._1)).groupBy(_._1)
+        val deletable = singlesOf(kind).map(_.path)
+          .filter(p => heightsIn.get(p).exists(_.forall(ph => complete(chunkOf(ph._2)))))
         // singles beside a pre-existing range are crash residue, and that
         // range may be a crashed write's empty claim: such a single goes
         // only if a lenient read of the ranges returns its height
-        val residue = settled.filter(e => e.kind == kind &&
-          existingRange.getOrElse(kind, Nil).contains(Math.floorDiv(e.start, chunkSize)))
+        val residue = singlesOf(kind).filter(e => rangedOf(kind)(chunkOf(e.start)))
         val held = if (residue.isEmpty) Set.empty[Long]
           else AvroArchiveSource.readArchiveFilesWithPath(spark, entries.collect {
             case r if !r.isSingle && r.kind == kind &&
@@ -181,17 +185,12 @@ object Compaction {
           }, kind, lenient = true).select("height").as[Long].collect().toSet
         val gone = deletable.filterNot(residue.filterNot(e => held(e.start)).map(_.path).toSet)
         ArchiveFs.delete(spark, gone.map(new Path(_)))
-        deleted ++= gone
+        gone
       }
-      rows.unpersist()
-      verdictsByKind += verdicts
+      (byChunk.map(v => Row.fromSeq(v.toSeq :+ kind)), gone)
     }
-    val verdicts = verdictsByKind.result() match {
-      case Seq()   => validateChunks(spark.range(0).toDF("height"), "height", chunkSize)
-        .withColumn("kind", lit(""))
-      case seq     => seq.reduce(_ union _)
-    }
-    (verdicts, deleted.result())
+    (spark.createDataFrame(java.util.Arrays.asList(perKind.flatMap(_._1): _*), VerdictSchema),
+      perKind.flatMap(_._2))
   }
 
   /** Full compact-then-clean: merge complete chunks of `srcDir` into

@@ -15,9 +15,15 @@ class CompactionSpec extends SparkSpec {
     // chunk 0 complete; chunk 1 has a gap; chunk 2 has a duplicate height.
     val heights = (0L to 9L) ++ ((10L to 19L).filter(_ != 13L)) ++ ((20L to 29L) :+ 25L)
     val v = Compaction.validateChunks(heights.toDF("height"), "height", 10L)
-      .orderBy("chunk").collect()
-    assert(v.map(_.getAs[Long]("chunk")).toSeq === Seq(0L, 1L, 2L))
-    assert(v.map(_.getAs[Boolean]("complete")).toSeq === Seq(true, false, false))
+      .orderBy("chunk").collect().toSeq
+    // the same table through the driver-side statement of the rule
+    val driver = Compaction.chunkVerdicts(
+      heights.groupBy(identity).map { case (h, hs) => h -> hs.size.toLong }.toSeq, 10L)
+    Seq(v, driver).foreach { rows =>
+      assert(rows.map(_.getLong(0)) === Seq(0L, 1L, 2L))
+      assert(rows.map(_.getBoolean(5)) === Seq(true, false, false))
+    }
+    assert(driver === v) // n, n_distinct, mn and mx too
   }
 
   test("compactAndClean deletes only fully-copied source files") {
@@ -190,5 +196,29 @@ class CompactionSpec extends SparkSpec {
     val heights = AvroArchiveSource.readArchiveFiles(spark, nonEmpty, "blocks")
       .select("height").as[Long].collect().sorted.toSeq
     assert(heights.distinct === (0L to 19L))
+  }
+
+  test("compactAvro leaves no persisted RDD or cached plan behind, also when it fails") {
+    import graft.model.Schemas
+    import graft.sources.{ArchiveFs, AvroArchiveSink}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graft.CacheProbe
+    def state = (spark.sparkContext.getPersistentRDDs.keySet.toSet, CacheProbe.cachedPlans(spark))
+    val dir = Files.createTempDirectory("graft-compact-state").toString
+    val rows = (0L to 19L).map(h => Row("BITCOIN", "BTC", new java.sql.Timestamp(0L), h,
+      s"hash-$h", s"hash-${h - 1}", new java.sql.Timestamp(h), s"{}".getBytes("UTF-8"),
+      0, null, null))
+    AvroArchiveSink.writeSingles(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), Schemas.block), "blocks", dir)
+    val before = state
+    // the first range publish fails, like a kill
+    val crash = new ArchiveFs.Crash(ArchiveFs.Step.Publish, _.getName.startsWith("range-"))
+    ArchiveFs.crashWith(Some(crash))
+    try intercept[Exception](Compaction.compactAvro(spark, dir, chunkSize = 10L))
+    finally ArchiveFs.crashWith(None)
+    assert(crash.fired)
+    assert(state === before)
+    Compaction.compactAvro(spark, dir, chunkSize = 10L)
+    assert(state === before)
   }
 }

@@ -1,19 +1,15 @@
 package graft.commands
 
 import java.io.File
-import java.nio.ByteBuffer
 import java.nio.file.Files
 
 import scala.util.Random
 
-import org.apache.avro.file.DataFileWriter
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.archive.{Catalog, Filenames}
-import graft.model.{BitcoinAdapter, Schemas}
-import graft.sources.{AvroArchiveSink, AvroArchiveSource}
+import graft.model.BitcoinAdapter
+import graft.sources.{AvroArchiveSource, Containers}
 
 /** Verify's content checks and deletion verdicts ([[VerifyFull.run]]: one
   * cogroup, [[VerifyFull.checkBatch]] per batch) against the Catalyst plan
@@ -28,37 +24,6 @@ class ContentChecksDifferentialSpec extends SparkSpec {
 
   private def hash(h: Long, fork: Int): String = f"$h%032x$fork%032x"
   private def txid(h: Long, i: Int): String = s"TX$h-$i"
-
-  /** One Avro container at `rel` under `dir` holding `records` (field →
-    * value; every other field gets a filler of its type, or null).
-    */
-  private def container(dir: String, rel: String, kind: String,
-      records: Seq[Map[String, Any]]): Unit = {
-    val st = Schemas.schemaFor(kind)
-    val schema = AvroArchiveSink.avroSchema(st, kind)
-    val target = new File(dir, rel)
-    target.getParentFile.mkdirs()
-    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-    w.create(schema, target)
-    records.foreach { values =>
-      val rec = new GenericData.Record(schema)
-      st.fields.foreach { f =>
-        val v = values.getOrElse(f.name, f.dataType match {
-          case _ if f.nullable          => null
-          case StringType               => "BITCOIN"
-          case LongType | TimestampType => 0L
-          case IntegerType              => 0
-          case BinaryType               => "{}".getBytes("UTF-8")
-        })
-        rec.put(f.name, v match {
-          case b: Array[Byte] => ByteBuffer.wrap(b)
-          case other          => other
-        })
-      }
-      w.append(rec)
-    }
-    w.close()
-  }
 
   private def bytes(s: String): Array[Byte] = s.getBytes("UTF-8")
 
@@ -88,12 +53,12 @@ class ContentChecksDifferentialSpec extends SparkSpec {
         else Filenames.relativeRangePath(s, e, kind)
       val txsOf = (s to e).map(h => h -> (0 until rnd.nextInt(4)).map(txid(h, _))).toMap
       def emit(kind: String, records: Seq[Map[String, Any]]): Unit = rnd.nextInt(14) match {
-        case 0 => container(dir, rel(kind), kind, Seq.empty) // no records
+        case 0 => Containers.write(dir, rel(kind), kind, Seq.empty) // no records
         case 1 => // not an Avro container at all
           val f = new File(dir, rel(kind))
           f.getParentFile.mkdirs()
           Files.write(f.toPath, bytes("garbage"))
-        case _ => container(dir, rel(kind), kind, records)
+        case _ => Containers.write(dir, rel(kind), kind, records)
       }
 
       // blocks
