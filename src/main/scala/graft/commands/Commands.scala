@@ -183,6 +183,17 @@ object Commands {
     * batches are idempotent by construction. Raw head rows (height,
     * blockId, parentId, payload) become block records with the payload as
     * the JSON body.
+    *
+    * A batch is two writes, like the reference's block then txes ∥ traces
+    * (archiver.rs:137-154): the batch's block records go from one partition
+    * through [[AvroArchiveSink.writeColocatedSingles]] (a micro-batch of
+    * heads is small), which yields the (height, blockId) of every block
+    * single the batch formed, landed or already there. Each companion kind
+    * is its raw frame filtered to those keys, in one partition, written the
+    * same way. No exchange, no broadcast: 2 jobs and 2 tasks per batch. The
+    * key set is a value the filter's generated code only references, so
+    * consecutive batches generate the same code; the companion scan reads
+    * the whole raw frame in one task.
     */
   def streamAvro(
       spark: SparkSession,
@@ -206,24 +217,20 @@ object Commands {
         lit(0).as("unclesCount"),
         lit(null).cast("binary").as("uncle0Json"),
         lit(null).cast("binary").as("uncle1Json"))
-      AvroArchiveSink.writeSingles(
-        records, "blocks", archiveDir, forkHashCol = Some("blockId"))
-      // per-kind companion files, like the reference's per-height tx ∥
-      // trace archival after the block lands (archiver.rs:137-154 runs
-      // both under one tokio::join!): records for the batch's
-      // (height, blockId) pairs land as fork-named singles of their kind.
-      // The semi-join keys on BOTH columns so only the announced fork's
-      // companions are archived with it.
-      val batchKeys = batch.select(col("height"), col("blockId"))
-      Seq("txes" -> rawTxes, "traces" -> rawTraces).foreach { case (kind, src) =>
-        src.foreach { raw =>
-          val companions =
-            raw.join(broadcast(batchKeys), Seq("height", "blockId"), "left_semi")
-          AvroArchiveSink.writeSingles(
-            companions, kind, archiveDir, forkHashCol = Some("blockId"))
+      val (_, formed) = AvroArchiveSink.writeColocatedSingles(
+        records.coalesce(1), "blocks", archiveDir, forkHashCol = Some("blockId"))
+      // the companions of the batch's (height, blockId) pairs, skipped
+      // blocks included (a replayed batch still archives them), keyed on
+      // BOTH columns so only the announced fork's companions land with it
+      val keys = formed.collect { case (h, Some(id)) => (h, id) }.toSet
+      val inBatch = udf((h: Long, id: String) => keys((h, id)))
+      if (keys.nonEmpty) Seq("txes" -> rawTxes, "traces" -> rawTraces).foreach {
+        case (kind, src) => src.foreach { raw =>
+          AvroArchiveSink.writeColocatedSingles(
+            raw.filter(inBatch(col("height"), col("blockId"))).coalesce(1), kind, archiveDir,
+            forkHashCol = Some("blockId"))
         }
       }
-      ()
     }
   }
 
@@ -315,8 +322,12 @@ object Commands {
     * re-archived as singles. `rawByKind` maps kind → records already in
     * that kind's archive schema (same contract as streamAvro's builder).
     * Returns (kind, height) rows that were missing. Coverage is decided on
-    * the driver over the listing; only the gap intervals are exploded, and
-    * kinds without gaps write nothing.
+    * the driver over the listing (`Catalog.gaps`); kinds without gaps write
+    * nothing. Each refetch filters its raw frame by the kind's gap
+    * intervals, held as a value the generated code references (no literal
+    * list, no broadcast relation and so no broadcast job), and writes through
+    * [[AvroArchiveSink.writeSingles]]: 2 jobs per refetched kind. Only the
+    * returned frame explodes the gap intervals.
     *
     * `forkHashCol`: when healing companion kinds into a fork-aware archive
     * (singles streamed as `<h>.<hash>.<kind>.avro`), pass the raw source's
@@ -344,10 +355,16 @@ object Commands {
     val missing = gaps.toDF("source", "kind", "s", "e")
       .select(col("source"), col("kind"), explode(sequence(col("s"), col("e"))).as("height"))
     if (!opts.dryRun) gaps.map(_._1).distinct.foreach { kind0 =>
-      val refetch = rawByKind(kind0).join(
-        missing.filter(col("source") === kind0).select("height"), Seq("height"), "left_semi")
-      AvroArchiveSink.writeSingles(refetch, Filenames.normalizeKind(kind0), archiveDir,
-        forkHashCol = forkHashCol)
+      // the kind's gaps, ascending and disjoint: a height is missing when
+      // the last gap starting at or below it reaches it
+      val (starts, ends) = gaps.collect { case (`kind0`, _, s, e) => (s, e) }.toArray.unzip
+      val inGap = udf { (h: Long) =>
+        val i = java.util.Arrays.binarySearch(starts, h)
+        val at = if (i >= 0) i else -i - 2
+        at >= 0 && h <= ends(at)
+      }
+      AvroArchiveSink.writeSingles(rawByKind(kind0).filter(inGap(col("height"))),
+        Filenames.normalizeKind(kind0), archiveDir, forkHashCol = forkHashCol)
     }
     missing.select("kind", "height")
   }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.archive.Filenames
-import graft.sources.v2.AvroArchiveTable
+import graft.sources.v2.{AvroArchiveTable, AvroTemp}
 
 /** Writer for the reference's Avro object-container archive format
   * (reference: src/storage/fs.rs:135-219; codecs snappy | zstd(9),
@@ -29,15 +29,16 @@ import graft.sources.v2.AvroArchiveTable
   * The Avro schema is DERIVED from the engine's static StructTypes
   * (graft.model.Schemas) — same field names/types the reference embeds.
   *
-  * There is one write path: [[write]], [[writeSingles]] and
-  * [[writeChunked]] are thin wrappers that plan an `AppendData` into the
-  * `avro-archive` DataSourceV2 table with a [[Layout]], the same write
-  * `df.write.format("avro-archive")` runs with the default one. Each
-  * task's one `DataWriter` streams its rows into hidden temp containers
-  * ([[TempContainer]]), a new one whenever the layout's split key changes,
-  * and discards them all if the task fails. The DRIVER then commits every
-  * closed container serially, in partition order: its height range names
-  * it ([[targetName]] — the filename IS the metadata,
+  * There is one write path: [[write]], [[writeColocatedSingles]] (under
+  * [[writeSingles]]) and [[writeChunked]] are thin wrappers that plan an
+  * `AppendData` into the `avro-archive` DataSourceV2 table with a
+  * [[Layout]], the same write `df.write.format("avro-archive")` runs with
+  * the default one. Each task's one `DataWriter` streams its rows into
+  * hidden temp containers ([[TempContainer]]), a new one whenever the
+  * layout's split key changes, and discards them all if the task fails.
+  * The DRIVER then commits every closed container serially, in partition
+  * order: its height range names it ([[targetName]] — the filename IS the
+  * metadata,
   * src/archiver/filenames.rs:51-83), and [[ArchiveFs.commit]] claims the
   * name and publishes the temp onto it, on any scheme (local, HDFS, object
   * stores — the reference's S3 backend, src/storage/objects.rs:170-330).
@@ -177,23 +178,38 @@ object AvroArchiveSink {
     */
   def write(df: DataFrame, kind: String, outDir: String,
       codec: String = "snappy", forkHashCol: Option[String] = None): Long =
-    append(df, kind, outDir, codec, Layout(df.schema, Nil, forkHashCol, failIfTaken = true))
+    landed(append(df, kind, outDir, codec,
+      Layout(df.schema, Nil, forkHashCol, failIfTaken = true)))
 
   /** Write one single-height snappy container PER HEIGHT (the stream
     * command's file shape: one `L1/L2/<h>[.<hash>].<suffix>.avro` per
     * archived block, reference src/command/stream.rs + archiver.rs:53-113).
     * Existing targets are SKIPPED, not overwritten — the reference
     * stream's `overwrite: false` (stream.rs:49-52), which is what makes
-    * replays idempotent. Rows are co-partitioned by height and split into
-    * files on (height, fork-hash) boundaries inside each partition, so
+    * replays idempotent. Rows are co-partitioned by height
+    * (`repartition(height)`) and written by [[writeColocatedSingles]], so
     * hash-partition collisions can never merge two heights into a range
     * file. Returns the number of records in files that actually landed.
     */
   def writeSingles(df: DataFrame, kind: String, outDir: String,
-      forkHashCol: Option[String] = None): Long = {
+      forkHashCol: Option[String] = None): Long =
+    writeColocatedSingles(df.repartition(col("height")), kind, outDir, forkHashCol)._1
+
+  /** [[writeSingles]] without its exchange: each partition of `df` is
+    * sorted on (height, fork) where it stands and split into one single per
+    * (height, fork), so the write plans no shuffle. Precondition: every
+    * (height, fork) sits in ONE partition of `df` (a one-partition frame,
+    * say). Input that breaks it fails before any claim, since two of the
+    * write's containers would name the same file, and leaves no file and
+    * no temp. Returns the records in singles that landed, and the
+    * (height, fork) of every single the rows formed, landed or skipped.
+    */
+  def writeColocatedSingles(df: DataFrame, kind: String, outDir: String,
+      forkHashCol: Option[String] = None): (Long, Seq[(Long, Option[String])]) = {
     val split = "height" +: forkHashCol.toSeq
-    append(df.repartition(col("height")).sortWithinPartitions(split.map(col): _*),
-      kind, outDir, "snappy", Layout(df.schema, split, forkHashCol, failIfTaken = false))
+    val committed = append(df.sortWithinPartitions(split.map(col): _*), kind, outDir, "snappy",
+      Layout(df.schema, split, forkHashCol, failIfTaken = false))
+    (landed(committed), committed.map { case (t, _) => (t.minH, t.fork) })
   }
 
   /** One zstd container PER CHUNK (the compact command's range files): rows
@@ -205,24 +221,29 @@ object AvroArchiveSink {
     * Returns records written into files that landed.
     */
   def writeChunked(df: DataFrame, kind: String, outDir: String, chunkCol: String): Long =
-    append(df.repartition(col(chunkCol)).sortWithinPartitions(col(chunkCol), col("height")),
+    landed(append(df.repartition(col(chunkCol)).sortWithinPartitions(col(chunkCol), col("height")),
       kind, outDir, "zstd",
       // the chunk key drives file splitting but is NOT part of the record
       Layout(StructType(df.schema.fields.filterNot(_.name == chunkCol)), Seq(chunkCol),
-        None, failIfTaken = false))
+        None, failIfTaken = false)))
 
   /** Plan the `avro-archive` append of `df` under `layout` and run it in the
     * caller's job context, as an RDD action runs: a SQL execution of its own
     * would describe the plan for the listeners on every write (~15% of a
-    * small write's driver CPU). Returns the records in containers that landed.
+    * small write's driver CPU). Returns every container the write formed,
+    * in commit order, with whether it landed.
     */
   private def append(df: DataFrame, kind: String, outDir: String, codec: String,
-      layout: Layout): Long = {
+      layout: Layout): Seq[(AvroTemp, Boolean)] = {
     val table = new AvroArchiveTable(df.schema, kind, outDir, layout = Some(layout))
     new QueryExecution(df.sparkSession.asInstanceOf[classic.SparkSession],
       AppendData.byPosition(DataSourceV2Relation.create(table, None, None),
         df.queryExecution.analyzed, Map("codec" -> codec)),
       mode = CommandExecutionMode.SKIP).executedPlan.executeCollect()
-    table.landed
+    table.committed
   }
+
+  /** Records in the containers that landed. */
+  private def landed(committed: Seq[(AvroTemp, Boolean)]): Long =
+    committed.collect { case (t, true) => t.n }.sum
 }

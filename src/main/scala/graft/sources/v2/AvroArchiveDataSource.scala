@@ -78,13 +78,14 @@ class AvroArchiveDataSource extends TableProvider with DataSourceRegister {
   * `files` is given, exactly those files, whatever their names' kind. A
   * schema field named [[AvroArchiveSource.PathColumn]] is filled with each
   * record's file, as the string it was listed by. A write lays its rows out
-  * by `layout` and leaves the number of records that landed in [[landed]].
+  * by `layout` and leaves every container it formed, with whether it landed,
+  * in [[committed]].
   */
 final class AvroArchiveTable(tableSchema: StructType, kind: String, dir: String,
     files: Option[Seq[String]] = None,
     layout: Option[AvroArchiveSink.Layout] = None)
     extends Table with SupportsRead with SupportsWrite {
-  @volatile private[sources] var landed = 0L
+  @volatile private[sources] var committed = Seq.empty[(AvroTemp, Boolean)]
   override def name(): String = s"avro-archive($kind, ${files.fold(dir)(f => s"${f.size} files")})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -98,7 +99,7 @@ final class AvroArchiveTable(tableSchema: StructType, kind: String, dir: String,
         Option(info.options.get("codec")).getOrElse("snappy"),
         layout.getOrElse(AvroArchiveSink.Layout(info.schema(), Nil, None, failIfTaken = true)),
         new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration),
-        n => landed = n)
+        c => committed = c)
     }
   }
 }
@@ -234,7 +235,11 @@ final class AvroPartitionReaderFactory(conf: SerializableConfiguration,
   * task-commit coordination guarantees one message per partition, so a
   * speculative duplicate attempt can never race a claim. A taken name
   * either fails the JOB (then the abort deletes every temp not yet
-  * published) or drops its container, by the layout's policy.
+  * published) or drops its container, by the layout's policy. A layout
+  * that drops taken names first checks that no two containers of the write
+  * name the same file: such input broke the layout's co-location (one
+  * split key in two partitions), and claiming would silently drop a
+  * container's rows, so the write fails before its first claim.
   */
 final case class AvroTemp(path: String, minH: Long, maxH: Long, n: Long,
     fork: Option[String])
@@ -244,7 +249,7 @@ final case class AvroWriteCommit(partitionId: Int, temps: Seq[AvroTemp])
 
 final class AvroArchiveBatchWrite(schema: StructType, kind: String, dir: String,
     codec: String, layout: AvroArchiveSink.Layout, conf: SerializableConfiguration,
-    report: Long => Unit) extends BatchWrite {
+    report: Seq[(AvroTemp, Boolean)] => Unit) extends BatchWrite {
 
   // a table without a height column or a reference kind lands at flat part
   // names, one per partition — never a split layout's many containers
@@ -260,14 +265,19 @@ final class AvroArchiveBatchWrite(schema: StructType, kind: String, dir: String,
       if (ref.isDefined) schema.fieldIndex("height") else -1, conf)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    report(messages.iterator.collect { case m: AvroWriteCommit => m }
-      .flatMap(m => m.temps.iterator.map(m.partitionId -> _))
-      .map { case (pid, t) =>
-        val target = new Path(dir,
-          AvroArchiveSink.targetName(kind, ref, pid, t.minH, t.maxH, t.fork))
-        if (ArchiveFs.commit(fs, new Path(t.path), target, layout.failIfTaken)) t.n else 0L
-      }.sum)
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val targets = messages.toSeq.collect { case m: AvroWriteCommit => m }
+      .flatMap(m => m.temps.map(t => t -> new Path(dir,
+        AvroArchiveSink.targetName(kind, ref, m.partitionId, t.minH, t.maxH, t.fork))))
+    if (!layout.failIfTaken) targets.groupBy(_._2).find(_._2.size > 1).foreach {
+      case (target, twice) => throw new IllegalStateException(
+        s"${twice.size} containers of one write name $target — each split key " +
+          s"(${layout.splitCols.mkString(", ")}) must sit in one partition")
+    }
+    report(targets.map { case (t, target) =>
+      t -> ArchiveFs.commit(fs, new Path(t.path), target, layout.failIfTaken)
+    })
+  }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case m: AvroWriteCommit => m.temps.foreach { t =>

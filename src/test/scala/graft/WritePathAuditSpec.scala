@@ -42,6 +42,39 @@ class WritePathAuditSpec extends AnyFunSuite {
     assert(commits.findFirstIn(definition(text, "final class AvroArchiveBatchWrite")).isDefined)
   }
 
+  test("only AvroArchiveSink constructs an AvroArchiveTable with a layout") {
+    // a layout is the fifth argument, by name or by position; the sink's one
+    // construction sits in the `append` every wrapper runs, so a second
+    // layout (a second co-located write, say) cannot grow beside it
+    val sink = "scala/graft/sources/AvroArchiveSink.scala"
+    def arguments(text: String, from: Int): Seq[String] = {
+      var (depth, i, last) = (1, from, from)
+      val args = Seq.newBuilder[String]
+      while (depth > 0) {
+        text(i) match {
+          case '(' | '[' => depth += 1
+          case ')' | ']' => depth -= 1
+          case ',' if depth == 1 => args += text.substring(last, i); last = i + 1
+          case _ =>
+        }
+        i += 1
+      }
+      (args += text.substring(last, i - 1)).result()
+    }
+    val constructs = """new\s+(v2\s*\.\s*)?AvroArchiveTable\s*\(""".r
+    val withLayout = MainSources.all().flatMap { case (path, text) =>
+      constructs.findAllMatchIn(text).map(m => arguments(text, m.end))
+        .filter(args => args.size >= 5 || args.exists(_.trim.startsWith("layout")))
+        .map(_ => path)
+    }
+    assert(withLayout === Seq(sink))
+    val text = MainSources.all().collectFirst { case (`sink`, t) => t }.get
+    val append = text.indexOf("private def append(")
+    assert(append >= 0)
+    assert(constructs.findAllMatchIn(text).forall(m =>
+      m.start > append && m.start < text.indexOf("\n  }", append)))
+  }
+
   test("no source under graft/sources runs an RDD pass over a query's rows") {
     // calls, not prose: a scaladoc may name the connector seam's mapPartitions
     val offenders = for {

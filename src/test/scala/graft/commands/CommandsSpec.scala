@@ -268,6 +268,72 @@ class CommandsSpec extends SparkSpec {
     assert(v.head.getAs[Long]("group_s") === 200L && v.head.getAs[Long]("group_e") === 204L)
   }
 
+  /** Heads at `hs` (blockId = the padded height), their schema, and one tx
+    * row per (height, index) of `txs`, split over two partitions in order.
+    */
+  private object StreamFixture {
+    import graft.model.Schemas
+    import java.sql.Timestamp
+    def h64(n: Long) = f"$n%064x"
+    val schema = StructType(Seq(
+      StructField("height", LongType), StructField("blockId", StringType),
+      StructField("parentId", StringType), StructField("payload", StringType)))
+    def heads(hs: Seq[Long]): String = {
+      val dir = Files.createTempDirectory("graft-heads-keys").toString
+      hs.map(h => (h, h64(h), h64(h - 1), s"""{"height":$h}"""))
+        .toDF("height", "blockId", "parentId", "payload")
+        .coalesce(1).write.mode("append").parquet(dir)
+      dir
+    }
+    def txes(txs: Seq[(Long, Long)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(txs.map { case (h, i) =>
+        org.apache.spark.sql.Row("BITCOIN", "BTC", new Timestamp(0L), h, h64(h),
+          new Timestamp(h), i, s"TX$h-$i", """{"ok":true}""".getBytes("UTF-8"),
+          Array[Byte](1), null, null, null)
+      }, 2), Schemas.transaction)
+  }
+
+  test("streamAvro lands a companion whose raw rows sit in two partitions as one single") {
+    import graft.sources.AvroArchiveSource
+    import StreamFixture._
+    val dir = Files.createTempDirectory("graft-stream-split").toString
+    // the two txes of height 301 land in different partitions of the source
+    val raw = txes(Seq((301L, 0L), (300L, 0L), (302L, 0L), (301L, 1L)))
+    assert(raw.rdd.glom().collect().map(_.map(_.getAs[Long]("height")).toSeq).toSeq ===
+      Seq(Seq(301L, 300L), Seq(302L, 301L)))
+    Commands.streamAvro(spark, heads(300L to 302L), schema, dir,
+      Files.createTempDirectory("graft-ckpt-split").toString, rawTxes = Some(raw))
+    val txFiles = AvroArchiveSource.listAvroFiles(spark, dir).filter(_.endsWith(".txes.avro"))
+    assert(txFiles.size === 3, txFiles)
+    val single = txFiles.filter(_.contains(s"000000301.${h64(301)}.txes.avro"))
+    assert(single.size === 1, txFiles)
+    val rows = AvroArchiveSource.read(spark, single.head, "txes")
+    assert(rows.select("index").as[Long].collect().sorted.toSeq === Seq(0L, 1L))
+  }
+
+  test("a replayed streamAvro batch archives the txes of blocks that already landed") {
+    // the shape of a crash after the block singles landed and before the
+    // txes did: the replay skips every block single, and the txes still land
+    import graft.sources.{AvroArchiveSink, AvroArchiveSource}
+    import StreamFixture._
+    val dir = Files.createTempDirectory("graft-stream-replay").toString
+    val headsDir = heads(400L to 404L)
+    val blocks = spark.read.parquet(headsDir).select(
+      lit("BITCOIN").as("blockchainType"), lit("BITCOIN").as("blockchainId"),
+      to_timestamp(lit(0)).as("archiveTimestamp"), col("height"), col("blockId"),
+      col("parentId"), to_timestamp(col("height")).as("timestamp"),
+      col("payload").cast("binary").as("json"), lit(0).as("unclesCount"),
+      lit(null).cast("binary").as("uncle0Json"), lit(null).cast("binary").as("uncle1Json"))
+    assert(AvroArchiveSink.writeSingles(blocks, "blocks", dir, forkHashCol = Some("blockId")) === 5L)
+    Commands.streamAvro(spark, headsDir, schema, dir,
+      Files.createTempDirectory("graft-ckpt-replay").toString,
+      rawTxes = Some(txes((400L to 404L).map(_ -> 0L))))
+    val names = AvroArchiveSource.listAvroFiles(spark, dir).map(p => p.substring(p.lastIndexOf('/') + 1))
+    assert(names.sorted === (400L to 404L).flatMap(h =>
+      Seq(f"$h%09d.${h64(h)}.block.avro", f"$h%09d.${h64(h)}.txes.avro")).sorted)
+    assert(AvroArchiveSource.readArchive(spark, dir, "txes").count() === 5L)
+  }
+
   test("archiveAvro backfills chunk-aligned range files with notifications") {
     import graft.sources.AvroArchiveSource
     import graft.model.Schemas

@@ -158,4 +158,24 @@ class AvroArchiveSinkSpec extends SparkSpec {
       assert(AvroArchiveSource.listAvroFiles(spark, out).isEmpty, name)
     }
   }
+
+  test("a co-located singles write whose (height, fork) spans two partitions claims nothing") {
+    // height 7's two rows sit in two partitions: both would form the same
+    // single, and dropping the second as taken would lose its row, so the
+    // commit fails before its first claim and the abort discards every temp
+    val rows = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(blockRow(6L), blockRow(7L), blockRow(7L), blockRow(8L)), 2), Schemas.block)
+    val out = Files.createTempDirectory("graft-avro-colocated").toString
+    val e = intercept[IllegalStateException] {
+      AvroArchiveSink.writeColocatedSingles(rows, "blocks", out, forkHashCol = Some("blockId"))
+    }
+    assert(e.getMessage.contains("000000007.hash-7.block.avro"), e.getMessage)
+    assert(AvroArchiveSource.listAvroFiles(spark, out).isEmpty)
+    assert(temps(out).isEmpty)
+    // co-located, the same rows land as one single per height
+    val (landed, formed) = AvroArchiveSink.writeColocatedSingles(
+      rows.coalesce(1), "blocks", out, forkHashCol = Some("blockId"))
+    assert(landed === 4L)
+    assert(formed === Seq(6L, 7L, 8L).map(h => (h, Some(s"hash-$h"))))
+  }
 }

@@ -73,13 +73,13 @@ class StreamCodegenSpec extends SparkSpec {
     }
   }
 
-  test("a steady-state streamAvro batch compiles no generated code and runs 5 jobs") {
+  test("a steady-state streamAvro batch compiles no generated code and runs 2 jobs") {
     val txes = rawTxes(5)
     val measured = steadyState("codegen-avro") { (heads, archive, ckpt) =>
       Commands.streamAvro(spark, heads, headSchema, archive, ckpt, rawTxes = Some(txes))
     }
     assert(measured.map(_._1) === Seq(0L, 0L, 0L), "codegen compiles per batch")
-    assert(measured.map(_._2) === Seq(5, 5, 5), "Spark jobs per batch")
+    assert(measured.map(_._2) === Seq(2, 2, 2), "Spark jobs per batch")
   }
 
   test("a steady-state stream batch compiles no generated code") {
