@@ -61,7 +61,7 @@ class WritePathAuditSpec extends AnyFunSuite {
       }
       (args += text.substring(last, i - 1)).result()
     }
-    val constructs = """new\s+(v2\s*\.\s*)?AvroArchiveTable\s*\(""".r
+    val constructs = """new\s+(\w+\s*\.\s*)*AvroArchiveTable\s*\(""".r
     val withLayout = MainSources.all().flatMap { case (path, text) =>
       constructs.findAllMatchIn(text).map(m => arguments(text, m.end))
         .filter(args => args.size >= 5 || args.exists(_.trim.startsWith("layout")))
